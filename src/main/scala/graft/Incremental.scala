@@ -241,19 +241,16 @@ object Incremental {
         sum(when(!col("_wl"), 1L).otherwise(0L)).as("n_survivors"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val survivors = deduped.filter(!col("_wl")).drop("_wl")
-    val enriched0 = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
-    val withFirst = FirstSeen(enriched0, conf, state.seenValues,
-      aux = Some(survivors))
-    val stateful = Frequency(withFirst, conf,
-      state.freqCounts, state.firedBuckets, aux = Some(survivors))
     val severities = conf.severityBands.map(_._2)
-    val sinkAggs = severities.map(s =>
-      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L))
-        .as(s"sink_$s"))
-    val enriched = Scoring(stateful, conf)
-      .observe(obsOut, count(lit(1)).as("n_enriched"), sinkAggs: _*)
+    // max ts_sec rides the same observation: the time boundary of this batch
+    val enriched = Pipeline.scoreSurvivors(survivors, tables, conf, state)
+      .observe(obsOut, count(lit(1)).as("n_enriched"),
+        max(col("ts_sec")).as("max_sec") +: Pipeline.sinkCountCols(conf, "sink_"): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // lineage: exact input files this run consumed, written distributed
+    // (never an O(files) driver collect — at 100 TB that's millions of
+    // entries). The manifest records the count + a bounded sample.
+    val files = enriched.select(col("_file").as("file")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -273,39 +270,19 @@ object Incremental {
           s"missing ${expectedKeys.filterNot(m.contains).mkString(",")}")
       val metrics0 = expectedKeys.map(k =>
         k -> m.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
-
-      // --- r6: the alert sink, the four state snapshots and the lineage
-      // table are INDEPENDENT jobs over the two materialized caches + prior
-      // state — they run concurrently from a thread pool (guide §2.6) and
-      // are all awaited BEFORE the manifest, so the manifest still only
-      // lands after every write committed (crash safety unchanged; a failed
-      // write propagates through Await). This directly attacks the
-      // durability overhead of the streaming path (each micro-batch pays
-      // these writes).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+      // ascending non-overlapping batches ⇒ every future row has
+      // ts_sec ≥ maxSec, which is what makes the snapshot pruning safe
+      val maxSec: Option[Long] = m.get("max_sec").collect { case v: Long => v }
 
       // sinks: alert documents partitioned by (run_id, severity); dynamic
       // partition overwrite ⇒ a replayed run replaces its own partitions
-      // (idempotent) without touching other runs', and salting keeps a hot
-      // severity band from serializing into one write task
-      writes += Future(Pipeline.saltedBySeverity(
-        Pipeline.alertDocs(enriched.filter(col("routed")).drop("_file")),
-        conf.saltBuckets)
+      // (idempotent) without touching other runs'
+      def writeAlerts(): Unit = Pipeline.alertSink(enriched.drop("_file"), conf)
         .withColumn("run_id", lit(runId))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id", "severity")
-        .parquet(s"$outDir/alerts_all"))
-
-      // --- time boundary of this batch (cheap: enriched is already cached by
-      // the metrics action). Ascending non-overlapping batches ⇒ every future
-      // row has ts_sec ≥ maxSec, which is what makes pruning safe.
-      val maxSecRow = enriched.agg(max(col("ts_sec"))).first()
-      val maxSec: Option[Long] =
-        if (maxSecRow.isNullAt(0)) None else Some(maxSecRow.getLong(0))
+        .parquet(s"$outDir/alerts_all")
 
       // --- full, pruned state snapshot under run dir (invisible until the
       // manifest lands)
@@ -319,8 +296,6 @@ object Incremental {
         case Some(st) => trackedVals.unionByName(st).distinct()
         case None => trackedVals
       }
-      writes += Future(
-        seenSnap.write.mode(SaveMode.Overwrite).parquet(s"$runDir/seen_values"))
 
       // fp_seen from the POST-DEDUP, PRE-WHITELIST rows (see persist comment)
       val batchFps = deduped.select(col("fp"), col("fp_bucket")).distinct()
@@ -333,8 +308,6 @@ object Incremental {
           col("fp_bucket") >= Math.floorDiv(s, conf.dedupDelaySec))
         case None => fpAll
       }
-      writes += Future(
-        fpSnap.write.mode(SaveMode.Overwrite).parquet(s"$runDir/fp_seen"))
 
       val batchCounts = Frequency.perSecCounts(enriched, conf)
         .select(col("_k").as("key"), col("_s").as("sec"),
@@ -348,8 +321,6 @@ object Incremental {
         case Some(s) => cntAll.filter(col("sec") >= s - conf.freqWindowSec)
         case None => cntAll
       }
-      writes += Future(
-        cntSnap.write.mode(SaveMode.Overwrite).parquet(s"$runDir/freq_counts"))
 
       val batchFired = enriched.filter(col("freq_hit"))
         .select(col(conf.freqKey).as("key"),
@@ -364,24 +335,22 @@ object Incremental {
           col("reset_bucket") >= Math.floorDiv(s, conf.freqResetSec))
         case None => firedAll
       }
-      writes += Future(
-        firedSnap.write.mode(SaveMode.Overwrite).parquet(s"$runDir/fired"))
 
-      // --- lineage: exact input files this run consumed, written distributed
-      // (never an O(files) driver collect — at 100 TB that's millions of
-      // entries). The manifest records the count + a bounded sample.
-      val fileDf = enriched.select(col("_file").as("file")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wFiles = Future {
-        fileDf.write.mode(SaveMode.Overwrite).parquet(s"$runDir/input_files")
-        val nFiles = fileDf.count()
-        val fileSample = fileDf.orderBy("file").limit(100).collect()
+      var nFiles = 0L
+      var fileSample = Seq.empty[String]
+      def writeLineage(): Unit = {
+        files.write.mode(SaveMode.Overwrite).parquet(s"$runDir/input_files")
+        nFiles = files.count()
+        fileSample = files.orderBy("file").limit(100).collect()
           .map(_.getString(0)).toSeq
-        fileDf.unpersist()
-        (nFiles, fileSample)
       }
-      writes.foreach(Await.result(_, Duration.Inf))
-      val (nFiles, fileSample) = Await.result(wFiles, Duration.Inf)
+
+      // --- all six writes have committed before the manifest lands
+      def snapshot(df: DataFrame, table: String): () => Unit =
+        () => df.write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table")
+      graft.util.Concurrent.run(spark, Seq(writeAlerts _, writeLineage _,
+        snapshot(seenSnap, "seen_values"), snapshot(fpSnap, "fp_seen"),
+        snapshot(cntSnap, "freq_counts"), snapshot(firedSnap, "fired")))
 
       val metrics = metrics0 + ("n_input_files" -> nFiles)
       val sinkCounts = severities.map(s => s -> metrics(s"sink_$s")).toMap
@@ -389,7 +358,7 @@ object Incremental {
       writeManifest(stateDir, runId, metrics, fileSample)
       RunResult(runId, sinkCounts, metrics, fileSample)
     } finally {
-      enriched.unpersist(); deduped.unpersist()
+      files.unpersist(); enriched.unpersist(); deduped.unpersist()
     }
   }
 

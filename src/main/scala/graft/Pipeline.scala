@@ -55,28 +55,29 @@ object Pipeline {
   def enrichPlanned(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
       state: State = State.empty, persistIntermediates: Boolean = true)
       : (DataFrame, () => Unit) = {
-    val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def p(df: DataFrame): DataFrame =
-      if (!persistIntermediates) df
-      else {
-        val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        handles += c
-        c
-      }
-    val parsed = Parse(turns, conf)
-    val deduped = Dedup(parsed, conf, state.fpSeen)
+    val deduped = Dedup(Parse(turns, conf), conf, state.fpSeen)
     // the ONE persist: survivors feed (a) the main narrow enrich chain once
     // and (b) the slim first-seen/frequency aggregations, which read pruned
     // column batches from the cache
-    val survivors = p(Whitelist(deduped, tables.whitelist))
+    val wl = Whitelist(deduped, tables.whitelist)
+    val survivors =
+      if (persistIntermediates) wl.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else wl
+    (scoreSurvivors(survivors, tables, conf, state),
+      () => if (persistIntermediates) { survivors.unpersist(); () })
+  }
+
+  /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency
+    * read again (aux) — so callers pass a persisted frame. */
+  private[graft] def scoreSurvivors(survivors: DataFrame, tables: RuleTables,
+      conf: PipelineConf, state: State): DataFrame = {
     val enriched = RefCheck(
       SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
       tables.ref, conf)
     val withFirst = FirstSeen(enriched, conf, state.seenValues,
       aux = Some(survivors))
-    val stateful = Frequency(withFirst, conf, state.freqCounts,
-      state.firedBuckets, aux = Some(survivors))
-    (Scoring(stateful, conf), () => handles.foreach(_.unpersist()))
+    Scoring(Frequency(withFirst, conf, state.freqCounts,
+      state.firedBuckets, aux = Some(survivors)), conf)
   }
 
   // latest managed enrich: (identity key, result, cache-release thunk)
@@ -183,6 +184,34 @@ object Pipeline {
   def saltedBySeverity(df: DataFrame, saltBuckets: Int): DataFrame =
     df.repartition(col("severity"), pmod(xxhash64(col("conv_id")), lit(saltBuckets)))
 
+  /** The FIR alert sink frame that every `alerts_all` writer writes. */
+  private[graft] def alertSink(enriched: DataFrame, conf: PipelineConf): DataFrame =
+    saltedBySeverity(alertDocs(enriched.filter(col("routed"))), conf.saltBuckets)
+
+  /** Routed rows per severity sink, as `<prefix><severity>` columns. */
+  private[graft] def sinkCountCols(conf: PipelineConf, prefix: String): Seq[Column] =
+    conf.severityBands.map(_._2).map(s =>
+      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"$prefix$s"))
+
+  /** The C9 layout: `alerts_all` by severity plus the two rollups. */
+  private def writeSinks(src: DataFrame, conf: PipelineConf, outDir: String): Unit = {
+    import graft.sources.Source
+    graft.util.Concurrent.run(src.sparkSession, Seq(
+      () => Source.writeTable(alertSink(src, conf), conf.sinkFormat,
+        s"$outDir/alerts_all", partitionCols = Seq("severity")),
+      () => Source.writeTable(rollupBySignature(src), conf.sinkFormat,
+        s"$outDir/rollup_signature"),
+      () => Source.writeTable(rollupBySink(src), conf.sinkFormat,
+        s"$outDir/rollup_sink")))
+  }
+
+  /** `n_total` + the `n_<severity>` sink counts, and their result map. */
+  private def routeCountCols(conf: PipelineConf): Seq[Column] =
+    count(lit(1)).as("n_total") +: sinkCountCols(conf, "n_")
+  private def routeCounts(conf: PipelineConf, m: String => Any): Map[String, Long] =
+    conf.severityBands.map { case (_, s) => s -> m(s"n_$s").asInstanceOf[Long] }.toMap +
+      ("total" -> m("n_total").asInstanceOf[Long])
+
   /** Write-once C9 fan-out for very large batches (SURVEY §2.9 R2 at
     * 100 TB): [[route]]'s MEMORY_AND_DISK persist of the full-width enriched
     * set is right for in-memory-sized batches but becomes a 100-TB spill at
@@ -203,28 +232,12 @@ object Pipeline {
     // would otherwise infer drifted types and drop all-null columns
     val written = Source.readTable(spark, conf.sinkFormat, s"$outDir/enriched",
       schema = Some(enriched.schema))
-    // r6: the three derivations are independent column-pruned scans of the
-    // written table — run them concurrently (guide §2.6), same as route
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val derivations = Seq[() => Unit](
-      () => Source.writeTable(
-        saltedBySeverity(alertDocs(written.filter(col("routed"))), conf.saltBuckets),
-        conf.sinkFormat, s"$outDir/alerts_all", partitionCols = Seq("severity")),
-      () => Source.writeTable(rollupBySignature(written), conf.sinkFormat,
-        s"$outDir/rollup_signature"),
-      () => Source.writeTable(rollupBySink(written), conf.sinkFormat,
-        s"$outDir/rollup_sink"))
-    derivations.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
+    writeSinks(written, conf, outDir)
     // per-sink counts from ONE pruned aggregation over the written table
     // (severity + routed columns only — not an observe over a full pass)
-    val severities = conf.severityBands.map(_._2)
-    val aggs = count(lit(1)).as("n_total") +: severities.map(s =>
-      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"n_$s"))
+    val aggs = routeCountCols(conf)
     val m = written.agg(aggs.head, aggs.tail: _*).first()
-    severities.zipWithIndex.map { case (s, i) => s -> m.getLong(i + 1) }.toMap +
-      ("total" -> m.getLong(0))
+    routeCounts(conf, m.getAs[Any](_: String))
   }
 
   /** C9 fan-out: ONE pass over the enriched rows (persist), then K filtered
@@ -237,33 +250,13 @@ object Pipeline {
     val cached = enriched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val obs = Observation("sinks")
-      val severities = conf.severityBands.map(_._2)
-      val aggs = count(lit(1)).as("n_total") +: severities.map(s =>
-        sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"n_$s"))
+      val aggs = routeCountCols(conf)
       // materialize the cache + deliver the observation with a PLAIN action
       // first: a partitioned write whose routed subset is empty drops
       // observed metrics entirely (Spark 4.1) and obs.get would hang
       cached.observe(obs, aggs.head, aggs.tail: _*).count()
-      // r6: the three sink writes are INDEPENDENT jobs over the already
-      // materialized cache — submit them from a small thread pool (guide
-      // §2.6) so each write's straggler tail and commit phase overlaps the
-      // others' tasks instead of serializing three full job walls. FIFO
-      // scheduling back-fills freed cores; failures propagate via Await.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq[() => Unit](
-        () => graft.sources.Source.writeTable(
-          saltedBySeverity(alertDocs(cached.filter(col("routed"))), conf.saltBuckets),
-          conf.sinkFormat, s"$outDir/alerts_all", partitionCols = Seq("severity")),
-        () => graft.sources.Source.writeTable(rollupBySignature(cached),
-          conf.sinkFormat, s"$outDir/rollup_signature"),
-        () => graft.sources.Source.writeTable(rollupBySink(cached),
-          conf.sinkFormat, s"$outDir/rollup_sink"))
-      writes.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
-      val m = obs.get
-      severities.map(s => s -> m(s"n_$s").asInstanceOf[Long]).toMap +
-        ("total" -> m("n_total").asInstanceOf[Long])
+      writeSinks(cached, conf, outDir)
+      routeCounts(conf, obs.get)
     } finally cached.unpersist()
   }
 }

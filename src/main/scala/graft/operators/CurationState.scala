@@ -106,15 +106,6 @@ object CurationState {
       // incl. the empty-snapshot edge)
       import org.apache.spark.sql.Observation
       val chObs = Observation()
-      // r6: the three snapshot writes are independent — submitted
-      // concurrently (futures collected below, before the metrics/manifest;
-      // a failed write propagates through Await, so the manifest still only
-      // lands after ALL snapshots committed — crash safety unchanged)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val wCh = Future(chSnap.observe(chObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$runDir/content_hashes"))
 
       // --- seg_freq snapshot: counts over ALL batch rows (single-pass
       // dd_line_dedup counts the full doc set, so the incremental fold must
@@ -130,8 +121,6 @@ object CurationState {
       }).select(col("h"),
         least(col("n"), lit(BoilerThreshold.toLong)).cast("long").as("n"))
       val sfObs = Observation()
-      val wSf = Future(sfSnap.observe(sfObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$runDir/seg_freq"))
 
       // --- eval_grams snapshot: distinct union of the batch's eval grams.
       // Eval source precedence: explicit evalDocs param > the conf-driven
@@ -151,9 +140,14 @@ object CurationState {
         case None => batchGrams
       }
       val egObs = Observation()
-      val wEg = Future(egSnap.observe(egObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$runDir/eval_grams"))
-      Seq(wCh, wSf, wEg).foreach(Await.result(_, Duration.Inf))
+      // all three snapshots have committed before the manifest lands
+      def snapshot(df: DataFrame, obs: Observation, table: String): () => Unit =
+        () => df.observe(obs, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table")
+      graft.util.Concurrent.run(spark, Seq(
+        snapshot(chSnap, chObs, "content_hashes"),
+        snapshot(sfSnap, sfObs, "seg_freq"),
+        snapshot(egSnap, egObs, "eval_grams")))
 
       // --- metrics (same values as before — observed counts of the rows
       // each snapshot write committed), then manifest LAST

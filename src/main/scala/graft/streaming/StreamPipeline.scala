@@ -6,42 +6,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.RuleTables
 import graft.model._
-import graft.operators._
 
-/** Structured Streaming variant of the pipeline (SURVEY §2.8). The reference
-  * is an always-on Logstash daemon; our primary mode is batch-incremental
-  * (graft.Incremental) and this is the thin streaming twin:
-  *
-  *  - parse / whitelist / IOC / sig / ref scoring: identical stage objects —
-  *    all stateless or stream-static broadcast joins, so the SAME code runs
-  *    on a streaming DataFrame;
-  *  - C1 dedup  → `dropDuplicatesWithinWatermark(fp)`;
-  *  - C6 first-seen → `flatMapGroupsWithState` keyed by (field, value);
-  *  - C7 frequency → watermarked tumbling-window counts (streaming emits
-  *    per-(key, window) alerts rather than per-row trailing flags — the
-  *    documented semantic difference, SURVEY §2.8);
-  *  - fan-out → `foreachBatch` multi-sink writes.
+/** Structured Streaming surface (SURVEY §2.8). The reference is an
+  * always-on Logstash daemon; our primary mode is batch-incremental
+  * (graft.Incremental), which [[runFull]] and [[curationStream]] run per
+  * micro-batch through one shared loop. The rest are `flatMapGroupsWithState` /
+  * watermark twins of single operators (C6, C7, elapsed, task-agg, sessions).
   */
 object StreamPipeline {
-
-  /** Streaming enrich: note = IOC + sig + ref components (the stateless
-    * score), with watermarked fp-dedup. */
-  def enrichStream(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    val parsed = Parse(turns, conf)
-      .withWatermark("ts", watermarkDelay)
-      .withColumn("fp", Dedup.fpExpr(conf))
-      .dropDuplicatesWithinWatermark("fp")
-    val survivors = Whitelist(parsed, tables.whitelist)
-    val enriched = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
-    val hits = concat(col("hits_ioc"), col("hits_sig"), col("hits_ref"))
-    enriched
-      .withColumn("hits", hits)
-      .withColumn("note", aggregate(col("hits"), lit(0), (a, h) => a + h.getField("score")))
-      .drop("hits_ioc", "hits_sig", "hits_ref")
-  }
 
   final case class FirstSeenEvent(field: String, value: String,
       conv_id: String, turn_idx: Int, ts_us: Long)
@@ -84,8 +56,7 @@ object StreamPipeline {
     * threshold per reset bucket, exactly the batch [[graft.operators
     * .Frequency]] fire set. Rows are processed in event-time order within
     * each micro-batch; exactness across batches needs ascending event-time
-    * batches (the same contract as graft.Incremental). The tumbling
-    * [[freqAlerts]] stays as the watermark-native approximation. */
+    * batches (the same contract as graft.Incremental). */
   def freqTrailingStream(parsed: DataFrame, conf: PipelineConf): Dataset[FreqFire] = {
     val spark = parsed.sparkSession
     import spark.implicits._
@@ -360,25 +331,14 @@ object StreamPipeline {
         })
   }
 
-  /** C7 streaming: tumbling-window per-key counts ≥ threshold. */
-  def freqAlerts(parsed: DataFrame, conf: PipelineConf,
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    parsed
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(col(conf.freqKey).as("key"),
-        window(col("ts"), s"${conf.freqWindowSec} seconds"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") >= conf.freqThreshold)
-      .select(col("key"), col("window.start").as("win_start"), col("n"))
-
   /** THE composed end-to-end streaming pipeline: ONE readStream →
     * foreachBatch, where each micro-batch runs the full C1→C9 chain through
     * [[graft.Incremental.run]] with cross-batch state — so the streaming
     * surface has the batch pipeline's EXACT semantics (fp-dedup, first-seen,
     * trailing-window frequency, scoring, routed fan-out, manifests +
-    * lineage), not the piecewise watermark approximations above. foreachBatch
-    * is Spark's own seam for multi-sink fan-out + complex multi-keyed state;
-    * the alternative (chaining flatMapGroupsWithState per state kind and
+    * lineage), not watermark approximations. foreachBatch is Spark's own
+    * seam for multi-sink fan-out + complex multi-keyed state; the
+    * alternative (chaining flatMapGroupsWithState per state kind and
     * stream-stream-joining the flags back) is an unsupported operator
     * combination for this shape in append mode.
     *
@@ -392,25 +352,10 @@ object StreamPipeline {
     * executed. */
   def runFull(spark: SparkSession, turnsStream: DataFrame, tables: RuleTables,
       conf: PipelineConf, stateDir: String, outDir: String,
-      checkpointDir: String): Seq[String] = {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = turnsStream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val runId = f"$batchId%06d"
-        if (!graft.Incremental.completedRuns(stateDir).contains(runId)) {
-          graft.Incremental.run(spark, batch, tables, conf, stateDir, outDir, runId)
-          ran += runId
-        }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    ran.toSeq
-  }
+      checkpointDir: String): Seq[String] =
+    eachNewBatch(turnsStream, stateDir, checkpointDir) { (batch, runId) =>
+      graft.Incremental.run(spark, batch, tables, conf, stateDir, outDir, runId)
+    }
 
   /** Streaming twin of the resumable CURATION pipeline (the corpus-side
     * analogue of [[runFull]]): ONE readStream → foreachBatch where every
@@ -424,16 +369,24 @@ object StreamPipeline {
     * manifest = commit marker, so crash-replayed batches are skipped. */
   def curationStream(spark: SparkSession, docsStream: DataFrame,
       stateDir: String, checkpointDir: String,
-      evalDocs: Option[DataFrame] = None): Seq[String] = {
+      evalDocs: Option[DataFrame] = None): Seq[String] =
+    eachNewBatch(docsStream, stateDir, checkpointDir) { (batch, runId) =>
+      graft.operators.CurationState.run(spark, batch, stateDir, runId, evalDocs)
+    }
+
+  /** Drain `stream` once (AvailableNow), running each micro-batch under its
+    * batch id unless that run's manifest already landed; returns the ids run. */
+  private def eachNewBatch(stream: DataFrame, stateDir: String,
+      checkpointDir: String)(run: (DataFrame, String) => Unit): Seq[String] = {
     val ran = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = docsStream.writeStream
+    val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val runId = f"$batchId%06d"
         if (!graft.Incremental.completedRuns(stateDir).contains(runId)) {
-          graft.operators.CurationState.run(spark, batch, stateDir, runId, evalDocs)
+          run(batch, runId)
           ran += runId
         }
         ()
@@ -442,32 +395,6 @@ object StreamPipeline {
     q.processAllAvailable()
     q.stop()
     ran.toSeq
-  }
-
-  /** Fan-out sink: one foreachBatch pass writes all per-severity sinks
-    * (streaming can't natively multi-sink one query — SURVEY §2.8). */
-  def routeAvailableNow(spark: SparkSession, enriched: DataFrame,
-      conf: PipelineConf, outDir: String, checkpointDir: String): Unit = {
-    val severities = conf.severityBands.map(_._2)
-    val q = enriched.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sev = Scoring.severityExpr(conf)
-        val cached = batch.withColumn("severity", sev)
-          .withColumn("routed", col("note") >= conf.firThreshold)
-          .persist()
-        try {
-          graft.Pipeline.alertDocs(cached.filter(col("routed")))
-            .write.mode("append").partitionBy("severity")
-            .parquet(s"$outDir/alerts_all")
-          ()
-        } finally { cached.unpersist(); () }
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** P38 streaming twin: gap-based sessionization with the SAME native

@@ -13,6 +13,14 @@ object BenchExtra {
     val names = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val nRuns = if (args.length > 2) args(2).toInt else 2
+    val all = graft.SparkEntry.queries
+    val wanted =
+      if (names == "all") all.keys.toSeq.sorted
+      else names.split(",").map(_.trim).filter(_.nonEmpty).sorted.toSeq
+    val unknown = wanted.filterNot(all.contains)
+    require(wanted.nonEmpty, s"no query selected by '$names'")
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val sel = wanted.map(n => n -> all(n))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,12 +30,8 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val all = graft.SparkEntry.queries
-    val sel =
-      if (names == "all") all.toSeq.sortBy(_._1)
-      else names.split(",").map(_.trim).filter(_.nonEmpty).sorted.toSeq
-        .map(n => n -> all(n))
-    try { sel.head._2(spark, sfDir).count() } catch { case _: Throwable => }
+    try { sel.head._2(spark, sfDir).count() }
+    catch { case scala.util.control.NonFatal(_) => }
     val results = sel.map { case (name, fn) =>
       val times = (1 to nRuns).map { _ =>
         val t0 = System.nanoTime()

@@ -25,3 +25,37 @@ object Fs {
     ()
   }
 }
+
+object Concurrent {
+  /** Run independent Spark writes at once, one fresh thread each, so one
+    * write's straggler tail overlaps the others' tasks. On the first failure
+    * the siblings' jobs are cancelled by their shared job tag (again on each
+    * poll, in case one starts another job) and the error is rethrown once
+    * all have stopped — nothing lands after the caller releases its caches. */
+  def run(spark: org.apache.spark.sql.SparkSession, thunks: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val tag = s"graft-writes-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(thunks.size)
+    try {
+      val done = new ExecutorCompletionService[Unit](pool)
+      thunks.foreach(t => done.submit(() => { sc.addJobTag(tag); t() }))
+      var failure: Throwable = null
+      var pending = thunks.size
+      while (pending > 0) {
+        val f = if (failure == null) done.take() else done.poll(100, TimeUnit.MILLISECONDS)
+        if (f == null) sc.cancelJobsWithTag(tag)
+        else {
+          pending -= 1
+          try f.get() catch {
+            case e: ExecutionException if failure == null =>
+              failure = e.getCause
+              sc.cancelJobsWithTag(tag)
+            case e: ExecutionException => failure.addSuppressed(e.getCause)
+          }
+        }
+      }
+      if (failure != null) throw failure
+    } finally pool.shutdown()
+  }
+}

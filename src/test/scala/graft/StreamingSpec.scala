@@ -11,9 +11,10 @@ import graft.model._
 import graft.operators._
 import graft.streaming.StreamPipeline
 
-/** Streaming twin vs batch: stateless enrich must agree row-for-row; C6 via
-  * flatMapGroupsWithState and C7 via windowed aggs agree with their batch
-  * formulations. Uses Trigger.AvailableNow over fixture parquet. */
+/** Streaming vs batch: the composed stream (runFull) equals the batch
+  * pipeline; C6 first-seen and C7 trailing frequency via
+  * flatMapGroupsWithState agree with their batch formulations. Uses
+  * Trigger.AvailableNow over fixture parquet. */
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
@@ -29,49 +30,11 @@ class StreamingSpec extends SparkSuite {
       .schema(spark.read.parquet(inDir).schema)
       .parquet(inDir)
 
-  private def runToMemory(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
+  private def runToMemory(df: DataFrame, name: String): DataFrame = {
+    val q = df.writeStream.outputMode(OutputMode.Append).format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
     spark.table(name)
-  }
-
-  /** Batch per-row notes WITHOUT dedup: (conv_id, turn_idx) → (fp, note).
-    * dropDuplicatesWithinWatermark keeps an ARBITRARY row per fp (no order
-    * guarantee), so streaming assertions must be row-identity-based, not
-    * tied to which duplicate the batch tie-break would keep. */
-  private lazy val perRowNotes: Map[(String, Int), (String, Int)] = {
-    val parsed = Parse(spark.createDataset(fx.turns).toDF(), fx.conf)
-      .withColumn("fp", sha2(col("text"), 256))
-    val enr = RefCheck(SigRules(IocEnrich(
-      Whitelist(parsed, fx.whitelist), tb.ioc), fx.rules), tb.ref, fx.conf)
-    enr.withColumn("note",
-      aggregate(concat(col("hits_ioc"), col("hits_sig"), col("hits_ref")),
-        lit(0), (a, h) => a + h.getField("score")))
-      .select("conv_id", "turn_idx", "fp", "note")
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> ((r.getString(2), r.getInt(3))))
-      .toMap
-  }
-
-  test("streaming stateless enrich: one row per fp, each row's note == its batch note") {
-    val got = runToMemory(
-      StreamPipeline.enrichStream(streamTurns, tb, fx.conf, "1 hour")
-        .select("fp", "conv_id", "turn_idx", "note"), "enr")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3)))
-      .toSeq
-
-    // exactly one surviving row per fingerprint
-    assert(got.map(_._1).distinct.size === got.size)
-    // the whitelist outcome is text-determined in this fixture, so the fp SET
-    // is invariant to which duplicate the stream kept
-    assert(got.map(_._1).toSet === perRowNotes.values.map(_._1).toSet)
-    // and every kept row carries ITS OWN batch-computed note
-    got.foreach { case (fp, c, t, n) =>
-      val (bfp, bn) = perRowNotes((c, t))
-      assert(bfp === fp && bn === n, s"row ($c,$t): stream note $n vs batch $bn")
-    }
-    assert(got.nonEmpty)
   }
 
   test("streaming first-seen (flatMapGroupsWithState) == batch first occurrences") {
@@ -111,56 +74,6 @@ class StreamingSpec extends SparkSuite {
 
     assert(got === want)
     assert(got.nonEmpty, "fixture must contain bursts")
-  }
-
-  test("streaming tumbling freq alerts == batch tumbling counts") {
-    val parsed = StreamPipelineTestAccess.parsedStream(streamTurns, fx.conf)
-    // Complete mode: Append would hold back windows newer than the final
-    // watermark, which AvailableNow never advances past the last batch.
-    val got = runToMemory(StreamPipeline.freqAlerts(parsed, fx.conf, "1 hour"),
-      "fa", OutputMode.Complete)
-      .select(col("key"), unix_timestamp(col("win_start")).as("w"), col("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-
-    val bp = Parse(spark.createDataset(fx.turns).toDF(), fx.conf)
-    val want = bp.groupBy(col(fx.conf.freqKey).as("key"),
-      (floor(col("ts_sec") / fx.conf.freqWindowSec) * fx.conf.freqWindowSec).as("w"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") >= fx.conf.freqThreshold)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-
-    assert(got === want)
-    assert(got.nonEmpty, "fixture must contain at least one burst")
-  }
-
-  test("streaming fan-out sink (foreachBatch, AvailableNow) writes severity-partitioned alert docs") {
-    val outDir = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    val enr = StreamPipeline.enrichStream(streamTurns, tb, fx.conf, "1 hour")
-    StreamPipeline.routeAvailableNow(spark, enr, fx.conf, outDir, ckpt)
-    val written = spark.read.parquet(s"$outDir/alerts_all")
-    assert(written.count() > 0)
-    assert(written.select("severity").distinct().collect()
-      .map(_.getString(0)).forall(Set("high", "critical")))
-    // FIR alert-doc projection present
-    assert(Set("subject", "category").subsetOf(written.columns.toSet))
-    val rows = written.select("fp", "conv_id", "turn_idx", "note").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSeq
-    // one alert per fingerprint; every written row routes with ITS OWN
-    // batch-computed note (which duplicate survived is stream-arbitrary)
-    assert(rows.map(_._1).distinct.size === rows.size)
-    rows.foreach { case (fp, c, t, n) =>
-      val (bfp, bn) = perRowNotes((c, t))
-      assert(bfp === fp && bn === n && n >= fx.conf.firThreshold)
-    }
-    // completeness lower bound: a fp ALL of whose duplicates route must be
-    // written, no matter which one the stream kept
-    val mustRoute = perRowNotes.values.groupBy(_._1)
-      .filter(_._2.forall(_._2 >= fx.conf.firThreshold)).keySet
-    assert(mustRoute.subsetOf(rows.map(_._1).toSet))
-    assert(mustRoute.nonEmpty, "fixture must contain always-routing fingerprints")
   }
 
   test("composed end-to-end stream (ONE readStream → C1→C9 per micro-batch with state) == batch pipeline EXACTLY") {
@@ -204,6 +117,21 @@ class StreamingSpec extends SparkSuite {
       .select("conv_id", "turn_idx", "note", "severity", "category")
       .collect().map(key).sortBy(t => (t._1, t._2)).toSeq
     assert(got.nonEmpty && got === want)
+    // at most one alert per turn, each one routed on its own note
+    assert(got.map(k => (k._1, k._2)).distinct.size === got.size)
+    assert(got.forall(_._3 >= fx.conf.firThreshold))
+
+    // the FIR sink layout on disk: alerts_all/run_id=<id>/severity=<sev>,
+    // only the high/critical bands (firThreshold is the high floor), and
+    // the alert-doc projection (subject, category) written into the files
+    val alertsDir = new java.io.File(outDir, "alerts_all")
+    val sevDirs = alertsDir.listFiles().filter(_.getName.startsWith("run_id="))
+      .flatMap(_.listFiles()).filter(_.isDirectory).map(_.getName)
+    assert(sevDirs.nonEmpty && sevDirs.forall(_.startsWith("severity=")))
+    assert(sevDirs.map(_.stripPrefix("severity=")).toSet.subsetOf(Set("high", "critical")))
+    val written = spark.read.parquet(alertsDir.getPath)
+    assert(Set("subject", "category").subsetOf(written.columns.toSet))
+    assert(written.filter(col("subject").isNull || col("category").isNull).count() === 0)
 
     // restart idempotency: replaying the stream from a fresh checkpoint must
     // skip every manifested batch (manifest = commit marker), changing nothing
