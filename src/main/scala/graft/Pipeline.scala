@@ -39,36 +39,28 @@ object Pipeline {
       firedBuckets: Option[DataFrame] = None)
   object State { val empty: State = State(None, None, None, None) }
 
-  /** The pure transform: transcripts in, enriched detection rows out. */
+  /** The pure transform: transcripts in, enriched detection rows out. No
+    * persist: first-seen and frequency re-read the survivors' lineage. */
   def enrich(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
       state: State = State.empty): DataFrame =
-    enrichPlanned(turns, tables, conf, state, persistIntermediates = false)._1
+    scoreSurvivors(Whitelist(Dedup(Parse(turns, conf), conf, state.fpSeen),
+      tables.whitelist), tables, conf, state)
 
-  /** enrich with explicit persist points at the two diamond-shaped stage
-    * boundaries — FirstSeen consumes its input once per tracked field (the
-    * value→min-key aggregations) plus the join-back, and Frequency consumes
-    * its input for both the per-sec counts and the join-back. Without
-    * persisting, Spark recomputes the whole upstream (scan→parse→joins) for
-    * every branch; with it, branches share one materialization (the plan-audit
-    * driver for this: docs/plans/enrich_full.txt). Callers own cleanup via the
-    * returned thunk. */
+  /** enrich with one persist point: the post-whitelist survivors feed (a) the
+    * main narrow enrich chain once and (b) the slim first-seen/frequency
+    * aggregations, which read pruned column batches from the cache. Without
+    * it, Spark recomputes the whole upstream (scan→parse→dedup) for every
+    * branch (the plan-audit driver for this: docs/plans/enrich_full.txt).
+    * Callers own cleanup via the returned thunk. */
   def enrichPlanned(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
-      state: State = State.empty, persistIntermediates: Boolean = true)
-      : (DataFrame, () => Unit) = {
-    val deduped = Dedup(Parse(turns, conf), conf, state.fpSeen)
-    // the ONE persist: survivors feed (a) the main narrow enrich chain once
-    // and (b) the slim first-seen/frequency aggregations, which read pruned
-    // column batches from the cache
-    val wl = Whitelist(deduped, tables.whitelist)
-    val survivors =
-      if (persistIntermediates) wl.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else wl
-    (scoreSurvivors(survivors, tables, conf, state),
-      () => if (persistIntermediates) { survivors.unpersist(); () })
+      state: State = State.empty): (DataFrame, () => Unit) = {
+    val survivors = Whitelist(Dedup(Parse(turns, conf), conf, state.fpSeen),
+      tables.whitelist).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (scoreSurvivors(survivors, tables, conf, state), () => { survivors.unpersist(); () })
   }
 
   /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency
-    * read again (aux) — so callers pass a persisted frame. */
+    * read again (aux): enrichPlanned and Incremental.run pass them persisted. */
   private[graft] def scoreSurvivors(survivors: DataFrame, tables: RuleTables,
       conf: PipelineConf, state: State): DataFrame = {
     val enriched = RefCheck(

@@ -3,6 +3,8 @@ package graft.fixtures
 import java.sql.Timestamp
 import scala.util.Random
 
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
 import graft.model._
 
 /** Deterministic synthetic transcript + rule-table generator (FIXTURES.md).
@@ -203,6 +205,18 @@ object Gen {
       }
     }
     out.toSeq
+  }
+
+  /** Write the four constant rule tables under `dir` as single-file parquet:
+    * the write side of `Source.readRuleTables`. */
+  def writeRuleTables(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    def write(df: DataFrame, name: String): Unit =
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
+    write(iocTable.toDF(), "ioc")
+    write(sigRules.toDF(), "sig_rules")
+    write(refBaseline.toDF(), "ref_baseline")
+    write(whitelistRules.toDF(), "whitelist")
   }
 
   def fixture(nConvs: Int, seed: Long = 42L, hotKey: Boolean = false): FixtureData =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
 /** Subset bench with graft.Bench's exact methodology (same session settings,
   * name-sorted order, one untimed warmup query, min-of-N count() timings) —
@@ -21,15 +21,7 @@ object BenchExtra {
     require(wanted.nonEmpty, s"no query selected by '$names'")
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sel = wanted.map(n => n -> all(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try { sel.head._2(spark, sfDir).count() }
     catch { case scala.util.control.NonFatal(_) => }
     val results = sel.map { case (name, fn) =>

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import graft.Pipeline
 import graft.entry.{TestdataAdapter, TestdataTables}
 import graft.entry.LogQueries
+import graft.util.LocalSpark
 
 /** Physical-plan audit: dump `explain("formatted")` for the headline plans to
   * docs/plans/ and print a one-line summary (joins, shuffles, codegen spans)
@@ -14,14 +15,7 @@ import graft.entry.LogQueries
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8)
 
     val outDir = Paths.get("docs/plans")
     Files.createDirectories(outDir)

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 import graft.fixtures.Gen
+import graft.util.LocalSpark
 
 /** Write the deterministic fixture tables to parquet:
   * `GenFixtures <outDir> [nConvs] [hotKey]`. Transcripts are written
@@ -12,30 +13,16 @@ object GenFixtures {
     val outDir = args(0)
     val nConvs = if (args.length > 1) args(1).toInt else 2000
     val hotKey = args.length > 2 && args(2).toBoolean
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
-    val fx = Gen.fixture(nConvs, hotKey = hotKey)
-    spark.createDataset(fx.turns).toDF()
+    val turns = Gen.transcripts(nConvs, hotKey = hotKey)
+    turns.toDF()
       .withColumn("day", org.apache.spark.sql.functions.to_date($"ts"))
       .repartition($"day")
       .write.mode(SaveMode.Overwrite).partitionBy("day")
       .parquet(s"$outDir/transcripts")
-    spark.createDataset(fx.ioc).toDF().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/ioc")
-    spark.createDataset(fx.rules).toDF().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/sig_rules")
-    spark.createDataset(fx.ref).toDF().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/ref_baseline")
-    spark.createDataset(fx.whitelist).toDF().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/whitelist")
-    println(s"wrote ${fx.turns.size} turns / $nConvs convs to $outDir")
+    Gen.writeRuleTables(spark, outDir)
+    println(s"wrote ${turns.size} turns / $nConvs convs to $outDir")
     spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Incremental
 import graft.model.PipelineConf
 import graft.sources.Source
+import graft.util.LocalSpark
 
 /** spark-submit resumable entry:
   * `RunIncremental <fixtureDir> <stateDir> <outDir> [tsFrom tsTo]`
@@ -18,16 +18,7 @@ object RunIncremental {
   def main(args: Array[String]): Unit = {
     val inDir = args(0); val stateDir = args(1); val outDir = args(2)
     val range = if (args.length >= 5) Some((args(3).toLong, args(4).toLong)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val spark = LocalSpark.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     val conf = PipelineConf()
     val all = Source.readTable(spark, conf, s"$inDir/transcripts")

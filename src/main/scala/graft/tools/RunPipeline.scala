@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Pipeline
 import graft.model.PipelineConf
 import graft.sources.Source
+import graft.util.LocalSpark
 
 /** spark-submit entry point: run the full parse→enrich→route→aggregate
   * pipeline over a transcripts table produced by [[GenFixtures]] (or any
@@ -19,16 +18,7 @@ import graft.sources.Source
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val spark = LocalSpark.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     // optional 3rd arg: a reference-style JSON config dir (rules.json /
     // ioc.json / whitelist.json / ref.json / mappings.json) instead of the

@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.{Pipeline, RuleTables}
+import graft.Pipeline
 import graft.fixtures.Gen
 import graft.model.PipelineConf
+import graft.util.LocalSpark
 
 /** M6 scaling bench (BASELINE.json): run the identical end-to-end
   * parse→enrich→route→aggregate job on the same input at parallelism N and
@@ -21,30 +21,13 @@ import graft.model.PipelineConf
   */
 object ScalingBench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** One full pipeline pass; returns (rows, routedRows, wallSec). */
   private def onePass(spark: SparkSession, benchDir: String): (Long, Long, Double) = {
-    import spark.implicits._
     val conf = PipelineConf()
     val turns = graft.sources.Source.readTable(spark, conf, s"$benchDir/transcripts")
     val tables = graft.sources.Source.readRuleTables(spark, conf, benchDir)
-    val persist = sys.env.getOrElse("SPARK_GRAFT_PERSIST", "true").toBoolean
     val t0 = System.nanoTime()
-    val (enriched, cleanup) = Pipeline.enrichPlanned(turns, tables, conf,
-      persistIntermediates = persist)
+    val (enriched, cleanup) = Pipeline.enrichPlanned(turns, tables, conf)
     try {
       // the FULL pipeline is in the timed pass: Pipeline.route writes the
       // per-severity alert sinks + both rollups (the metric label
@@ -70,7 +53,7 @@ object ScalingBench {
     // ---- generate once (chunked, parallel: one generator task per chunk)
     if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(s"$benchDir/transcripts"))) {
-      val gen = session(cores)
+      val gen = LocalSpark.session(cores)
       import gen.implicits._
       val chunkConvs = 50000
       val chunks = math.max(1, nConvs / chunkConvs)
@@ -79,15 +62,7 @@ object ScalingBench {
         .toDF()
         .write.mode(SaveMode.Overwrite).parquet(s"$benchDir/transcripts")
       System.err.println(s"$chunks chunks written")
-      val fx = Gen.fixture(0)
-      gen.createDataset(fx.ioc).toDF().coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$benchDir/ioc")
-      gen.createDataset(fx.rules).toDF().coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$benchDir/sig_rules")
-      gen.createDataset(fx.ref).toDF().coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$benchDir/ref_baseline")
-      gen.createDataset(fx.whitelist).toDF().coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$benchDir/whitelist")
+      Gen.writeRuleTables(gen, benchDir)
       gen.stop()
     }
 
@@ -110,7 +85,7 @@ object ScalingBench {
     /** One session at `cpus`: pipeline warmup + timed pass, bracketed by a
       * CPU probe. Returns (rows, routed, pipeWall, cpuWall). */
     def oneSession(cpus: Int, warmCpu: Boolean): (Long, Long, Double, Double) = {
-      val s = session(cpus)
+      val s = LocalSpark.session(cpus)
       try {
         if (warmCpu) cpuProbe(s, cpus) // first probe of the run warms JIT
         val cpuW = cpuProbe(s, cpus)

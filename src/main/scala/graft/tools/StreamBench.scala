@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.PipelineConf
+import graft.util.LocalSpark
 
 /** r4 (VERDICT r3 #8): times the COMPOSED STREAMING path — one
   * readStream → foreachBatch → Incremental.run per micro-batch through
@@ -21,15 +20,7 @@ object StreamBench {
     val cores = if (args.length > 1) args(1).toInt else 32
     val mfpt = if (args.length > 2) args(2).toInt else 2
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-stream-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cores)
 
     val conf = PipelineConf()
     val tables = graft.sources.Source.readRuleTables(spark, conf, benchDir)

@@ -59,3 +59,19 @@ object Concurrent {
     } finally pool.shutdown()
   }
 }
+
+object LocalSpark {
+  /** The local session of the runnable mains: `cpus` task slots and as many
+    * shuffle partitions, UTC, AQE on, no UI, WARN logging. */
+  def session(cpus: Int): org.apache.spark.sql.SparkSession = {
+    val s = org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+}

@@ -23,9 +23,7 @@ class PlanShapeSpec extends SparkSuite {
   test("enrich plan: pinned shuffle budget, no cartesian, sanctioned windows only") {
     val fx = Gen.fixture(60)
     val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
-    val enriched = Pipeline.enrichPlanned(
-      spark.createDataset(fx.turns).toDF(), tb, Gen.defaultConf,
-      persistIntermediates = false)._1
+    val enriched = Pipeline.enrich(spark.createDataset(fx.turns).toDF(), tb, Gen.defaultConf)
     val plan = enriched.queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode)
 
@@ -50,6 +48,32 @@ class PlanShapeSpec extends SparkSuite {
       val freqForm = l.contains("windowspecdefinition(_k#")
       assert(dedupForm || freqForm, s"unsanctioned window: ${l.trim}")
     }
+  }
+
+  test("enrichPlanned: enrich's rows, one InMemoryRelation read, no cache after cleanup") {
+    val fx = Gen.fixture(60)
+    val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
+    val conf = Gen.defaultConf
+    val turns = spark.createDataset(fx.turns).toDF()
+    // the one persist point: the post-whitelist survivors
+    val survivors = operators.Whitelist(
+      operators.Dedup(operators.Parse(turns, conf), conf), tb.whitelist)
+    def survivorsCached = survivors.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toString).sorted
+
+    val (planned, cleanup) = Pipeline.enrichPlanned(turns, tb, conf)
+    try {
+      assert(survivorsCached, "enrichPlanned must persist the post-whitelist survivors")
+      assert(sorted(planned) === sorted(Pipeline.enrich(turns, tb, conf)))
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val reads = aqe.collectWithSubqueries(planned.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s.relation
+      }
+      assert(reads.nonEmpty, "the executed plan does not read the persisted survivors")
+      assert(reads.map(_.cacheBuilder).distinct.size === 1,
+        s"expected one InMemoryRelation, got ${reads.map(_.cacheBuilder).distinct.size}")
+    } finally cleanup()
+    assert(!survivorsCached, "cleanup() left the survivors cached")
   }
 
   test("r4 query plans: IVF probe side broadcasts, no cartesian product in the new operators") {
