@@ -152,18 +152,20 @@ object Incremental {
   }
 
   /** Drop the STATE TABLES of runs older than the latest `keep` completed
-    * runs. Snapshots are full, so only the latest run's state is ever read;
-    * older run dirs exist solely for audit/rollback, and at one snapshot per
-    * run the disk footprint would otherwise grow O(runs × state). Manifests
-    * and `input_files` lineage are KEPT (audit trail). Returns the runs
-    * whose state was dropped. */
+    * runs — every table dir under `run-<id>` but `input_files`, so it serves
+    * this runner and the curation-state runner alike. Snapshots are full, so
+    * only the latest run's state is ever read; older run dirs exist solely
+    * for audit/rollback, and at one snapshot per run the disk footprint
+    * would otherwise grow O(runs × state). Manifests and `input_files`
+    * lineage are KEPT (audit trail). Returns the runs whose state was
+    * dropped. */
   def gc(stateDir: String, keep: Int = 1): Seq[String] = {
     require(keep >= 1, "must keep at least the latest snapshot")
     val victims = completedRuns(stateDir).dropRight(keep)
     victims.foreach { r =>
-      Seq("seen_values", "fp_seen", "freq_counts", "fired").foreach { t =>
-        graft.util.Fs.deleteRecursively(Paths.get(stateDir, s"run-$r", t).toFile)
-      }
+      Option(Paths.get(stateDir, s"run-$r").toFile.listFiles()).toSeq.flatten
+        .filter(t => t.isDirectory && t.getName != "input_files")
+        .foreach(graft.util.Fs.deleteRecursively)
     }
     victims
   }

@@ -51,12 +51,13 @@ object Pipeline {
     * aggregations, which read pruned column batches from the cache. Without
     * it, Spark recomputes the whole upstream (scan→parse→dedup) for every
     * branch (the plan-audit driver for this: docs/plans/enrich_full.txt).
-    * Callers own cleanup via the returned thunk. */
-  def enrichPlanned(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
-      state: State = State.empty): (DataFrame, () => Unit) = {
-    val survivors = Whitelist(Dedup(Parse(turns, conf), conf, state.fpSeen),
+    * Callers own cleanup via the returned thunk. A fresh run (no carried
+    * state); resumed runs go through [[Incremental.run]]. */
+  def enrichPlanned(turns: DataFrame, tables: RuleTables,
+      conf: PipelineConf): (DataFrame, () => Unit) = {
+    val survivors = Whitelist(Dedup(Parse(turns, conf), conf, None),
       tables.whitelist).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (scoreSurvivors(survivors, tables, conf, state), () => { survivors.unpersist(); () })
+    (scoreSurvivors(survivors, tables, conf, State.empty), () => { survivors.unpersist(); () })
   }
 
   /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency
@@ -92,20 +93,19 @@ object Pipeline {
     * the driver harness (sequential queries over immutable sf dirs); anything
     * else must use enrichPlanned directly. */
   def enrichManaged(turns: DataFrame, tables: RuleTables,
-      conf: PipelineConf, state: State = State.empty): DataFrame = managedRef.synchronized {
+      conf: PipelineConf): DataFrame = managedRef.synchronized {
     val key = (turns.queryExecution.logical.canonicalized, conf,
       tables.sigRules, tables.whitelist,
       tables.ioc.queryExecution.logical.canonicalized,
-      tables.ref.queryExecution.logical.canonicalized,
-      state == State.empty)
+      tables.ref.queryExecution.logical.canonicalized)
     managedRef.get() match {
-      case Some((k, df, _)) if k == key && state == State.empty => df
+      case Some((k, df, _)) if k == key => df
       case prev =>
         // release BEFORE persisting: persisting while the previous identical
         // plan is still registered logs 'already cached' and the later
         // unpersist would evict the shared entry from under the new plan
         prev.foreach(_._3())
-        val (df, cleanup) = enrichPlanned(turns, tables, conf, state)
+        val (df, cleanup) = enrichPlanned(turns, tables, conf)
         // r6: persist the FINAL enriched output too, not only the survivors
         // diamond — the sharing callers (c8/c9/c9b/agg_rollup_sev_kind) each
         // re-ran the post-survivors half of the chain (ioc/sig/ref joins +
@@ -117,11 +117,6 @@ object Pipeline {
         managedRef.set(Some((key, cached, () => { cached.unpersist(); cleanup() })))
         cached
     }
-  }
-
-  /** Release the caches of the last enrichManaged plan (idempotent). */
-  def releaseManaged(): Unit = managedRef.synchronized {
-    managedRef.getAndSet(None).foreach(_._3())
   }
 
   /** FIR alert-document projection (SURVEY §2.1 S4): the reference's output

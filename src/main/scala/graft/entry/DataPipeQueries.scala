@@ -287,9 +287,8 @@ object DataPipeQueries {
     * without it the logical plan DOUBLES per iteration (every round
     * re-embeds the previous one), exploding optimizer time; with it every
     * round plans against a materialized leaf, the scale-safe form of any
-    * iterative Spark loop. The round cap is configurable via
-    * `spark.graft.cc.maxIter` (default 64 — with doubling that covers
-    * diameters ~2^64, so hitting it means a real bug, and it fails loud).
+    * iterative Spark loop. The round cap is 64 — with doubling that covers
+    * diameters ~2^64, so hitting it means a real bug, and it fails loud.
     * Returns (node, comp) where comp = min doc_id of the component — the
     * kept canonical doc. */
   private[entry] def ccLabels(pairs: DataFrame): DataFrame = {
@@ -316,8 +315,7 @@ object DataPipeQueries {
       .withColumn("comp", col("node")))
     var changed = 1L
     var iter = 0
-    val MaxIter = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.maxIter").map(_.toInt).getOrElse(64)
+    val MaxIter = 64
     while (changed > 0 && iter < MaxIter) {
       val nbr = edges
         .join(labels.select(col("node").as("b"), col("comp").as("nc")), "b")

@@ -1013,8 +1013,8 @@ scored AS (
       // concat chain) into every rule-clause reference (22 copies measured).
       // r6: narrowed to the columns the rule clauses actually probe —
       // text/tags/ts and the unused parsed fields no longer materialize
-      SigRules(QueryCache.cycle(P(s, d)
-        .select("parse_ok", "action", "status", "uri", "user", "tool")),
+      val probed = "parse_ok" +: TestdataTables.sigRules.map(_.field).distinct
+      SigRules(QueryCache.cycle(P(s, d).select(probed.map(col): _*)),
         TestdataTables.sigRules)
         .select(explode(col("hits_sig")).as("h"))
         .groupBy(col("h.rule_id").as("rule_id"), col("h.name").as("name"))

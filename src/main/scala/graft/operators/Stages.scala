@@ -44,10 +44,6 @@ object ClauseCompiler {
       case other => throw new IllegalArgumentException(s"unknown op $other")
     }
 
-  def hitStruct(ruleId: Int, name: String, score: Column): Column =
-    struct(lit(ruleId).as("rule_id"), lit(name).as("name"),
-      score.cast("int").as("score"), lit("").as("kind"))
-
   def hitStruct(ruleId: Int, name: String, score: Column, kind: String): Column =
     struct(lit(ruleId).as("rule_id"), lit(name).as("name"),
       score.cast("int").as("score"), lit(kind).as("kind"))

@@ -10,94 +10,32 @@ import graft.model._
 /** Structured Streaming surface (SURVEY §2.8). The reference is an
   * always-on Logstash daemon; our primary mode is batch-incremental
   * (graft.Incremental), which [[runFull]] and [[curationStream]] run per
-  * micro-batch through one shared loop. The rest are `flatMapGroupsWithState` /
-  * watermark twins of single operators (C6, C7, elapsed, task-agg, sessions).
+  * micro-batch through one shared loop — so the stateful C6/C7 checks stream
+  * through the same `FirstSeen`/`Frequency` code and snapshot state as batch.
+  * The rest are `flatMapGroupsWithState` / watermark twins of operators whose
+  * event-time timeout semantics have no batch-exact form (elapsed, task-agg,
+  * sessions).
   */
 object StreamPipeline {
 
-  final case class FirstSeenEvent(field: String, value: String,
-      conv_id: String, turn_idx: Int, ts_us: Long)
-
-  /** C6 as flatMapGroupsWithState: one output row per (field, value) — the
-    * first occurrence ever seen, ordered by (ts_us, conv_id, turn_idx) within
-    * each micro-batch; state = "already seen". */
-  def firstSeenStream(parsed: DataFrame, conf: PipelineConf): Dataset[FirstSeenEvent] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val cands = conf.trackedFields.map { f =>
-      parsed.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
-        .select(lit(f).as("field"), col(f).as("value"),
-          col("conv_id"), col("turn_idx"), col("ts_us"))
-    }.reduce(_ unionByName _).as[FirstSeenEvent]
-    cands.groupByKey(e => (e.field, e.value))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: (String, String), it: Iterator[FirstSeenEvent],
-         state: GroupState[Boolean]) => {
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            val first = it.minBy(e => (e.ts_us, e.conv_id, e.turn_idx))
-            Iterator.single(first)
-          }
-        })
-  }
-
-  final case class FreqFire(key: String, sec: Long)
-
-  /** Per-key frequency state: per-second counts within the trailing window
-    * of the max seen second, plus fired reset-buckets ≥ the live bucket —
-    * the in-memory mirror of Incremental's pruned freq_counts/fired
-    * snapshot, so state is bounded by the window, not by history. */
-  final case class FreqState(counts: Map[Long, Long], fired: Seq[Long])
-
-  /** C7 streaming, EXACT batch parity: trailing-window per-second counts +
-    * per-reset-bucket re-fire suppression via flatMapGroupsWithState —
-    * emits one (key, sec) per first second whose trailing count reaches the
-    * threshold per reset bucket, exactly the batch [[graft.operators
-    * .Frequency]] fire set. Rows are processed in event-time order within
-    * each micro-batch; exactness across batches needs ascending event-time
-    * batches (the same contract as graft.Incremental). */
-  def freqTrailingStream(parsed: DataFrame, conf: PipelineConf): Dataset[FreqFire] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val w = conf.freqWindowSec
-    val reset = conf.freqResetSec
-    val th = conf.freqThreshold
-    parsed.select(col(conf.freqKey).cast("string").as("key"),
-      col("ts_sec").as("sec")).as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[(String, Long)], state: GroupState[FreqState]) => {
-          val prev = state.getOption.getOrElse(FreqState(Map.empty, Seq.empty))
-          var counts = prev.counts
-          val fired = scala.collection.mutable.Set[Long](prev.fired: _*)
-          val out = scala.collection.mutable.ArrayBuffer.empty[FreqFire]
-          val secs = it.map(_._2).toArray
-          java.util.Arrays.sort(secs)
-          var i = 0
-          while (i < secs.length) {
-            val s = secs(i)
-            counts = counts.updated(s, counts.getOrElse(s, 0L) + 1L)
-            val bucket = Math.floorDiv(s, reset)
-            if (!fired.contains(bucket)) {
-              val cnt = counts.iterator
-                .collect { case (s2, c) if s2 >= s - w && s2 <= s => c }.sum
-              if (cnt >= th) { fired += bucket; out += FreqFire(key, s) }
-            }
-            i += 1
-          }
-          if (secs.nonEmpty) {
-            val maxSec = secs(secs.length - 1)
-            state.update(FreqState(
-              counts.filter { case (s2, _) => s2 >= maxSec - w },
-              fired.toSeq.filter(_ >= Math.floorDiv(maxSec, reset)).sorted))
-          }
-          out.iterator
-        })
-  }
-
   final case class ElapsedEv(key: String, ts_us: Long, ts_sec: Long,
       start: Boolean, end: Boolean, ts: java.sql.Timestamp)
+
+  /** The watermarked start/end events both elapsed twins group by key. */
+  private def elapsedEvents(parsed: DataFrame, key: String, isStart: Column,
+      isEnd: Column): Dataset[ElapsedEv] = {
+    import parsed.sparkSession.implicits._
+    // ts (the watermark column) must survive UNTOUCHED into the grouped
+    // Dataset — event-time timeout requires the watermark attribute in the
+    // child plan, and any cast/alias on it strips the event-time metadata
+    parsed.withColumn("ts", col("ts").cast("timestamp"))
+      .filter(isStart || isEnd)
+      .withWatermark("ts", "0 seconds")
+      .select(col(key).cast("string").as("key"), col("ts_us"), col("ts_sec"),
+        isStart.as("start"), isEnd.as("end"), col("ts"))
+      .as[ElapsedEv]
+  }
+
   /** Per-key elapsed state: the first start (-1 = none yet) and whether the
     * transaction already resolved (matched or expired) — one small record
     * per key, same bound as the batch operator's state table. */
@@ -117,16 +55,7 @@ object StreamPipeline {
       isEnd: Column, timeoutSec: Long): Dataset[ElapsedOut] = {
     val spark = parsed.sparkSession
     import spark.implicits._
-    // ts (the watermark column) must survive UNTOUCHED into the grouped
-    // Dataset — event-time timeout requires the watermark attribute in the
-    // child plan, and any cast/alias on it strips the event-time metadata
-    val evs = parsed.withColumn("ts", col("ts").cast("timestamp"))
-      .filter(isStart || isEnd)
-      .withWatermark("ts", "0 seconds")
-      .select(col(key).cast("string").as("key"), col("ts_us"), col("ts_sec"),
-        isStart.as("start"), isEnd.as("end"), col("ts"))
-      .as[ElapsedEv]
-    evs.groupByKey(_.key)
+    elapsedEvents(parsed, key, isStart, isEnd).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (k: String, it: Iterator[ElapsedEv], state: GroupState[ElapsedSt]) => {
           if (state.hasTimedOut) {
@@ -199,13 +128,7 @@ object StreamPipeline {
       isEnd: Column, timeoutSec: Long): Dataset[ElapsedMultiOut] = {
     val spark = parsed.sparkSession
     import spark.implicits._
-    val evs = parsed.withColumn("ts", col("ts").cast("timestamp"))
-      .filter(isStart || isEnd)
-      .withWatermark("ts", "0 seconds")
-      .select(col(key).cast("string").as("key"), col("ts_us"), col("ts_sec"),
-        isStart.as("start"), isEnd.as("end"), col("ts"))
-      .as[ElapsedEv]
-    evs.groupByKey(_.key)
+    elapsedEvents(parsed, key, isStart, isEnd).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (k: String, it: Iterator[ElapsedEv], state: GroupState[ElapsedMultiSt]) => {
           if (state.hasTimedOut) {

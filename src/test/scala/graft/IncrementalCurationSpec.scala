@@ -99,6 +99,23 @@ class IncrementalCurationSpec extends SparkSuite {
     assert(stateRows(sd) == stateRows(single))
   }
 
+  test("Incremental.gc drops a curation run's state tables, keeps its manifest") {
+    val dd = docsDf
+    val sd = tmp()
+    CurationState.run(spark, dd.filter(col("doc_id") < 10), sd, "1")
+    CurationState.run(spark, dd.filter(col("doc_id") >= 10), sd, "2")
+    val before = stateRows(sd)
+    assert(Incremental.gc(sd) === Seq("1"))
+    val run1 = java.nio.file.Paths.get(sd, "run-1")
+    Seq("content_hashes", "seg_freq", "eval_grams").foreach { t =>
+      assert(!java.nio.file.Files.exists(run1.resolve(t)), s"run-1/$t survived gc")
+    }
+    assert(java.nio.file.Files.isRegularFile(
+      java.nio.file.Paths.get(sd, "manifest", "run-1.json")))
+    assert(Incremental.completedRuns(sd) === Seq("1", "2"))
+    assert(stateRows(sd) == before)
+  }
+
   test("seg_freq counts are capped at the threshold (bounded state)") {
     val sd = tmp()
     CurationState.run(spark, docsDf, sd, "1")
