@@ -1,19 +1,51 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.model._
 import graft.operators._
 
 /** Rule/lookup tables for one pipeline run (the sig filter's rules.json /
   * ioc.json / ref.json analogues, SURVEY §1.1). All broadcast-small by
-  * contract; whitelist + sig rules are compiled into the plan itself. */
+  * contract; whitelist + sig rules are compiled into the plan itself.
+  *
+  * An instance is a snapshot: the C3/C5 dims ([[IocEnrich.dim]],
+  * [[RefCheck.dim]]) are derived from `ioc`/`ref` once, on first use, and
+  * held as local rows per IOC kind and per ref field, so every pass
+  * broadcasts LocalRelations instead of planning, compiling and running the
+  * derivation again. Not persisted: the rows live in the application's
+  * JVM, as a broadcast's would. */
 case class RuleTables(
     ioc: DataFrame,
     sigRules: Seq[SigRule],
     ref: DataFrame,
-    whitelist: Seq[WhitelistRule])
+    whitelist: Seq[WhitelistRule]) {
+  private[graft] lazy val iocByKind: String => DataFrame =
+    RuleTables.byKey(IocEnrich.dim(ioc), "kind")
+  private[graft] lazy val refByField: String => DataFrame =
+    RuleTables.byKey(RefCheck.dim(ref), "field")
+}
+
+object RuleTables {
+  /** A dim's rows per value of its `key` column, without that column, as
+    * local rows. Rows with a null drop out: a null never joins, and
+    * a null score scores nothing. */
+  private def byKey(dim: DataFrame, key: String): String => DataFrame = {
+    val cols = dim.columns.filterNot(_ == key).toSeq
+    val schema = StructType(cols.map(c => dim.schema(c).copy(nullable = false)))
+    def local(rows: Seq[Row]) = dim.sparkSession.createDataFrame(rows.asJava, schema)
+    val byKey = dim.collect().toSeq
+      .filter(r => cols.forall(c => !r.isNullAt(r.fieldIndex(c))))
+      .groupBy(_.getAs[String](key))
+      .map { case (k, rows) => k -> local(rows.map(r => Row.fromSeq(cols.map(r.getAs[Any])))) }
+    val none = local(Nil)
+    k => byKey.getOrElse(k, none)
+  }
+}
 
 /** The parse → enrich → route → aggregate pipeline (SURVEY §3.2).
   *
@@ -64,13 +96,12 @@ object Pipeline {
     * read again (aux): enrichPlanned and Incremental.run pass them persisted. */
   private[graft] def scoreSurvivors(survivors: DataFrame, tables: RuleTables,
       conf: PipelineConf, state: State): DataFrame = {
-    val enriched = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
-    val withFirst = FirstSeen(enriched, conf, state.seenValues,
-      aux = Some(survivors))
-    Scoring(Frequency(withFirst, conf, state.freqCounts,
-      state.firedBuckets, aux = Some(survivors)), conf)
+    val enriched = RefCheck.probe(
+      SigRules(IocEnrich.probe(survivors, tables.iocByKind, conf), tables.sigRules),
+      tables.refByField, conf)
+    Scoring(NewAndFrequent(enriched, conf, conf.trackedFields, freq = true,
+      state.seenValues, state.freqCounts, state.firedBuckets,
+      aux = Some(survivors)), conf)
   }
 
   // latest managed enrich: (identity key, result, cache-release thunk)
@@ -163,6 +194,16 @@ object Pipeline {
   def rollupBySink(enriched: DataFrame): DataFrame =
     enriched.filter(col("routed")).groupBy(col("severity")).agg(count(lit(1)).as("n"))
 
+  /** [[rollupBySink]]'s rows from per-sink counts a route already has: one
+    * (severity, n) row per severity with routed rows, as local rows. */
+  private def sinkRollup(spark: SparkSession, counts: Map[String, Long],
+      conf: PipelineConf): DataFrame = {
+    val rows = conf.severityBands.map(_._2).distinct
+      .flatMap(s => counts.get(s).filter(_ > 0).map(n => Row(s, n)))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("severity", StringType), StructField("n", LongType, nullable = false))))
+  }
+
   /** Salted repartition for the sink write (SURVEY §2.9 R1 / north_star
     * "hash(conv_id) with salted keys"): distributing by (severity,
     * hash(conv_id) % salt) keeps one skewed severity band — routed alerts are
@@ -180,16 +221,18 @@ object Pipeline {
     conf.severityBands.map(_._2).map(s =>
       sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"$prefix$s"))
 
-  /** The C9 layout: `alerts_all` by severity plus the two rollups. */
-  private def writeSinks(src: DataFrame, conf: PipelineConf, outDir: String): Unit = {
+  /** The C9 layout: `alerts_all` by severity plus the two rollups;
+    * `rollup_sink` is written from `counts`, the route's sink counts. */
+  private def writeSinks(src: DataFrame, conf: PipelineConf, outDir: String,
+      counts: Map[String, Long]): Unit = {
     import graft.sources.Source
     graft.util.Concurrent.run(src.sparkSession, Seq(
       () => Source.writeTable(alertSink(src, conf), conf.sinkFormat,
         s"$outDir/alerts_all", partitionCols = Seq("severity")),
       () => Source.writeTable(rollupBySignature(src), conf.sinkFormat,
         s"$outDir/rollup_signature"),
-      () => Source.writeTable(rollupBySink(src), conf.sinkFormat,
-        s"$outDir/rollup_sink")))
+      () => Source.writeTable(sinkRollup(src.sparkSession, counts, conf),
+        conf.sinkFormat, s"$outDir/rollup_sink")))
   }
 
   /** `n_total` + the `n_<severity>` sink counts, and their result map. */
@@ -206,10 +249,11 @@ object Pipeline {
     * `outDir/enriched` (salted for balanced files), and alerts + rollups are
     * derived from the WRITTEN table — each derivation is a column-pruned
     * parquet scan (hits/conv_id for the signature rollup, severity/routed
-    * for the sink rollup), never a second pass over the source or a
-    * full-width cache. Same sink-count contract as [[route]] (RouteSpec pins
-    * equality). The incremental path batches by time range, so the written
-    * table doubles as the queryable enriched archive. */
+    * for the sink counts that `rollup_sink` is written from), never a
+    * second pass over the source or a full-width cache. Same sink-count
+    * contract as [[route]] (RouteSpec pins equality). The incremental path
+    * batches by time range, so the written table doubles as the queryable
+    * enriched archive. */
   def routeViaTable(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
     import graft.sources.Source
@@ -219,18 +263,19 @@ object Pipeline {
     // would otherwise infer drifted types and drop all-null columns
     val written = Source.readTable(spark, conf.sinkFormat, s"$outDir/enriched",
       schema = Some(enriched.schema))
-    writeSinks(written, conf, outDir)
     // per-sink counts from ONE pruned aggregation over the written table
     // (severity + routed columns only — not an observe over a full pass)
     val aggs = routeCountCols(conf)
     val m = written.agg(aggs.head, aggs.tail: _*).first()
-    routeCounts(conf, m.getAs[Any](_: String))
+    val counts = routeCounts(conf, m.getAs[Any](_: String))
+    writeSinks(written, conf, outDir, counts)
+    counts
   }
 
   /** C9 fan-out: ONE pass over the enriched rows (persist), then K filtered
     * sink writes + alerts_all partitioned by severity (SURVEY §2.9 R2 — never
     * K source re-reads). Returns per-sink counts from `observe` metrics,
-    * plus "total" = all enriched rows. */
+    * plus "total" = all enriched rows; `rollup_sink` is written from them. */
   def route(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
     import org.apache.spark.sql.Observation
@@ -242,8 +287,9 @@ object Pipeline {
       // first: a partitioned write whose routed subset is empty drops
       // observed metrics entirely (Spark 4.1) and obs.get would hang
       cached.observe(obs, aggs.head, aggs.tail: _*).count()
-      writeSinks(cached, conf, outDir)
-      routeCounts(conf, obs.get)
+      val counts = routeCounts(conf, obs.get)
+      writeSinks(cached, conf, outDir, counts)
+      counts
     } finally cached.unpersist()
   }
 }

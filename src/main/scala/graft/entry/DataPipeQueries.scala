@@ -19,6 +19,12 @@ object DataPipeQueries {
 
   private def cycle(df: DataFrame): DataFrame = QueryCache.cycle(df)
 
+  /** A query's scratch dir under java.io.tmpdir, one per Spark application:
+    * wiped and rewritten by each invocation in that application, never
+    * shared with another JVM's. */
+  private[graft] def scratchDir(s: SparkSession, name: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/$name-${s.sparkContext.applicationId}"
+
   private def docs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")
   private def embs(s: SparkSession, d: String): DataFrame =
@@ -574,12 +580,11 @@ object DataPipeQueries {
       val mx = base.agg(max(col("doc_id"))).first().getLong(0)
       val shifted = base.select((col("doc_id") + lit(mx + 1)).as("doc_id"),
         col("text"))
-      // fixed scratch dir, wiped per invocation (ADVICE r5): a fresh temp
+      // per-application scratch dir, wiped per invocation (ADVICE r5): a fresh temp
       // dir per bench run accumulated full state copies in /tmp; the wipe
       // also guarantees each invocation starts from EMPTY state (stale
       // run-1/run-2 snapshots would corrupt the differential)
-      val stateDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft-cur-state-scratch"
+      val stateDir = scratchDir(s, "graft-cur-state-scratch")
       graft.util.Fs.deleteRecursively(new java.io.File(stateDir))
       CurationState.run(s, base, stateDir, "1")
       CurationState.run(s, shifted, stateDir, "2")
@@ -1140,10 +1145,10 @@ object DataPipeQueries {
       import graft.operators.IvfTrain
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
-      // fixed scratch dir, not a fresh temp dir per invocation (ADVICE r5):
+      // per-application scratch dir, not a fresh temp dir per invocation (ADVICE r5):
       // the overwrite-mode index write wipes it, so repeated bench runs
       // reuse one directory instead of accumulating index copies in /tmp
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-index-scratch"
+      val path = scratchDir(s, "graft-ivf-index-scratch")
       IvfTrain.writeIndex(ep, cents, path)
       IvfTrain.search(s, path, cents, ep.filter(col("vec_id") < 10),
         IvfProbes, 10).orderBy("qid", "rank")
@@ -1189,9 +1194,9 @@ object DataPipeQueries {
       val half = embs(s, d).count() / 2
       val cents =
         IvfTrain.train(s, ep.filter(col("vec_id") < half), IvfK, IvfIters, 64)
-      // fixed scratch dir (ADVICE r5): writeIndex's overwrite wipes it, the
+      // per-application scratch dir (ADVICE r5): writeIndex's overwrite wipes it, the
       // append then recreates exactly the fresh-run state — no /tmp growth
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-append-scratch"
+      val path = scratchDir(s, "graft-ivf-append-scratch")
       IvfTrain.writeIndex(ep.filter(col("vec_id") < half), cents, path)
       IvfTrain.appendIndex(ep.filter(col("vec_id") >= half), cents, path)
       IvfTrain.search(s, path, cents, ep.filter(col("vec_id") < 10),

@@ -47,6 +47,15 @@ object ClauseCompiler {
   def hitStruct(ruleId: Int, name: String, score: Column, kind: String): Column =
     struct(lit(ruleId).as("rule_id"), lit(name).as("name"),
       score.cast("int").as("score"), lit(kind).as("kind"))
+
+  /** The values whose guard holds, in order: `array_compact(array(when(g,
+    * v), …))` for non-null `v`, with the same type. Built from `concat` of
+    * zero-or-one-element `array_repeat`s, so the projection stays inside
+    * whole-stage codegen: array_compact is a lambda function, which is
+    * interpreted and cuts the codegen stage in two. */
+  def guarded(gv: Seq[(Column, Column)]): Column =
+    if (gv.isEmpty) array()
+    else concat(gv.map { case (g, v) => array_repeat(v, when(g, 1).otherwise(0)) }: _*)
 }
 
 /** P1 grok parse: ONE pass over the pattern list per row (first match wins)
@@ -76,10 +85,10 @@ object Parse {
         col("_g").isNotNull.as("parse_ok"),
         // Logstash-style tags array (array-valued field for clause checks):
         // parse failures + tool markers
-        array_compact(array(
-          when(col("_g").isNull, "_grokparsefailure"),
-          when(nullif(col("tool"), lit("")).isNotNull,
-            concat(lit("tool:"), col("tool"))))).as("tags"))
+        ClauseCompiler.guarded(Seq(
+          col("_g").isNull -> lit("_grokparsefailure"),
+          nullif(col("tool"), lit("")).isNotNull ->
+            concat_ws("", lit("tool:"), col("tool")))).as("tags"))
   }
 }
 
@@ -129,42 +138,53 @@ object Whitelist {
   * check_ioc as relational lookup joins. Hit order inside `hits_ioc` is
   * alphabetical by kind (domain, hash, ip, user) to match RefModel. */
 object IocEnrich {
+  /** The IOC dim: the max score per (kind, lowercased value). */
+  def dim(ioc: DataFrame): DataFrame =
+    ioc.groupBy(col("kind"), lower(col("value")).as("value"))
+      .agg(max(col("score")).as("score"))
+
   def apply(df: DataFrame, ioc: DataFrame,
       conf: PipelineConf = PipelineConf()): DataFrame = {
+    val d = dim(ioc)
+    probe(df, kind => d.filter(col("kind") === kind).drop("kind"), conf)
+  }
+
+  /** The C3 joins against one kind's (value, score) rows of the [[dim]]
+    * (the pipeline passes its rule tables' local snapshot). */
+  private[graft] def probe(df: DataFrame, ofKind: String => DataFrame,
+      conf: PipelineConf): DataFrame = {
     // kind → probed field comes from the rule-file config (conf.iocKindFields);
     // sorted by kind so hits_ioc order matches RefModel regardless of the
     // order the config file lists the mappings in
     val kindField = conf.iocKindFields.sortBy(_._1)
-    val dim = ioc.groupBy(col("kind"), lower(col("value")).as("value"))
-      .agg(max(col("score")).as("score"))
     val joined = kindField.foldLeft(df) { case (acc, (kind, fld)) =>
-      val d = broadcast(dim.filter(col("kind") === kind)
+      val d = broadcast(ofKind(kind)
         .select(col("value").as(s"_${kind}_v"), col("score").as(s"_${kind}_s")))
       acc.join(d, lower(col(fld)) === col(s"_${kind}_v"), "left_outer")
         .drop(s"_${kind}_v")
     }
-    val hitCols = kindField.map { case (kind, _) =>
-      when(col(s"_${kind}_s").isNotNull,
-        ClauseCompiler.hitStruct(0, s"ioc:$kind", col(s"_${kind}_s"), "ioc"))
+    val hits = kindField.map { case (kind, _) =>
+      col(s"_${kind}_s").isNotNull ->
+        ClauseCompiler.hitStruct(0, s"ioc:$kind", col(s"_${kind}_s"), "ioc")
     }
-    joined.withColumn("hits_ioc", array_compact(array(hitCols: _*)))
+    joined.withColumn("hits_ioc", ClauseCompiler.guarded(hits))
       .drop(kindField.map { case (k, _) => s"_${k}_s" }: _*)
   }
 }
 
 /** C4 signature rules: every rule folded into one compiled boolean Column
   * (clauses of the same rule_id AND together); hits collected with
-  * array_compact — zero joins, fully codegen'd. Guarded by parse_ok,
-  * matching RefModel (unparsed rows skip rule checks). */
+  * [[ClauseCompiler.guarded]] — zero joins, fully codegen'd. Guarded by
+  * parse_ok, matching RefModel (unparsed rows skip rule checks). */
 object SigRules {
   def apply(df: DataFrame, rules: Seq[SigRule]): DataFrame = {
-    val hitCols = rules.groupBy(_.rule_id).toSeq.sortBy(_._1).map { case (rid, cl) =>
+    val hits = rules.groupBy(_.rule_id).toSeq.sortBy(_._1).map { case (rid, cl) =>
       val pred = cl.map(c => ClauseCompiler.predicate(c.field, c.op, c.arg))
         .reduce(_ && _)
-      when(col("parse_ok") && pred,
-        ClauseCompiler.hitStruct(rid, cl.head.name, lit(cl.map(_.score).sum), "sig"))
+      (col("parse_ok") && pred) ->
+        ClauseCompiler.hitStruct(rid, cl.head.name, lit(cl.map(_.score).sum), "sig")
     }
-    df.withColumn("hits_sig", array_compact(array(hitCols: _*)))
+    df.withColumn("hits_sig", ClauseCompiler.guarded(hits))
   }
 }
 
@@ -173,81 +193,151 @@ object SigRules {
   * (Left-outer + null-marker rather than left_anti because non-deviant rows
   * must flow through with empty hits, not be filtered.) */
 object RefCheck {
+  /** The reference dim: the distinct (field, ref_key, value) baselines. */
+  def dim(ref: DataFrame): DataFrame =
+    ref.select(col("field"), col("ref_key"), col("value")).distinct()
+
   def apply(df: DataFrame, ref: DataFrame, conf: PipelineConf): DataFrame = {
+    val d = dim(ref)
+    probe(df, f => d.filter(col("field") === f).drop("field"), conf)
+  }
+
+  /** The C5 joins against one field's (ref_key, value) rows of the [[dim]]
+    * (see [[IocEnrich.probe]]). */
+  private[graft] def probe(df: DataFrame, ofField: String => DataFrame,
+      conf: PipelineConf): DataFrame = {
     val RefFields = conf.refFields
     val joined = RefFields.foldLeft(df) { (acc, f) =>
-      val d = broadcast(ref.filter(col("field") === f)
-        .select(col("ref_key").as(s"_rk_$f"), col("value").as(s"_rv_$f"))
-        .distinct())
+      val d = broadcast(ofField(f)
+        .select(col("ref_key").as(s"_rk_$f"), col("value").as(s"_rv_$f")))
       acc.join(d, col("role") === col(s"_rk_$f") && col(f) === col(s"_rv_$f"),
         "left_outer").drop(s"_rk_$f")
     }
-    val hitCols = RefFields.map { f =>
-      when(col("parse_ok") && col(f).isNotNull && col(f) =!= "" &&
-        col(s"_rv_$f").isNull,
-        ClauseCompiler.hitStruct(0, s"ref:$f", lit(conf.refScore), "ref"))
+    val hits = RefFields.map { f =>
+      (col("parse_ok") && col(f).isNotNull && col(f) =!= "" &&
+        col(s"_rv_$f").isNull) ->
+        ClauseCompiler.hitStruct(0, s"ref:$f", lit(conf.refScore), "ref")
     }
-    joined.withColumn("hits_ref", array_compact(array(hitCols: _*)))
+    joined.withColumn("hits_ref", ClauseCompiler.guarded(hits))
       .drop(RefFields.map(f => s"_rv_$f"): _*)
   }
 }
 
-/** C6 first-seen (new-value check), batch form.
+/** C6 first-seen and C7 frequency: the two checks that compare a row with
+  * the rows before it. Both name one "first row" per group — the first row of
+  * each tracked (field, value), and the first row of the second in which a
+  * key's trailing count first reaches the threshold within a reset bucket —
+  * so they share one pass over the survivors:
   *
-  * NOT a `Window.partitionBy(value)` + row_number: a hot value (a user seen in
-  * millions of turns) would pile one giant window partition just to mark rank
-  * 1, and null values of garbage rows would pile another. Instead:
-  * aggregate each tracked field to `value → min(ts_us, conv_id, turn_idx)`
-  * (partial-aggregated map-side ⇒ skew-proof), anti-join the checkpointed
-  * `seen_values` state, and join the tiny firsts table back (AQE broadcasts it
-  * when small). */
-object FirstSeen {
-  /** `aux`: the row source used for the value→min-key aggregations — pass the
-    * PERSISTED upstream (e.g. post-whitelist survivors) so the slim aggs read
-    * pruned cached columns instead of recomputing the enrich chain. Must
-    * contain exactly the same rows as `df`. */
-  def apply(df: DataFrame, conf: PipelineConf,
+  *  1. each row yields one event per tracked field (parse_ok rows with a
+  *     non-empty value) and one frequency event (non-empty freqKey); ONE
+  *     aggregation by (check, value, second) gives each group's row count and
+  *     first row `min(ts_us, conv_id, turn_idx)` — partial-aggregated
+  *     map-side, so a hot value or conversation never funnels raw rows into
+  *     one partition (a `Window.partitionBy(value)` would);
+  *  2. one window pass over the per-group rows (tiny vs raw rows) gives each
+  *     key's trailing per-second count and its first raw second per reset
+  *     bucket;
+  *  3. the first rows are folded to per-row flags and joined back ONCE (a
+  *     tiny dim; AQE broadcasts it). A row is identified by (ts_us, conv_id,
+  *     turn_idx), which the pipeline takes to be unique.
+  *
+  * Cross-run state (resume): `seenValues` (field, value) pairs are not new;
+  * `priorCounts` per-(key, sec) counts extend the trailing window across a
+  * batch boundary; `firedBuckets` (key, reset-bucket) pairs do not fire again.
+  * `aux`: the row source of the aggregation — pass the PERSISTED upstream
+  * (the post-whitelist survivors) so it reads pruned cached columns instead
+  * of recomputing the enrich chain. Must contain exactly the same rows as
+  * `df`. */
+object NewAndFrequent {
+  private val Freq = "" // the frequency events' check tag (no field name)
+
+  def apply(df: DataFrame, conf: PipelineConf, tracked: Seq[String], freq: Boolean,
       seenValues: Option[DataFrame] = None,
+      priorCounts: Option[DataFrame] = None,
+      firedBuckets: Option[DataFrame] = None,
       aux: Option[DataFrame] = None): DataFrame = {
     val src = aux.getOrElse(df)
     val rowKey = struct(col("ts_us"), col("conv_id"), col("turn_idx"))
-    val withNew = conf.trackedFields.foldLeft(df) { (acc, f) =>
-      val cand = src.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
-      val firstsAll = cand.groupBy(col(f).as("_v"))
-        .agg(min(rowKey).as("_w"))
-      val firsts = seenValues match {
-        case Some(st) => firstsAll.join(
-          st.filter(col("field") === f).select(col("value").as("_v")),
-          Seq("_v"), "left_anti")
-        case None => firstsAll
+    def event(check: String, value: Column, sec: Column): Column =
+      struct(lit(check).as("_g"), value.cast("string").as("_k"), sec.as("_s"))
+    val events = tracked.map(f => event(f, when(col("parse_ok"), col(f)), lit(0L))) ++
+      (if (freq) Seq(event(Freq, col(conf.freqKey), col("ts_sec"))) else Nil)
+    val groups = src
+      .select(explode(array(events: _*)).as("_e"), rowKey.as("_r"))
+      .filter(col("_e._k").isNotNull && col("_e._k") =!= "")
+      .groupBy(col("_e._g").as("_g"), col("_e._k").as("_k"), col("_e._s").as("_s"))
+      .agg(count(lit(1)).as("_c"), min(col("_r")).as("_w"))
+    // prior seconds carry counts, but no row of this batch
+    val withPrior = priorCounts match {
+      case Some(p) => groups
+        .unionByName(p.select(lit(Freq).as("_g"), col("key").cast("string").as("_k"),
+          col("sec").as("_s"), col("cnt").as("_c"),
+          lit(null).cast(groups.schema("_w").dataType).as("_w")))
+        .groupBy("_g", "_k", "_s").agg(sum(col("_c")).as("_c"), min(col("_w")).as("_w"))
+      case None => groups
+    }
+    val unseen = seenValues match {
+      case Some(st) => withPrior.join(
+        st.select(col("field").as("_g"), col("value").cast("string").as("_k")),
+        Seq("_g", "_k"), "left_anti")
+      case None => withPrior
+    }
+    // a second is raw when the key's trailing count reaches the threshold; it
+    // fires when no earlier raw second shares its reset bucket. Both windows
+    // share one partitioning and order: one sort.
+    val firsts = if (!freq) unseen else {
+      val w = Window.partitionBy(col("_k"), col("_g")).orderBy(col("_s"))
+      val raw = unseen
+        .withColumn("_raw", col("_g") === Freq &&
+          sum(col("_c")).over(w.rangeBetween(-conf.freqWindowSec, 0)) >= conf.freqThreshold)
+        .withColumn("_b", floor(col("_s") / conf.freqResetSec))
+      val fired = raw
+        .withColumn("_pr", max(when(col("_raw"), col("_s")))
+          .over(w.rowsBetween(Window.unboundedPreceding, -1)))
+        .filter(col("_g") =!= Freq || (col("_raw") &&
+          (col("_pr").isNull || floor(col("_pr") / conf.freqResetSec) < col("_b"))))
+      firedBuckets match {
+        case Some(fb) => fired.join(
+          fb.select(lit(Freq).as("_g"), col("key").cast("string").as("_k"),
+            col("reset_bucket").as("_b")),
+          Seq("_g", "_k", "_b"), "left_anti")
+        case None => fired
       }
-      acc.join(firsts, col(f) === col("_v") && rowKey === col("_w"), "left_outer")
-        .withColumn(s"_new_$f", col("_w").isNotNull)
-        .drop("_v", "_w")
     }
-    val hitCols = conf.trackedFields.map { f =>
-      when(col(s"_new_$f"),
-        ClauseCompiler.hitStruct(0, s"new:$f", lit(conf.newValueScore), "new"))
-    }
-    withNew
-      .withColumn("hits_new", array_compact(array(hitCols: _*)))
-      .withColumn("first_seen",
-        conf.trackedFields.map(f => col(s"_new_$f")).reduce(_ || _))
-      .drop(conf.trackedFields.map(f => s"_new_$f"): _*)
+    // per first row, which checks it is first for
+    val checks = tracked ++ (if (freq) Seq(Freq) else Nil)
+    val marks = checks.indices.map(i => max(col("_g") === checks(i)).as(s"_m$i"))
+    val flags = firsts.filter(col("_w").isNotNull)
+      .groupBy(col("_w")).agg(marks.head, marks.tail: _*)
+    def flag(check: String): Column = coalesce(col(s"_m${checks.indexOf(check)}"), lit(false))
+    val joined = df.join(flags, rowKey === col("_w"), "left_outer")
+    val withNew = if (tracked.isEmpty) joined else joined
+      .withColumn("hits_new", ClauseCompiler.guarded(tracked.map(f => flag(f) ->
+        ClauseCompiler.hitStruct(0, s"new:$f", lit(conf.newValueScore), "new"))))
+      .withColumn("first_seen", tracked.map(flag).reduce(_ || _))
+    val withFreq = if (!freq) withNew else withNew
+      .withColumn("freq_hit", flag(Freq))
+      .withColumn("hits_freq",
+        when(col("freq_hit"),
+          array(ClauseCompiler.hitStruct(0, "freq", lit(conf.freqScore), "freq")))
+          .otherwise(array().cast("array<struct<rule_id:int,name:string,score:int,kind:string>>")))
+    withFreq.drop(("_w" +: checks.indices.map(i => s"_m$i")): _*)
   }
 }
 
-/** C7 frequency check at second resolution, two-phase for skew:
-  * (1) per-(key, second) counts — partial aggregation gives map-side combine,
-  *     so a hot conversation never funnels raw rows into one partition;
-  * (2) trailing-window sum over the per-second series (tiny vs raw rows),
-  *     joined back on (key, second) — finer-grained than key alone.
-  * Re-fire suppression: first raw-hit row per (key, reset-bucket).
-  *
-  * Cross-run state (resume): `priorCounts` = per-(key, sec) counts from
-  * earlier runs (so a conversation spanning a batch boundary still counts its
-  * trailing window), `firedBuckets` = (key, reset-bucket) pairs that already
-  * fired (re-fire suppression survives the boundary). */
+/** C6 first-seen (new-value check): [[NewAndFrequent]] for the tracked fields
+  * alone. Adds `hits_new` and `first_seen`. */
+object FirstSeen {
+  def apply(df: DataFrame, conf: PipelineConf,
+      seenValues: Option[DataFrame] = None,
+      aux: Option[DataFrame] = None): DataFrame =
+    NewAndFrequent(df, conf, conf.trackedFields, freq = false,
+      seenValues = seenValues, aux = aux)
+}
+
+/** C7 frequency check at second resolution: [[NewAndFrequent]] for the
+  * frequency key alone. Adds `freq_hit` and `hits_freq`. */
 object Frequency {
   /** Per-(key, sec) counts of this batch — also the freq state delta.
     * Rows with a NULL/empty key carry no frequency identity (a configurable
@@ -258,62 +348,12 @@ object Frequency {
       .groupBy(col(conf.freqKey).as("_k"), col("ts_sec").as("_s"))
       .agg(count(lit(1)).as("_c"))
 
-  /** `aux`: same-rows slim source for the per-sec counts and firing-row
-    * aggregations (pass the persisted upstream; see FirstSeen.aux). */
   def apply(df: DataFrame, conf: PipelineConf,
       priorCounts: Option[DataFrame] = None,
       firedBuckets: Option[DataFrame] = None,
-      aux: Option[DataFrame] = None): DataFrame = {
-    val key = col(conf.freqKey)
-    val src = aux.getOrElse(df)
-    val batchCounts = perSecCounts(src, conf)
-    val perSec = priorCounts match {
-      case Some(p) => batchCounts
-        .unionByName(p.select(col("key").as("_k"), col("sec").as("_s"), col("cnt").as("_c")))
-        .groupBy("_k", "_s").agg(sum(col("_c")).as("_c"))
-      case None => batchCounts
-    }
-    // trailing count + re-fire suppression computed ENTIRELY at per-second
-    // grain (tiny vs raw rows — no full-row sort/window needed):
-    //   _raw       per (key, sec): trailing count ≥ threshold
-    //   _frs       per (key, reset-bucket): earliest raw second (minus
-    //              already-fired buckets from prior runs)
-    val w = Window.partitionBy(col("_k")).orderBy(col("_s"))
-      .rangeBetween(-conf.freqWindowSec, 0)
-    val cnt = perSec
-      .withColumn("_cnt", sum(col("_c")).over(w))
-      .withColumn("_raw", col("_cnt") >= conf.freqThreshold)
-      .withColumn("_b", floor(col("_s") / conf.freqResetSec))
-      .select("_k", "_s", "_raw", "_b")
-    val rawSecs = cnt.filter(col("_raw"))
-    val unfired = firedBuckets match {
-      case Some(fb) => rawSecs.join(
-        fb.select(col("key").as("_k"), col("reset_bucket").as("_b")),
-        Seq("_k", "_b"), "left_anti")
-      case None => rawSecs
-    }
-    val firstRawSec = unfired.groupBy("_k", "_b").agg(min(col("_s")).as("_frs"))
-    // the single firing row per (key, first-raw-sec) = min (ts_us, conv_id,
-    // turn_idx) — aggregated from the slim source (skew-proof, pruned read)
-    val rowKey = struct(col("ts_us"), col("conv_id"), col("turn_idx"))
-    val firstRow = src
-      .join(firstRawSec.select(col("_k").as("_fk"), col("_frs").as("_fs")),
-        key === col("_fk") && col("ts_sec") === col("_fs"), "inner")
-      .groupBy(col("_fk"), col("_fs"))
-      .agg(min(rowKey).as("_fw"))
-    // the main stream is consumed exactly ONCE: a single join attaching the
-    // firing-row key (tiny dim; AQE broadcasts it)
-    val withHit = df.join(firstRow,
-      key === col("_fk") && col("ts_sec") === col("_fs") && rowKey === col("_fw"),
-      "left_outer")
-      .withColumn("freq_hit", col("_fw").isNotNull)
-      .drop("_fk", "_fs", "_fw")
-    withHit
-      .withColumn("hits_freq",
-        when(col("freq_hit"),
-          array(ClauseCompiler.hitStruct(0, "freq", lit(conf.freqScore), "freq")))
-          .otherwise(array().cast("array<struct<rule_id:int,name:string,score:int,kind:string>>")))
-  }
+      aux: Option[DataFrame] = None): DataFrame =
+    NewAndFrequent(df, conf, Nil, freq = true, priorCounts = priorCounts,
+      firedBuckets = firedBuckets, aux = aux)
 }
 
 /** C8 scoring + severity banding. note = Σ hit scores via the higher-order

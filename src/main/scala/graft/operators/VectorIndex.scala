@@ -149,10 +149,14 @@ object IvfTrain {
     * Bench (sf0.1, min): ann_ivf_trained 1.52→1.22, ann_ivf_index
     * 2.66→1.68, ann_ivf_append 3.39→2.45 (ledger: OPTIMIZATION_r06.md). */
   def nearest(ep: DataFrame, cents: Seq[Centroid], n: Int): DataFrame = {
+    // a zero-norm vector or centroid has no cosine: it ranks -Infinity (as
+    // does a NaN one), so the comparator stays a total order and such a
+    // vector goes to the lowest cid
+    val noCosine = lit(Double.NegativeInfinity)
     val scored = array(cents.map(c =>
       struct(
-        (ArrayDot.dot(col("vd"), typedlit(c.cv.toSeq))
-          / (col("nd") * lit(c.cn))).as("cs"),
+        nanvl(coalesce(try_divide(ArrayDot.dot(col("vd"), typedlit(c.cv.toSeq)),
+          col("nd") * lit(c.cn)), noCosine), noCosine).as("cs"),
         lit(c.cid).as("cid"))): _*)
     val top = slice(array_sort(scored, (l, r) =>
       when(l.getField("cs") > r.getField("cs"), -1)

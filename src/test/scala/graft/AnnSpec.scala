@@ -209,4 +209,30 @@ class AnnSpec extends SparkSuite {
     assert(got.size === e.count())
     assert(got === rows(full))
   }
+
+  test("zero-norm vector and centroid rank -Infinity: assignment is deterministic") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.IvfTrain
+    import graft.operators.IvfTrain.Centroid
+    import spark.implicits._
+    val vecs = Seq(
+      (0L, Seq(0f, 0f, 0f)), // zero norm: no cosine to any centroid
+      (1L, Seq(1f, 0.1f, 0f)),
+      (2L, Seq(0.1f, 1f, 0f)),
+      (3L, Seq(0f, 0f, 0f)))
+    val ep = IvfTrain.prepared(vecs.toDF("vec_id", "embedding"))
+    // cid 0 has zero norm: never chosen while another centroid has a cosine
+    val cents = Seq(Centroid(0, Array(0.0, 0.0, 0.0), 0.0),
+      Centroid(1, Array(1.0, 0.0, 0.0), 1.0), Centroid(2, Array(0.0, 1.0, 0.0), 1.0))
+    def assigned(df: org.apache.spark.sql.DataFrame) = IvfTrain.assign(df, cents)
+      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val want = Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 0)
+    assert(assigned(ep) === want)
+    assert(assigned(ep.repartition(3)) === want)
+    assert(assigned(ep.orderBy(desc("vec_id")).coalesce(1)) === want)
+    // all probes of a zero vector: every cosine -Infinity, ranked by cid
+    val probes = IvfTrain.nearest(ep.filter(col("vec_id") === 0L), cents, 3)
+      .select("cid", "cs").collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
+    assert(probes === Seq(0, 1, 2).map(_ -> Double.NegativeInfinity))
+  }
 }

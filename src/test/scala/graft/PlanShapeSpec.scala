@@ -12,8 +12,8 @@ import graft.model._
   *    times the fixed aux-branch print factor);
   *  - zero CartesianProduct anywhere;
   *  - every Window node is one of the two sanctioned forms — the C1 dedup
-  *    row_number over (fp, bucket) or the C7 trailing sum over
-  *    PRE-AGGREGATED per-second counts (partitioned by _k) — never a raw-row
+  *    row_number over (fp, bucket) or a C7 window (trailing sum, earlier raw
+  *    second) over PRE-AGGREGATED per-second counts (partitioned by _k) — never a raw-row
   *    window keyed by the hot frequency key alone;
   *  - rule/IOC/ref lookups stay broadcast hash joins.
   */
@@ -30,12 +30,17 @@ class PlanShapeSpec extends SparkSuite {
     def n(token: String): Int = token.r.findAllIn(plan).size
 
     // pinned EXACTLY — if a change moves these, it must be a conscious
-    // decision that updates this test (and the SURVEY §3.2 budget note)
-    assert(n("Exchange hashpartitioning") === 18,
+    // decision that updates this test (and the SURVEY §3.2 budget note).
+    // Hash shuffles: C1's dedup window, printed twice (main chain + the
+    // C6/C7 aux read), and C6/C7's three — the (check, value, second)
+    // aggregation, the per-second window and the per-row flags. The IOC/ref
+    // dims are local rows (no aggregation), so 7 broadcasts: 4 IOC
+    // kinds, 2 ref fields, 1 C6/C7 flags join-back.
+    assert(n("Exchange hashpartitioning") === 5,
       s"shuffle Exchange count drifted: ${n("Exchange hashpartitioning")}\n$plan")
-    assert(n("BroadcastExchange") === 9,
+    assert(n("BroadcastExchange") === 7,
       s"broadcast count drifted: ${n("BroadcastExchange")}")
-    assert(n("BroadcastHashJoin") === 9, "dim lookups must stay broadcast joins")
+    assert(n("BroadcastHashJoin") === 7, "dim lookups must stay broadcast joins")
     assert(n("SortMergeJoin") <= 1, "at most the one stateful join-back as SMJ")
     assert(n("CartesianProduct") === 0, "cartesian product crept in")
 
@@ -74,6 +79,34 @@ class PlanShapeSpec extends SparkSuite {
         s"expected one InMemoryRelation, got ${reads.map(_.cacheBuilder).distinct.size}")
     } finally cleanup()
     assert(!survivorsCached, "cleanup() left the survivors cached")
+  }
+
+  test("enrichPlanned: no Aggregate or Exchange over the ioc/ref rule-table scans") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val dir = java.nio.file.Files.createTempDirectory("graft-rules").toString
+    Gen.writeRuleTables(spark, dir)
+    val conf = Gen.defaultConf
+    // parquet-backed rule tables, as a deployment reads them
+    val tb = graft.sources.Source.readRuleTables(spark, conf, dir)
+    val (planned, cleanup) = Pipeline.enrichPlanned(
+      spark.createDataset(Gen.fixture(60).turns).toDF(), tb, conf)
+    try {
+      planned.collect()
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      def readsRules(p: SparkPlan): Boolean = aqe.collect(p) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+      }.nonEmpty
+      val plan = planned.queryExecution.executedPlan
+      val overRules = aqe.collectWithSubqueries(plan) {
+        case a: BaseAggregateExec if readsRules(a) => a.nodeName
+        case e: ShuffleExchangeLike if readsRules(e) => e.nodeName
+      }
+      assert(overRules.isEmpty,
+        s"the pass re-derives rule dims (${overRules.mkString(", ")}):\n$plan")
+    } finally cleanup()
   }
 
   test("r4 query plans: IVF probe side broadcasts, no cartesian product in the new operators") {

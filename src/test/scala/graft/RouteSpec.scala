@@ -47,6 +47,35 @@ class RouteSpec extends SparkSuite {
       s"sink rollup scan must prune to (severity, routed):\n$sinkPlan")
   }
 
+  test("rollup_sink written from the route counts == rollupBySink, both routes") {
+    val fx = Gen.fixture(200)
+    val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
+    val turns = spark.createDataset(fx.turns).toDF()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    // default bands: low/medium sit under the FIR threshold, so they have no
+    // routed rows and no rollup row; an unreachable threshold routes nothing
+    Seq(fx.conf, fx.conf.copy(firThreshold = Int.MaxValue)).foreach { conf =>
+      val enriched = Pipeline.enrich(turns, tb, conf)
+      val want = Pipeline.rollupBySink(enriched)
+      val d1 = Files.createTempDirectory("graft-rollup-route").toString
+      val d2 = Files.createTempDirectory("graft-rollup-routevt").toString
+      Pipeline.route(spark, enriched, conf, d1)
+      Pipeline.routeViaTable(spark, enriched, conf, d2)
+      Seq(d1, d2).foreach { d =>
+        val got = spark.read.parquet(s"$d/rollup_sink")
+        assert(typed(got) === typed(want), s"rollup_sink schema in $d")
+        assert(rows(got) === rows(want), s"rollup_sink rows in $d")
+      }
+      if (conf.firThreshold == Int.MaxValue) assert(rows(want).isEmpty)
+      else {
+        assert(rows(want).nonEmpty)
+        assert(!rows(want).map(_._1).contains("low"), "a severity without routed rows has no row")
+      }
+    }
+  }
+
   test("sinkFormat seam: orc sinks carry identical counts and alert docs") {
     val fx = Gen.fixture(120)
     val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
