@@ -211,6 +211,12 @@ object Incremental {
     }
   }
 
+  /** What the state snapshots and the lineage read of every enriched row
+    * (the alert sink reads routed rows, which [[Pipeline.sinkView]] keeps
+    * whole). */
+  private[graft] def stateReads(conf: PipelineConf): Seq[String] =
+    conf.trackedFields ++ Seq(conf.freqKey, "ts_sec", "parse_ok", "freq_hit", "_file")
+
   /** Run one batch with state, write sinks + state snapshot + manifest. */
   def run(spark: SparkSession, turns: DataFrame, tables: RuleTables,
       conf: PipelineConf, stateDir: String, outDir: String,
@@ -244,8 +250,10 @@ object Incremental {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val survivors = deduped.filter(!col("_wl")).drop("_wl")
     val severities = conf.severityBands.map(_._2)
-    // max ts_sec rides the same observation: the time boundary of this batch
-    val enriched = Pipeline.scoreSurvivors(survivors, tables, conf, state)
+    // max ts_sec rides the same observation: the time boundary of this batch.
+    // Cached as the sink view: unrouted rows keep only the state columns
+    val enriched = Pipeline.sinkView(
+        Pipeline.scoreSurvivors(survivors, tables, conf, state), stateReads(conf))
       .observe(obsOut, count(lit(1)).as("n_enriched"),
         max(col("ts_sec")).as("max_sec") +: Pipeline.sinkCountCols(conf, "sink_"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

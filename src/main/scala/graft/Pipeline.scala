@@ -235,6 +235,24 @@ object Pipeline {
         conf.sinkFormat, s"$outDir/rollup_sink")))
   }
 
+  /** The rows a C9 writer reads, narrowed to what it reads of them: routed
+    * rows keep every column (the alert docs), every other row keeps `routed`,
+    * `severity` and the `alsoRead` columns its non-alert writers read, and
+    * the rest are null. Same rows, same column types; a plain projection, so
+    * it compiles into the last codegen stage of the plan below it.
+    * `severity` stays whole (a few bytes per row in the columnar cache): as a
+    * nullable partition column it would make every `alerts_all` write plan
+    * one more projection and generated class. */
+  private[graft] def sinkView(enriched: DataFrame, alsoRead: Seq[String]): DataFrame = {
+    val keep = alsoRead.toSet + "routed" + "severity"
+    enriched.select(enriched.columns.toSeq.map(c =>
+      if (keep(c)) col(c) else when(col("routed"), col(c)).as(c)): _*)
+  }
+
+  /** What [[route]]'s non-alert writers read of an unrouted row:
+    * `rollup_signature`'s hits and conversations. */
+  private[graft] val routeReads: Seq[String] = Seq("conv_id", "hits")
+
   /** `n_total` + the `n_<severity>` sink counts, and their result map. */
   private def routeCountCols(conf: PipelineConf): Seq[Column] =
     count(lit(1)).as("n_total") +: sinkCountCols(conf, "n_")
@@ -243,9 +261,10 @@ object Pipeline {
       ("total" -> m("n_total").asInstanceOf[Long])
 
   /** Write-once C9 fan-out for very large batches (SURVEY §2.9 R2 at
-    * 100 TB): [[route]]'s MEMORY_AND_DISK persist of the full-width enriched
-    * set is right for in-memory-sized batches but becomes a 100-TB spill at
-    * target scale. Here `enriched` is written EXACTLY ONCE to
+    * 100 TB): [[route]]'s MEMORY_AND_DISK persist keeps every routed row
+    * whole and four columns of the rest, which is right for in-memory-sized
+    * batches but still grows with the batch at target scale. Here `enriched`
+    * is written EXACTLY ONCE to
     * `outDir/enriched` (salted for balanced files), and alerts + rollups are
     * derived from the WRITTEN table — each derivation is a column-pruned
     * parquet scan (hits/conv_id for the signature rollup, severity/routed
@@ -274,12 +293,17 @@ object Pipeline {
 
   /** C9 fan-out: ONE pass over the enriched rows (persist), then K filtered
     * sink writes + alerts_all partitioned by severity (SURVEY §2.9 R2 — never
-    * K source re-reads). Returns per-sink counts from `observe` metrics,
-    * plus "total" = all enriched rows; `rollup_sink` is written from them. */
+    * K source re-reads). What is persisted is the [[sinkView]]: routed rows
+    * whole, unrouted rows only `routed`, `severity` and the [[routeReads]]
+    * columns (the rollup's hits and conversations), so the cache grows with
+    * the alerts, not with the full width of every turn. Returns per-sink
+    * counts from `observe` metrics, plus "total" = all enriched rows;
+    * `rollup_sink` is written from them. */
   def route(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
     import org.apache.spark.sql.Observation
-    val cached = enriched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = sinkView(enriched, routeReads)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val obs = Observation("sinks")
       val aggs = routeCountCols(conf)

@@ -298,7 +298,11 @@ object StreamPipeline {
     }
 
   /** Drain `stream` once (AvailableNow), running each micro-batch under its
-    * batch id unless that run's manifest already landed; returns the ids run. */
+    * batch id unless that run's manifest already landed; returns the ids run.
+    * Spark hands each micro-batch over bound to the query's own clone of the
+    * session; `run` gets it re-bound to `stream`'s session, so its jobs reuse
+    * that session's generated classes instead of compiling them again for
+    * every streaming query. */
   private def eachNewBatch(stream: DataFrame, stateDir: String,
       checkpointDir: String)(run: (DataFrame, String) => Unit): Seq[String] = {
     val ran = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -309,7 +313,7 @@ object StreamPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val runId = f"$batchId%06d"
         if (!graft.Incremental.completedRuns(stateDir).contains(runId)) {
-          run(batch, runId)
+          run(org.apache.spark.sql.graftbridge.inSession(stream.sparkSession, batch), runId)
           ran += runId
         }
         ()

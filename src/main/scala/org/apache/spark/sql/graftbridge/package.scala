@@ -9,4 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 package object graftbridge {
   def columnOf(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df`'s plan as a DataFrame of `session`. Jobs of the result run under
+    * `session`, so they share its generated classes (the codegen cache is
+    * keyed by class loader, and each session has its own). */
+  def inSession(session: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.queryExecution.logical)
 }

@@ -51,6 +51,40 @@ class IncrementalSpec extends SparkSuite {
 
     assert(split === single)
     assert(r1.metrics("n_input") === a.size.toLong)
+
+    // run 0001 caches the narrowed sink view; its alerts and state snapshots
+    // equal those derived from A's full enriched frame
+    assert(comparable(Incremental.readAlerts(spark, stateDir, outDir)) ===
+      comparable(enrichedA.filter(col("routed"))))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSet
+    def snapshot(t: String, cols: String*) =
+      rows(Incremental.stateTable(spark, stateDir, t).get.select(cols.map(col): _*))
+    val c = fx.conf
+    val maxSec = enrichedA.agg(max(col("ts_sec"))).first().getLong(0)
+    assert(snapshot("seen_values", "field", "value") === rows(c.trackedFields.map(f =>
+      enrichedA.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
+        .select(lit(f), col(f))).reduce(_ union _)))
+    assert(snapshot("freq_counts", "key", "sec", "cnt") === rows(
+      graft.operators.Frequency.perSecCounts(enrichedA, c).filter(col("_s") >= maxSec - c.freqWindowSec)
+        .select(col("_k"), col("_s"), col("_c").cast("long"))))
+    assert(snapshot("fired", "key", "reset_bucket") === rows(enrichedA.filter(col("freq_hit"))
+      .select(col(c.freqKey), floor(col("ts_sec") / c.freqResetSec).as("b"))
+      .filter(col("b") >= Math.floorDiv(maxSec, c.freqResetSec))))
+  }
+
+  test("Incremental.run's sink view: an unrouted row carries only the state columns") {
+    val fx = Gen.fixture(120)
+    val enriched = Pipeline.enrich(spark.createDataset(fx.turns).toDF(), tables(fx), fx.conf)
+      .withColumn("_file", lit("part-0.parquet"))
+    val reads = Incremental.stateReads(fx.conf)
+    val unrouted = Pipeline.sinkView(enriched, reads).filter(!col("routed")).collect()
+    assert(unrouted.nonEmpty)
+    val kept = reads.toSet + "routed" + "severity"
+    unrouted.foreach { r =>
+      val present = r.schema.fieldNames.filterNot(f => r.isNullAt(r.fieldIndex(f))).toSet
+      assert(present.subsetOf(kept), s"unrouted row keeps ${present -- kept}")
+      assert(Seq("ts_sec", "parse_ok", "freq_hit", "_file", "routed").forall(present))
+    }
   }
 
   test("second Incremental.run consumes state; alerts append; manifests track runs") {

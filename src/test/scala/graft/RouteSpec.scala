@@ -76,6 +76,41 @@ class RouteSpec extends SparkSuite {
     }
   }
 
+  test("route caches the sink view: unrouted rows narrowed, sinks equal the full frame's") {
+    val fx = Gen.fixture(200)
+    val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
+    val turns = spark.createDataset(fx.turns).toDF()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    // an unreachable FIR threshold routes nothing: every row is narrowed
+    Seq(fx.conf, fx.conf.copy(firThreshold = Int.MaxValue)).foreach { conf =>
+      val enriched = Pipeline.enrich(turns, tb, conf)
+      val view = Pipeline.sinkView(enriched, Pipeline.routeReads)
+      assert(view.schema.map(f => f.name -> f.dataType) ===
+        enriched.schema.map(f => f.name -> f.dataType))
+      val unrouted = view.filter(!col("routed"))
+      assert(unrouted.count() > 0)
+      assert(unrouted.filter(col("text").isNotNull || col("fp").isNotNull ||
+        col("note").isNotNull || col("conv_id").isNull || col("hits").isNull ||
+        col("severity").isNull).count() === 0,
+        "an unrouted row keeps only routed, severity, conv_id and hits")
+      assert(rows(view.filter(col("routed"))) === rows(enriched.filter(col("routed"))))
+
+      val d = Files.createTempDirectory("graft-route-view").toString
+      val counts = Pipeline.route(spark, enriched, conf, d)
+      val n = enriched.agg(count(lit(1)), Pipeline.sinkCountCols(conf, "n_"): _*).first()
+      assert(counts === (conf.severityBands.map(_._2).zipWithIndex
+        .map { case (s, i) => s -> n.getLong(i + 1) }.toMap + ("total" -> n.getLong(0))))
+      val full = Pipeline.alertDocs(enriched.filter(col("routed")))
+      // the known schema: an empty alerts_all has no partition to infer from
+      val docs = spark.read.schema(full.schema).parquet(s"$d/alerts_all")
+      assert(rows(docs.select(full.columns.map(col): _*)) === rows(full))
+      assert(rows(spark.read.parquet(s"$d/rollup_signature")) ===
+        rows(Pipeline.rollupBySignature(enriched)))
+      assert(rows(spark.read.parquet(s"$d/rollup_sink")) === rows(Pipeline.rollupBySink(enriched)))
+    }
+  }
+
   test("sinkFormat seam: orc sinks carry identical counts and alert docs") {
     val fx = Gen.fixture(120)
     val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)

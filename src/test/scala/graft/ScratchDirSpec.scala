@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.entry.DataPipeQueries
 
 /** Prints the scratch dir a fresh Spark application gets (run in a child JVM
@@ -23,16 +21,9 @@ class ScratchDirSpec extends SparkSuite {
     // a session of the same application reuses (and overwrites) its dir
     assert(DataPipeQueries.scratchDir(spark.newSession(), name) === here)
 
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.ScratchDirApp", name)
-    val out = new StringBuilder
-    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
-      l => out.append(l).append('\n'), _ => ()))
-    assert(exit === 0, s"child JVM failed:\n$out")
-    val other = out.toString.linesIterator.collectFirst {
+    val (exit, out, _) = ChildJvm.run("graft.ScratchDirApp", Seq(name))
+    assert(exit === 0, s"child JVM failed:\n${out.mkString("\n")}")
+    val other = out.collectFirst {
       case l if l.startsWith("SCRATCH ") => l.stripPrefix("SCRATCH ")
     }
     assert(other.exists(o => o.contains(s"$name-local-") && o != here),

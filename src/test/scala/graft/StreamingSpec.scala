@@ -2,12 +2,33 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.fixtures.Gen
 import graft.streaming.StreamPipeline
+
+object StreamingSpec {
+  /** One parquet file per part in a new dir, with ascending mtimes: a file
+    * stream with `maxFilesPerTrigger` 1 reads them as one micro-batch each,
+    * in this order (FileStreamSource orders new files by mtime). */
+  def timeOrderedFiles(spark: SparkSession, parts: Seq[Seq[graft.model.Turn]]): String = {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-stream-parts").toString
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val tmp = Files.createTempDirectory("graft-stream-part").toString
+      spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
+      val src = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
+      Files.move(src.toPath, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+    }
+    base
+  }
+}
 
 /** Streaming vs batch: the composed stream (runFull) equals the batch
   * pipeline across micro-batch boundaries, and the sessionize twin closes
@@ -36,23 +57,12 @@ class StreamingSpec extends SparkSuite {
 
   test("composed end-to-end stream (ONE readStream → C1→C9 per micro-batch with state) == batch pipeline EXACTLY") {
     // three time-ordered files → three ascending micro-batches (the
-    // Incremental contract); distinct mtimes pin FileStreamSource order
-    val base = Files.createTempDirectory("graft-e2e-in").toString
+    // Incremental contract)
     val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
     val n = sorted.size
     val parts = Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3),
       sorted.slice(2 * n / 3, n))
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val tmp = Files.createTempDirectory("graft-e2e-part").toString
-      spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      ()
-    }
+    val base = StreamingSpec.timeOrderedFiles(spark, parts)
     val stream = spark.readStream
       .schema(spark.read.parquet(base).schema)
       .option("maxFilesPerTrigger", "1")

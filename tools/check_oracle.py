@@ -4,9 +4,13 @@ dumped by graft.Verify, run its oracle SQL in DuckDB over the same testdata
 tables and compare (columns sorted by name, rows sorted, values normalized).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+Each query's line carries its time in DuckDB, in reading the Spark output
+and in normalize+compare; the run ends with the ten slowest queries.
 """
 import json
 import sys
+import time
 
 import duckdb
 import numpy as np
@@ -45,46 +49,66 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    n_ok, fails = 0, []
+    n_ok, fails, times = 0, [], []
     for name in sorted(oracle):
-        sql = oracle[name]
-        try:
-            want = con.execute(sql).fetchdf()
-        except Exception as e:
-            fails.append((name, f"duckdb error: {e}"))
-            continue
-        try:
-            got = pd.read_parquet(f"{outdir}/{name}")
-        except Exception as e:
-            fails.append((name, f"spark output missing: {e}"))
-            continue
-        w, g = norm(want), norm(got)
-        if sorted(w.columns) != sorted(g.columns):
-            fails.append((name, f"columns differ: duck={list(w.columns)} spark={list(g.columns)}"))
-            continue
-        if len(w) != len(g):
-            fails.append((name, f"row count: duck={len(w)} spark={len(g)}"))
-            continue
-        diff_cols = []
-        for c in w.columns:
-            a, b = w[c], g[c]
-            if np.issubdtype(a.dtype, np.floating) or np.issubdtype(b.dtype, np.floating):
-                eq = np.isclose(a.astype(float), b.astype(float),
-                                rtol=1e-9, atol=1e-9, equal_nan=True)
-            else:
-                eq = (a.astype(str).fillna("∅") == b.astype(str).fillna("∅"))
-            if not bool(np.all(eq)):
-                i = int(np.argmin(eq))
-                diff_cols.append(f"{c}[row{i}]: duck={a.iloc[i]!r} spark={b.iloc[i]!r}")
-        if diff_cols:
-            fails.append((name, "; ".join(diff_cols[:3])))
-        else:
+        why = compare(con, oracle[name], f"{outdir}/{name}", name, times)
+        if why is None:
             n_ok += 1
-            print(f"OK   {name} ({len(w)} rows)")
+        else:
+            fails.append((name, why))
+        duck, read, cmp = times[-1][1:]
+        print(f"     {name}: duckdb {duck:.2f}s  spark read {read:.2f}s  "
+              f"normalize+compare {cmp:.2f}s")
     for name, why in fails:
         print(f"FAIL {name}: {why}")
+    print("\nslowest queries (duckdb / spark read / normalize+compare, s):")
+    for name, duck, read, cmp in sorted(times, key=lambda t: -sum(t[1:]))[:10]:
+        print(f"  {name:40s} {sum((duck, read, cmp)):8.2f}  = {duck:.2f} / {read:.2f} / {cmp:.2f}")
     print(f"\n{n_ok}/{len(oracle)} queries match")
     sys.exit(1 if fails else 0)
+
+
+def compare(con, sql, path, name, times):
+    """None if the Spark output at `path` matches the oracle SQL, else why
+    not; appends (name, duckdb s, read s, normalize+compare s) to `times`."""
+    t = [time.perf_counter()]
+    def lap():
+        t.append(time.perf_counter())
+    def done(why):
+        while len(t) < 4:
+            lap()
+        times.append((name, t[1] - t[0], t[2] - t[1], t[3] - t[2]))
+        return why
+    try:
+        want = con.execute(sql).fetchdf()
+    except Exception as e:
+        return done(f"duckdb error: {e}")
+    lap()
+    try:
+        got = pd.read_parquet(path)
+    except Exception as e:
+        return done(f"spark output missing: {e}")
+    lap()
+    w, g = norm(want), norm(got)
+    if sorted(w.columns) != sorted(g.columns):
+        return done(f"columns differ: duck={list(w.columns)} spark={list(g.columns)}")
+    if len(w) != len(g):
+        return done(f"row count: duck={len(w)} spark={len(g)}")
+    diff_cols = []
+    for c in w.columns:
+        a, b = w[c], g[c]
+        if np.issubdtype(a.dtype, np.floating) or np.issubdtype(b.dtype, np.floating):
+            eq = np.isclose(a.astype(float), b.astype(float),
+                            rtol=1e-9, atol=1e-9, equal_nan=True)
+        else:
+            eq = (a.astype(str).fillna("∅") == b.astype(str).fillna("∅"))
+        if not bool(np.all(eq)):
+            i = int(np.argmin(eq))
+            diff_cols.append(f"{c}[row{i}]: duck={a.iloc[i]!r} spark={b.iloc[i]!r}")
+    if diff_cols:
+        return done("; ".join(diff_cols[:3]))
+    print(f"OK   {name} ({len(w)} rows)")
+    return done(None)
 
 
 if __name__ == "__main__":
