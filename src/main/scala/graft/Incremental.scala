@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -211,12 +211,6 @@ object Incremental {
     }
   }
 
-  /** What the state snapshots and the lineage read of every enriched row
-    * (the alert sink reads routed rows, which [[Pipeline.sinkView]] keeps
-    * whole). */
-  private[graft] def stateReads(conf: PipelineConf): Seq[String] =
-    conf.trackedFields ++ Seq(conf.freqKey, "ts_sec", "parse_ok", "freq_hit", "_file")
-
   /** Run one batch with state, write sinks + state snapshot + manifest. */
   def run(spark: SparkSession, turns: DataFrame, tables: RuleTables,
       conf: PipelineConf, stateDir: String, outDir: String,
@@ -225,11 +219,12 @@ object Incremental {
 
     // --- plan with observe() metrics at each stage boundary.
     // IMPORTANT: every observe node must sit BELOW a persist boundary —
-    // FirstSeen/Frequency reference `survivors` several times (aux fan-out),
-    // and a CollectMetrics node duplicated through those references reports
-    // NO metrics at all (observed empirically on Spark 4.1). Persisting the
-    // observed node makes downstream references hit the InMemoryRelation, so
-    // each observation executes exactly once.
+    // `survivors` is read several times (the C3→C8 chain, NewAndFrequent's
+    // aggregation in the chain and again in the seen/freq/fired snapshots,
+    // the lineage), and a CollectMetrics node duplicated through those
+    // references reports NO metrics at all (observed empirically on Spark
+    // 4.1). Persisting the observed node makes downstream references hit the
+    // InMemoryRelation, so each observation executes exactly once.
     val obsIn = Observation(s"in-$runId")
     val obsDedup = Observation(s"dedup-$runId")
     val obsOut = Observation(s"out-$runId")
@@ -250,17 +245,18 @@ object Incremental {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val survivors = deduped.filter(!col("_wl")).drop("_wl")
     val severities = conf.severityBands.map(_._2)
-    // max ts_sec rides the same observation: the time boundary of this batch.
-    // Cached as the sink view: unrouted rows keep only the state columns
-    val enriched = Pipeline.sinkView(
-        Pipeline.scoreSurvivors(survivors, tables, conf, state), stateReads(conf))
+    val (scored, next) = Pipeline.scoreSurvivors(survivors, tables, conf, state)
+    // the observation sees every scored row (max ts_sec is the time boundary
+    // of this batch); only the routed rows, the alert sink's, are cached
+    val routed = scored
       .observe(obsOut, count(lit(1)).as("n_enriched"),
         max(col("ts_sec")).as("max_sec") +: Pipeline.sinkCountCols(conf, "sink_"): _*)
+      .filter(col("routed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // lineage: exact input files this run consumed, written distributed
     // (never an O(files) driver collect — at 100 TB that's millions of
     // entries). The manifest records the count + a bounded sample.
-    val files = enriched.select(col("_file").as("file")).distinct()
+    val files = survivors.select(col("_file").as("file")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -268,15 +264,17 @@ object Incremental {
       // file writes do not reliably deliver observe() metrics when the
       // written subset is empty (verified on Spark 4.1), a plain count does.
       // Every downstream job below then reads the caches.
-      val nEnriched = enriched.count()
+      val nRouted = routed.count()
       val m = obsIn.get ++ obsDedup.get ++ obsOut.get
       // an EMPTY batch folds the CollectMetrics nodes away entirely
       // (PropagateEmptyRelation) — all counters are genuinely 0 then; any
-      // other metric loss is a bug and must fail loud
+      // other metric loss is a bug and must fail loud. Rows were scored if
+      // any survived the whitelist (or, with that counter lost, were routed).
+      val nScored = m.get("n_survivors").fold(nRouted)(_.asInstanceOf[Long])
       val expectedKeys = Seq("n_input", "n_parse_ok", "n_after_dedup",
         "n_survivors", "n_enriched") ++ severities.map(s => s"sink_$s")
-      require(nEnriched == 0L || expectedKeys.forall(m.contains),
-        s"observed metrics lost for a non-empty batch ($nEnriched rows): " +
+      require(nScored == 0L || expectedKeys.forall(m.contains),
+        s"observed metrics lost for a non-empty batch ($nScored rows): " +
           s"missing ${expectedKeys.filterNot(m.contains).mkString(",")}")
       val metrics0 = expectedKeys.map(k =>
         k -> m.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
@@ -287,7 +285,7 @@ object Incremental {
       // sinks: alert documents partitioned by (run_id, severity); dynamic
       // partition overwrite ⇒ a replayed run replaces its own partitions
       // (idempotent) without touching other runs'
-      def writeAlerts(): Unit = Pipeline.alertSink(enriched.drop("_file"), conf)
+      def writeAlerts(): Unit = Pipeline.alertSink(routed.drop("_file"), conf)
         .withColumn("run_id", lit(runId))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -295,17 +293,10 @@ object Incremental {
         .parquet(s"$outDir/alerts_all")
 
       // --- full, pruned state snapshot under run dir (invisible until the
-      // manifest lands)
+      // manifest lands): what a later row (ts_sec ≥ maxSec) can still reach
       val runDir = s"$stateDir/run-$runId"
-
-      val trackedVals = conf.trackedFields.map(f =>
-        enriched.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
-          .select(lit(f).as("field"), col(f).as("value"))).reduce(_ unionByName _)
-        .distinct()
-      val seenSnap = state.seenValues match {
-        case Some(st) => trackedVals.unionByName(st).distinct()
-        case None => trackedVals
-      }
+      def live(df: DataFrame, keep: Long => Column): DataFrame =
+        maxSec.fold(df)(s => df.filter(keep(s)))
 
       // fp_seen from the POST-DEDUP, PRE-WHITELIST rows (see persist comment)
       val batchFps = deduped.select(col("fp"), col("fp_bucket")).distinct()
@@ -313,38 +304,15 @@ object Incremental {
         case Some(st) => batchFps.unionByName(st.select("fp", "fp_bucket")).distinct()
         case None => batchFps
       }
-      val fpSnap = maxSec match {
-        case Some(s) => fpAll.filter(
-          col("fp_bucket") >= Math.floorDiv(s, conf.dedupDelaySec))
-        case None => fpAll
-      }
-
-      val batchCounts = Frequency.perSecCounts(enriched, conf)
-        .select(col("_k").as("key"), col("_s").as("sec"),
-          col("_c").cast("long").as("cnt"))
-      val cntAll = state.freqCounts match {
-        case Some(p) => batchCounts.unionByName(p.select("key", "sec", "cnt"))
-          .groupBy("key", "sec").agg(sum(col("cnt")).cast("long").as("cnt"))
-        case None => batchCounts
-      }
-      val cntSnap = maxSec match {
-        case Some(s) => cntAll.filter(col("sec") >= s - conf.freqWindowSec)
-        case None => cntAll
-      }
-
-      val batchFired = enriched.filter(col("freq_hit"))
-        .select(col(conf.freqKey).as("key"),
-          floor(col("ts_sec") / conf.freqResetSec).as("reset_bucket")).distinct()
-      val firedAll = state.firedBuckets match {
-        case Some(fb) => batchFired.unionByName(fb.select("key", "reset_bucket"))
-          .distinct()
-        case None => batchFired
-      }
-      val firedSnap = maxSec match {
-        case Some(s) => firedAll.filter(
-          col("reset_bucket") >= Math.floorDiv(s, conf.freqResetSec))
-        case None => firedAll
-      }
+      // seen_values, freq_counts and fired come from the C6/C7 aggregation
+      val snapshots = Seq(
+        "seen_values" -> next.seenValues,
+        "fp_seen" -> Some(live(fpAll,
+          s => col("fp_bucket") >= Math.floorDiv(s, conf.dedupDelaySec))),
+        "freq_counts" -> next.freqCounts.map(live(_,
+          s => col("sec") >= s - conf.freqWindowSec)),
+        "fired" -> next.firedBuckets.map(live(_,
+          s => col("reset_bucket") >= Math.floorDiv(s, conf.freqResetSec))))
 
       var nFiles = 0L
       var fileSample = Seq.empty[String]
@@ -358,9 +326,8 @@ object Incremental {
       // --- all six writes have committed before the manifest lands
       def snapshot(df: DataFrame, table: String): () => Unit =
         () => df.write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table")
-      graft.util.Concurrent.run(spark, Seq(writeAlerts _, writeLineage _,
-        snapshot(seenSnap, "seen_values"), snapshot(fpSnap, "fp_seen"),
-        snapshot(cntSnap, "freq_counts"), snapshot(firedSnap, "fired")))
+      graft.util.Concurrent.run(spark, Seq(writeAlerts _, writeLineage _) ++
+        snapshots.collect { case (table, Some(df)) => snapshot(df, table) })
 
       val metrics = metrics0 + ("n_input_files" -> nFiles)
       val sinkCounts = severities.map(s => s -> metrics(s"sink_$s")).toMap
@@ -368,7 +335,7 @@ object Incremental {
       writeManifest(stateDir, runId, metrics, fileSample)
       RunResult(runId, sinkCounts, metrics, fileSample)
     } finally {
-      files.unpersist(); enriched.unpersist(); deduped.unpersist()
+      files.unpersist(); routed.unpersist(); deduped.unpersist()
     }
   }
 

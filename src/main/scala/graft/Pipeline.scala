@@ -62,7 +62,7 @@ object Pipeline {
   /** State carried across runs (resume): seen first-seen values, fingerprint
     * buckets, per-(key, sec) frequency counts, and fired frequency buckets.
     * Empty for a fresh run. Contract: batches are processed in ascending,
-    * non-overlapping time ranges (manifest-enforced), under which
+    * non-overlapping time ranges (assumed, not checked), under which
     * run(A ∪ B) == run(B, state after A) exactly — see IncrementalSpec. */
   case class State(
       seenValues: Option[DataFrame],
@@ -76,7 +76,7 @@ object Pipeline {
   def enrich(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
       state: State = State.empty): DataFrame =
     scoreSurvivors(Whitelist(Dedup(Parse(turns, conf), conf, state.fpSeen),
-      tables.whitelist), tables, conf, state)
+      tables.whitelist), tables, conf, state)._1
 
   /** enrich with one persist point: the post-whitelist survivors feed (a) the
     * main narrow enrich chain once and (b) the slim first-seen/frequency
@@ -89,19 +89,23 @@ object Pipeline {
       conf: PipelineConf): (DataFrame, () => Unit) = {
     val survivors = Whitelist(Dedup(Parse(turns, conf), conf, None),
       tables.whitelist).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (scoreSurvivors(survivors, tables, conf, State.empty), () => { survivors.unpersist(); () })
+    (scoreSurvivors(survivors, tables, conf, State.empty)._1,
+      () => { survivors.unpersist(); () })
   }
 
   /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency
-    * read again (aux): enrichPlanned and Incremental.run pass them persisted. */
+    * read again (aux): enrichPlanned and Incremental.run pass them persisted.
+    * Also returns the C6/C7 part of the state after them
+    * ([[NewAndFrequent.withState]]), which Incremental.run snapshots. */
   private[graft] def scoreSurvivors(survivors: DataFrame, tables: RuleTables,
-      conf: PipelineConf, state: State): DataFrame = {
+      conf: PipelineConf, state: State): (DataFrame, State) = {
     val enriched = RefCheck.probe(
       SigRules(IocEnrich.probe(survivors, tables.iocByKind, conf), tables.sigRules),
       tables.refByField, conf)
-    Scoring(NewAndFrequent(enriched, conf, conf.trackedFields, freq = true,
-      state.seenValues, state.freqCounts, state.firedBuckets,
-      aux = Some(survivors)), conf)
+    val (flagged, next) = NewAndFrequent.withState(enriched, conf, conf.trackedFields,
+      freq = true, state.seenValues, state.freqCounts, state.firedBuckets,
+      aux = Some(survivors))
+    (Scoring(flagged, conf), next)
   }
 
   // latest managed enrich: (identity key, result, cache-release thunk)
@@ -235,23 +239,19 @@ object Pipeline {
         conf.sinkFormat, s"$outDir/rollup_sink")))
   }
 
-  /** The rows a C9 writer reads, narrowed to what it reads of them: routed
-    * rows keep every column (the alert docs), every other row keeps `routed`,
-    * `severity` and the `alsoRead` columns its non-alert writers read, and
-    * the rest are null. Same rows, same column types; a plain projection, so
-    * it compiles into the last codegen stage of the plan below it.
-    * `severity` stays whole (a few bytes per row in the columnar cache): as a
-    * nullable partition column it would make every `alerts_all` write plan
-    * one more projection and generated class. */
-  private[graft] def sinkView(enriched: DataFrame, alsoRead: Seq[String]): DataFrame = {
-    val keep = alsoRead.toSet + "routed" + "severity"
+  /** The rows [[route]]'s C9 writers read, narrowed to what they read of
+    * them: routed rows keep every column (the alert docs), every other row
+    * keeps `routed`, `severity` (the sink counts) and `conv_id`, `hits`
+    * (`rollup_signature`), and the rest are null. Same rows, same column
+    * types; a plain projection, so it compiles into the last codegen stage
+    * of the plan below it. `severity` stays whole (a few bytes per row in
+    * the columnar cache): as a nullable partition column it would make every
+    * `alerts_all` write plan one more projection and generated class. */
+  private[graft] def sinkView(enriched: DataFrame): DataFrame = {
+    val keep = Set("routed", "severity", "conv_id", "hits")
     enriched.select(enriched.columns.toSeq.map(c =>
       if (keep(c)) col(c) else when(col("routed"), col(c)).as(c)): _*)
   }
-
-  /** What [[route]]'s non-alert writers read of an unrouted row:
-    * `rollup_signature`'s hits and conversations. */
-  private[graft] val routeReads: Seq[String] = Seq("conv_id", "hits")
 
   /** `n_total` + the `n_<severity>` sink counts, and their result map. */
   private def routeCountCols(conf: PipelineConf): Seq[Column] =
@@ -294,15 +294,15 @@ object Pipeline {
   /** C9 fan-out: ONE pass over the enriched rows (persist), then K filtered
     * sink writes + alerts_all partitioned by severity (SURVEY §2.9 R2 — never
     * K source re-reads). What is persisted is the [[sinkView]]: routed rows
-    * whole, unrouted rows only `routed`, `severity` and the [[routeReads]]
-    * columns (the rollup's hits and conversations), so the cache grows with
-    * the alerts, not with the full width of every turn. Returns per-sink
-    * counts from `observe` metrics, plus "total" = all enriched rows;
-    * `rollup_sink` is written from them. */
+    * whole, unrouted rows only `routed`, `severity` and the rollup's hits
+    * and conversations, so the cache grows with the alerts, not with the
+    * full width of every turn. Returns per-sink counts from `observe`
+    * metrics, plus "total" = all enriched rows; `rollup_sink` is written
+    * from them. */
   def route(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
     import org.apache.spark.sql.Observation
-    val cached = sinkView(enriched, routeReads)
+    val cached = sinkView(enriched)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val obs = Observation("sinks")

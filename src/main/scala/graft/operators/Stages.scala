@@ -256,7 +256,23 @@ object NewAndFrequent {
       seenValues: Option[DataFrame] = None,
       priorCounts: Option[DataFrame] = None,
       firedBuckets: Option[DataFrame] = None,
-      aux: Option[DataFrame] = None): DataFrame = {
+      aux: Option[DataFrame] = None): DataFrame =
+    withState(df, conf, tracked, freq, seenValues, priorCounts, firedBuckets, aux)._1
+
+  /** [[apply]]'s rows and the C6/C7 part of the state after them, read off
+    * the same aggregation (unpruned; `fpSeen` is None):
+    *  - `seenValues` (field, value): the prior values plus this batch's
+    *    unseen ones — disjoint sets;
+    *  - `freqCounts` (key, sec, cnt): the per-second counts the trailing
+    *    window read, prior seconds included;
+    *  - `firedBuckets` (key, reset_bucket): the prior buckets plus those a
+    *    row of this batch fired in — disjoint sets.
+    * Keys and values are cast back from the events' strings to the types of
+    * the columns they came from, so the state keeps its schema. */
+  def withState(df: DataFrame, conf: PipelineConf, tracked: Seq[String], freq: Boolean,
+      seenValues: Option[DataFrame], priorCounts: Option[DataFrame],
+      firedBuckets: Option[DataFrame],
+      aux: Option[DataFrame]): (DataFrame, graft.Pipeline.State) = {
     val src = aux.getOrElse(df)
     val rowKey = struct(col("ts_us"), col("conv_id"), col("turn_idx"))
     def event(check: String, value: Column, sec: Column): Column =
@@ -265,6 +281,8 @@ object NewAndFrequent {
       (if (freq) Seq(event(Freq, col(conf.freqKey), col("ts_sec"))) else Nil)
     val groups = src
       .select(explode(array(events: _*)).as("_e"), rowKey.as("_r"))
+      // a NULL/empty value is no event: such a row is never first-seen and
+      // never counts toward or receives a burst (mirrored in RefModel)
       .filter(col("_e._k").isNotNull && col("_e._k") =!= "")
       .groupBy(col("_e._g").as("_g"), col("_e._k").as("_k"), col("_e._s").as("_s"))
       .agg(count(lit(1)).as("_c"), min(col("_r")).as("_w"))
@@ -322,7 +340,28 @@ object NewAndFrequent {
         when(col("freq_hit"),
           array(ClauseCompiler.hitStruct(0, "freq", lit(conf.freqScore), "freq")))
           .otherwise(array().cast("array<struct<rule_id:int,name:string,score:int,kind:string>>")))
-    withFreq.drop(("_w" +: checks.indices.map(i => s"_m$i")): _*)
+    def plus(prior: Option[DataFrame], batch: DataFrame) =
+      Some(prior.fold(batch)(batch.unionByName(_)))
+    // the tracked fields' common type, as a union of them widens it
+    def valueType = tracked.map(f => src.select(col(f).as("v")))
+      .reduce(_ unionByName _).schema("v").dataType
+    def key = col("_k").cast(src.schema(conf.freqKey).dataType).as("key")
+    // with freq, `firsts` holds the unseen tracked groups (`_raw` false) and
+    // the fired freq groups (`_raw` true). Seen and fired select them by `_raw`
+    // and keep `_w`, so their plans are the flags' up to the window and reuse
+    // its generated classes: a filter on `_g` is pushed below the aggregation,
+    // and a plan that drops `_w` drops its min, a new class per stage either way.
+    val next = graft.Pipeline.State(
+      seenValues = if (tracked.isEmpty) seenValues else plus(seenValues,
+        (if (freq) firsts.filter(!col("_raw") && col("_w").isNotNull) else firsts)
+          .select(col("_g").as("field"), col("_k").cast(valueType).as("value"))),
+      fpSeen = None,
+      freqCounts = if (!freq) priorCounts else Some(withPrior.filter(col("_g") === Freq)
+        .select(key, col("_s").as("sec"), col("_c").as("cnt"))),
+      firedBuckets = if (!freq) firedBuckets else plus(firedBuckets,
+        firsts.filter(col("_raw") && col("_w").isNotNull)
+          .select(key, col("_b").as("reset_bucket"))))
+    (withFreq.drop(("_w" +: checks.indices.map(i => s"_m$i")): _*), next)
   }
 }
 
@@ -339,15 +378,6 @@ object FirstSeen {
 /** C7 frequency check at second resolution: [[NewAndFrequent]] for the
   * frequency key alone. Adds `freq_hit` and `hits_freq`. */
 object Frequency {
-  /** Per-(key, sec) counts of this batch — also the freq state delta.
-    * Rows with a NULL/empty key carry no frequency identity (a configurable
-    * freqKey can be a nullable parsed field) — they never count toward or
-    * receive a burst (mirrored in RefModel). */
-  def perSecCounts(df: DataFrame, conf: PipelineConf): DataFrame =
-    df.filter(col(conf.freqKey).isNotNull && col(conf.freqKey).cast("string") =!= "")
-      .groupBy(col(conf.freqKey).as("_k"), col("ts_sec").as("_s"))
-      .agg(count(lit(1)).as("_c"))
-
   def apply(df: DataFrame, conf: PipelineConf,
       priorCounts: Option[DataFrame] = None,
       firedBuckets: Option[DataFrame] = None,

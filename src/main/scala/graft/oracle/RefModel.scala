@@ -161,7 +161,7 @@ object RefModel {
 
     // ---- C7 frequency pre-pass: per key, trailing count at second resolution.
     // Rows with a missing/empty key have no frequency identity (mirror of
-    // Frequency.perSecCounts' null/empty guard).
+    // NewAndFrequent's null/empty event filter).
     val byKey = afterWl.groupBy(p => fieldOf(p.t, p.fields, conf.freqKey).getOrElse(""))
       .filter(_._1.nonEmpty)
     // counts of rows per (key, sec)

@@ -11,7 +11,7 @@ import graft.model._
   * always-on Logstash daemon; our primary mode is batch-incremental
   * (graft.Incremental), which [[runFull]] and [[curationStream]] run per
   * micro-batch through one shared loop — so the stateful C6/C7 checks stream
-  * through the same `FirstSeen`/`Frequency` code and snapshot state as batch.
+  * through the same `NewAndFrequent` code and snapshot state as batch.
   * The rest are `flatMapGroupsWithState` / watermark twins of operators whose
   * event-time timeout semantics have no batch-exact form (elapsed, task-agg,
   * sessions).

@@ -22,9 +22,10 @@ import graft.streaming.StreamPipeline
   *
   * The residency guards run [[CodegenResidencyApp]] in a fresh JVM whose
   * cache evicts nothing, so every compile there is a cache entry the work
-  * needs: a cold fixture pass must not need more entries than it did
-  * ([[MaxColdPassEntries]]), and a second `runFull` on the same session must
-  * find its classes compiled by the first. */
+  * needs: a cold fixture pass and a first `runFull` must not need more
+  * entries than they did ([[MaxColdPassEntries]], [[MaxRunFullEntries]]),
+  * and a second `runFull` on the same session must find its classes compiled
+  * by the first. */
 class CodegenBudgetSpec extends SparkSuite {
   import spark.implicits._
 
@@ -59,6 +60,9 @@ class CodegenBudgetSpec extends SparkSuite {
     assert(coldPass <= MaxColdPassEntries,
       s"a cold enrichPlanned+route pass compiled $coldPass classes, " +
         s"$MaxColdPassEntries before: a new generated class")
+    assert(firstRunFull <= MaxRunFullEntries,
+      s"a first runFull compiled $firstRunFull classes, " +
+        s"$MaxRunFullEntries before: a new generated class")
     assert(secondRunFull <= MaxRerunCompiles,
       s"runFull compiled $firstRunFull, then $secondRunFull classes on the same " +
         "session: its micro-batches do not reuse the session's classes")
@@ -68,6 +72,9 @@ class CodegenBudgetSpec extends SparkSuite {
   /** Compiles of the cold fixture pass in [[CodegenResidencyApp]] when this
     * guard was added; a new generated class in the pass raises it. */
   private val MaxColdPassEntries = 119L
+  /** Compiles of the first `runFull` there since its C6/C7 snapshots come
+    * from NewAndFrequent's own aggregation (177 when they aggregated again). */
+  private val MaxRunFullEntries = 169L
   private val MaxRerunCompiles = 5L
 }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.fixtures.Gen
 import graft.model._
@@ -25,16 +26,18 @@ class IncrementalSpec extends SparkSuite {
         r.getBoolean(4), r.getBoolean(5), r.getBoolean(6), r.getString(7)))
       .sortBy(t => (t._1, t._2)).toSeq
 
+  /** The fixture's turns before and from its median timestamp. */
+  private def halves(fx: Gen.FixtureData): (Seq[Turn], Seq[Turn]) = {
+    val ts = fx.turns.map(_.ts.getTime).sorted
+    val (a, b) = fx.turns.partition(_.ts.getTime < ts(ts.size / 2))
+    assert(a.nonEmpty && b.nonEmpty)
+    (a, b)
+  }
+
   test("split-run with persisted state == single run (exact, incl. freq across boundary)") {
     val fx = Gen.fixture(250)
     val tb = tables(fx)
-    val cutoff = {
-      val ts = fx.turns.map(_.ts.getTime).sorted
-      ts(ts.size / 2)
-    }
-    val a = fx.turns.filter(_.ts.getTime < cutoff)
-    val b = fx.turns.filter(_.ts.getTime >= cutoff)
-    assert(a.nonEmpty && b.nonEmpty)
+    val (a, b) = halves(fx)
 
     val single = comparable(
       Pipeline.enrich(spark.createDataset(fx.turns).toDF(), tb, fx.conf))
@@ -52,8 +55,8 @@ class IncrementalSpec extends SparkSuite {
     assert(split === single)
     assert(r1.metrics("n_input") === a.size.toLong)
 
-    // run 0001 caches the narrowed sink view; its alerts and state snapshots
-    // equal those derived from A's full enriched frame
+    // run 0001's alerts and state snapshots equal those derived from A's
+    // enriched frame
     assert(comparable(Incremental.readAlerts(spark, stateDir, outDir)) ===
       comparable(enrichedA.filter(col("routed"))))
     def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSet
@@ -64,38 +67,63 @@ class IncrementalSpec extends SparkSuite {
     assert(snapshot("seen_values", "field", "value") === rows(c.trackedFields.map(f =>
       enrichedA.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
         .select(lit(f), col(f))).reduce(_ union _)))
-    assert(snapshot("freq_counts", "key", "sec", "cnt") === rows(
-      graft.operators.Frequency.perSecCounts(enrichedA, c).filter(col("_s") >= maxSec - c.freqWindowSec)
-        .select(col("_k"), col("_s"), col("_c").cast("long"))))
+    assert(snapshot("freq_counts", "key", "sec", "cnt") === rows(enrichedA
+      .filter(col(c.freqKey).isNotNull && col(c.freqKey) =!= "")
+      .groupBy(col(c.freqKey), col("ts_sec")).agg(count(lit(1)))
+      .filter(col("ts_sec") >= maxSec - c.freqWindowSec)))
     assert(snapshot("fired", "key", "reset_bucket") === rows(enrichedA.filter(col("freq_hit"))
       .select(col(c.freqKey), floor(col("ts_sec") / c.freqResetSec).as("b"))
       .filter(col("b") >= Math.floorDiv(maxSec, c.freqResetSec))))
   }
 
-  test("Incremental.run's sink view: an unrouted row carries only the state columns") {
+  test("split-run with an int freq key: the state keeps the key's type") {
+    val fx = Gen.fixture(250)
+    val conf = fx.conf.copy(freqKey = "status")
+    val tb = tables(fx)
+    val (a, b) = halves(fx)
+    val all = Pipeline.enrich(spark.createDataset(fx.turns).toDF(), tb, conf)
+    val single = comparable(all)
+    assert(single.exists(_._7), "status bursts fire")
+
+    val stateDir = Files.createTempDirectory("graft-state").toString
+    val outDir = Files.createTempDirectory("graft-out").toString
+    def keyTypes() = Seq("freq_counts", "fired").map(t =>
+      t -> Incremental.stateTable(spark, stateDir, t).get.schema("key").dataType)
+    Incremental.run(spark, spark.createDataset(a).toDF(), tb, conf, stateDir, outDir, "0001")
+    assert(keyTypes() === Seq("freq_counts" -> IntegerType, "fired" -> IntegerType))
+    val st = Incremental.loadFullState(spark, stateDir)
+    val split = (comparable(Pipeline.enrich(spark.createDataset(a).toDF(), tb, conf)) ++
+      comparable(Pipeline.enrich(spark.createDataset(b).toDF(), tb, conf, st)))
+      .sortBy(t => (t._1, t._2))
+    assert(split === single)
+
+    // the second run merges the loaded int keys with its own
+    Incremental.run(spark, spark.createDataset(b).toDF(), tb, conf, stateDir, outDir, "0002")
+    assert(keyTypes() === Seq("freq_counts" -> IntegerType, "fired" -> IntegerType))
+    assert(comparable(Incremental.readAlerts(spark, stateDir, outDir)) ===
+      comparable(all.filter(col("routed"))))
+  }
+
+  test("a run that routes nothing still observes every scored row") {
     val fx = Gen.fixture(120)
-    val enriched = Pipeline.enrich(spark.createDataset(fx.turns).toDF(), tables(fx), fx.conf)
-      .withColumn("_file", lit("part-0.parquet"))
-    val reads = Incremental.stateReads(fx.conf)
-    val unrouted = Pipeline.sinkView(enriched, reads).filter(!col("routed")).collect()
-    assert(unrouted.nonEmpty)
-    val kept = reads.toSet + "routed" + "severity"
-    unrouted.foreach { r =>
-      val present = r.schema.fieldNames.filterNot(f => r.isNullAt(r.fieldIndex(f))).toSet
-      assert(present.subsetOf(kept), s"unrouted row keeps ${present -- kept}")
-      assert(Seq("ts_sec", "parse_ok", "freq_hit", "_file", "routed").forall(present))
-    }
+    val conf = fx.conf.copy(firThreshold = Int.MaxValue)
+    val tb = tables(fx)
+    val turns = spark.createDataset(fx.turns).toDF()
+    val stateDir = Files.createTempDirectory("graft-state").toString
+    val outDir = Files.createTempDirectory("graft-out").toString
+    val r = Incremental.run(spark, turns, tb, conf, stateDir, outDir, "0001")
+    val survivors = Pipeline.enrich(turns, tb, conf).count()
+    assert(survivors > 0)
+    assert(r.metrics("n_enriched") === survivors)
+    assert(r.metrics("n_survivors") === survivors)
+    assert(r.sinkCounts.values.forall(_ == 0L))
+    assert(Incremental.readAlerts(spark, stateDir, outDir).count() === 0L)
   }
 
   test("second Incremental.run consumes state; alerts append; manifests track runs") {
     val fx = Gen.fixture(120)
     val tb = tables(fx)
-    val cutoff = {
-      val ts = fx.turns.map(_.ts.getTime).sorted
-      ts(ts.size / 2)
-    }
-    val a = fx.turns.filter(_.ts.getTime < cutoff)
-    val b = fx.turns.filter(_.ts.getTime >= cutoff)
+    val (a, b) = halves(fx)
     val stateDir = Files.createTempDirectory("graft-state").toString
     val outDir = Files.createTempDirectory("graft-out").toString
 
@@ -145,12 +173,7 @@ class IncrementalSpec extends SparkSuite {
   test("runsReport: manifests queryable as one DataFrame (metrics + lineage pointer)") {
     val fx = Gen.fixture(100)
     val tb = tables(fx)
-    val cutoff = {
-      val ts = fx.turns.map(_.ts.getTime).sorted
-      ts(ts.size / 2)
-    }
-    val a = fx.turns.filter(_.ts.getTime < cutoff)
-    val b = fx.turns.filter(_.ts.getTime >= cutoff)
+    val (a, b) = halves(fx)
     val stateDir = Files.createTempDirectory("graft-state").toString
     val outDir = Files.createTempDirectory("graft-out").toString
     assert(Incremental.runsReport(spark, stateDir).count() === 0L)
@@ -283,12 +306,7 @@ class IncrementalSpec extends SparkSuite {
   test("empty batch between two runs: state carried forward, output unchanged") {
     val fx = Gen.fixture(120)
     val tb = tables(fx)
-    val cutoff = {
-      val ts = fx.turns.map(_.ts.getTime).sorted
-      ts(ts.size / 2)
-    }
-    val a = fx.turns.filter(_.ts.getTime < cutoff)
-    val b = fx.turns.filter(_.ts.getTime >= cutoff)
+    val (a, b) = halves(fx)
     val stateDir = Files.createTempDirectory("graft-state").toString
     val outDir = Files.createTempDirectory("graft-out").toString
 

@@ -85,7 +85,7 @@ class RouteSpec extends SparkSuite {
     // an unreachable FIR threshold routes nothing: every row is narrowed
     Seq(fx.conf, fx.conf.copy(firThreshold = Int.MaxValue)).foreach { conf =>
       val enriched = Pipeline.enrich(turns, tb, conf)
-      val view = Pipeline.sinkView(enriched, Pipeline.routeReads)
+      val view = Pipeline.sinkView(enriched)
       assert(view.schema.map(f => f.name -> f.dataType) ===
         enriched.schema.map(f => f.name -> f.dataType))
       val unrouted = view.filter(!col("routed"))
