@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.ArrayDot
+import graft.operators.IvfTrain
+import graft.operators.VectorSearch.{neighbours, queries, rerank, vectors}
+
 /** Training-data pipeline operators over `documents`/`embeddings`:
   * deduplication (exact / n-gram Jaccard / MinHash-LSH / SimHash /
   * embedding-cosine), similarity search (brute-force + LSH-bucketed ANN),
@@ -107,6 +111,66 @@ object DataPipeQueries {
   private val IvfK = 16
   private val IvfIters = 3
   private val IvfProbes = 3
+
+  /** Top-n centroids per vector of `src` from the untrained stand-in
+    * codebook (the first 16 vectors of the frame `e`), by rounded cosine,
+    * ties by cid (ann_ivf_topk, ann_recall). */
+  private def nearestStandIn(e: DataFrame, src: DataFrame, n: Int): DataFrame = {
+    val cents = e.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
+    src.crossJoin(broadcast(cents))
+      .withColumn("cs", round(ArrayDot.dot(col("v"), col("cv"))
+        / (col("nrm") * col("cn")), 6))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("vec_id").orderBy(desc("cs"), asc("cid"))))
+      .filter(col("rk") <= n)
+  }
+
+  /** recall@10 rows `(method, hits, recall_bp)`: each method's reranked
+    * top-10 against the brute-force top-10 of the queries `q` over the
+    * neighbours `n` (20 queries, so recall_bp = hits · 50). */
+  private def recallRows(q: DataFrame, n: DataFrame,
+      methods: (String, DataFrame)*): DataFrame = {
+    def top10(cand: DataFrame) = rerank(cand, 10).select("qid", "nid")
+    val truth = QueryCache.retain(top10(q.join(n, col("nid") =!= col("qid"))))
+    methods.map { case (m, cand) =>
+      top10(cand).join(truth, Seq("qid", "nid"))
+        .agg(count(lit(1)).as("hits"))
+        .select(lit(m).as("method"), col("hits"),
+          (col("hits") * 50).cast("int").as("recall_bp"))
+    }.reduce(_ unionByName _).orderBy("method")
+  }
+
+  /** DuckDB cosine of an embedding `e` to a trained centroid `c`. */
+  private val ivfCosSql =
+    s"${IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
+
+  /** DuckDB replay of a trained-IVF search for queries vec_id < 10: the
+    * training CTEs, then assignment, probes, candidates and the top `k`. */
+  private def ivfSearchSql(k: Int, trainWhere: String = ""): String =
+    s"""WITH ${IvfTrain.oracleCtes(IvfK, IvfIters, 64, trainWhere)},
+       |asg AS (
+       |  SELECT vec_id AS nid, cid FROM (
+       |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
+       |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
+       |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
+       |probes AS (
+       |  SELECT vec_id AS qid, cid FROM (
+       |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
+       |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
+       |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 10) WHERE rk <= $IvfProbes),
+       |cand AS (
+       |  SELECT DISTINCT p.qid, a.nid
+       |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
+       |sc AS (
+       |  SELECT cand.qid, cand.nid,
+       |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
+       |  FROM cand
+       |  JOIN embeddings q ON q.vec_id = cand.qid
+       |  JOIN embeddings n ON n.vec_id = cand.nid),
+       |rk AS (SELECT qid, nid,
+       |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
+       |SELECT qid, rank, nid FROM rk WHERE rank <= $k ORDER BY qid, rank""".stripMargin
 
   /** Non-overlapping 10-word segment windows of `text` (the CCNet-style
     * "line" unit, dd_line_dedup) — canonical Spark form in
@@ -218,10 +282,10 @@ object DataPipeQueries {
       transform(slice(ids, ix + lit(2), size(ids) - ix - lit(1)),
         y => struct(x.as("i"), y.as("j")))))
 
-  /** DuckDB recursive-CTE oracle of the near-dup CC labels (shared by
-    * dd_cluster_cc and ta_curation — one definition, two queries): verified
-    * Jaccard pairs -> undirected edges -> transitive closure -> min label. */
-  private val ccOracleCtes: String =
+  /** DuckDB `sh` (distinct word-3-gram shingles per doc of ≥ 3 words) and
+    * `pairs` (shared-shingle counts per doc pair) CTEs — the candidate side
+    * of dd_ngram_jaccard's oracle and of [[ccOracleCtes]]. */
+  private val pairsOracleCtes: String =
     s"""sh AS (
        |  SELECT doc_id, unnest($shinglesSqlD) AS sh,
        |    len($shinglesSqlD) AS nsh
@@ -230,7 +294,13 @@ object DataPipeQueries {
        |  SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS inter,
        |    any_value(a.nsh) AS na, any_value(b.nsh) AS nb
        |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id),
+       |  GROUP BY a.doc_id, b.doc_id)""".stripMargin
+
+  /** DuckDB recursive-CTE oracle of the near-dup CC labels (shared by
+    * dd_cluster_cc and ta_curation — one definition, two queries): verified
+    * Jaccard pairs -> undirected edges -> transitive closure -> min label. */
+  private val ccOracleCtes: String =
+    s"""$pairsOracleCtes,
        |jp AS (SELECT i, j FROM pairs WHERE 3 * inter >= na + nb),
        |edges AS (SELECT i AS a, j AS b FROM jp UNION ALL SELECT j, i FROM jp),
        |reach(node, r) AS (
@@ -387,15 +457,7 @@ object DataPipeQueries {
     // exactly with array_intersect, so the result is identical to the naive
     // join (lossless, not an approximation).
     Q("dd_ngram_jaccard",
-      s"""WITH sh AS (
-         |  SELECT doc_id, unnest($shinglesSqlD) AS sh,
-         |    len($shinglesSqlD) AS nsh
-         |  FROM documents WHERE len(str_split(text, ' ')) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS inter,
-         |    any_value(a.nsh) AS na, any_value(b.nsh) AS nb
-         |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id)
+      s"""WITH $pairsOracleCtes
          |SELECT i, j, CAST(inter AS BIGINT) AS inter,
          |  CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb
          |FROM pairs WHERE 3 * inter >= na + nb ORDER BY i, j""".stripMargin) { (s, d) =>
@@ -457,15 +519,8 @@ object DataPipeQueries {
         .select(col("doc_id"), col("s.seg_idx").as("seg_idx"),
           col("s.seg").as("seg"))
       val fr = e.groupBy(md5(col("seg")).as("h")).agg(count(lit(1)).as("n"))
-      e.join(fr, md5(col("seg")) === col("h"))
-        .withColumn("boiler", col("n") >= 3)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("int").as("n_segs"),
-          sum(when(col("boiler"), 1).otherwise(0)).cast("int").as("n_dropped"),
-          coalesce(array_join(transform(
-            array_sort(collect_list(when(!col("boiler"),
-              struct(col("seg_idx"), col("seg"))))),
-            x => x.getField("seg")), " "), lit("")).as("clean_text"))
+      graft.functions.TextUnits.screenSegs(e.join(fr, md5(col("seg")) === col("h"))
+        .withColumn("boiler", col("n") >= 3))
         .orderBy("doc_id")
     },
 
@@ -676,17 +731,15 @@ object DataPipeQueries {
         |WHERE a.vec_id < b.vec_id
         |  AND list_cosine_similarity(a.embedding, b.embedding) >= 0.3
         |ORDER BY i, j""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val e = embs(s, d).select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("embedding"), col("embedding"))))
+      val e = vectors(embs(s, d))
       // r6: the embeddings file is one input split, so the all-pairs
       // BroadcastNestedLoopJoin (N²/2 64-dim dots — the deliberate
       // verification-twin cost) ran in ONE task. Round-robin the streamed
       // side across the session's parallelism so the dot products use every
       // core (scale-adaptive: defaultParallelism, not a constant).
-      val a = e.select(col("vec_id").as("i"), col("embedding").as("va"), col("nrm").as("na"))
+      val a = e.select(col("vec_id").as("i"), col("v").as("va"), col("nrm").as("na"))
         .repartition(s.sparkContext.defaultParallelism)
-      val b = e.select(col("vec_id").as("j"), col("embedding").as("vb"), col("nrm").as("nb"))
+      val b = e.select(col("vec_id").as("j"), col("v").as("vb"), col("nrm").as("nb"))
       a.join(b, col("i") < col("j"))
         .filter(ArrayDot.dot(col("va"), col("vb")) / (col("na") * col("nb")) >= 0.3)
         .select("i", "j").orderBy("i", "j")
@@ -711,13 +764,7 @@ object DataPipeQueries {
         |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.3
         |ORDER BY i, j""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val dims = Seq(1, 9, 17, 25, 33, 41, 49, 57)
-      val bucket = concat(dims.map(i =>
-        when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
-      val e = embs(s, d).select(col("vec_id"), col("embedding").as("v"),
-        bucket.as("bucket"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
+      val e = vectors(embs(s, d), bucket = Some(signBucket))
       val a = e.select(col("vec_id").as("i"), col("v").as("va"),
         col("nrm").as("na"), col("bucket"))
       val b = e.select(col("vec_id").as("j"), col("v").as("vb"),
@@ -739,19 +786,10 @@ object DataPipeQueries {
         |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
         |  FROM sc)
         |SELECT qid, rank, nid FROM rk WHERE rank <= 10 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val e = embs(s, d).select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      val n = e.select(col("vec_id").as("nid"), col("v").as("nv"), col("nrm").as("nn"))
-      val sc = q.join(n, col("nid") =!= col("qid"))
-        .withColumn("c",
-          round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-      sc.withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rank") <= 10)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      val e = vectors(embs(s, d))
+      rerank(queries(e.filter(col("vec_id") < 5))
+        .join(neighbours(e), col("nid") =!= col("qid")), 10)
+        .orderBy("qid", "rank")
     },
 
     // ---- LSH-bucketed ANN (scale path): bucket = sign bits of 8 fixed
@@ -776,24 +814,10 @@ object DataPipeQueries {
         |rk AS (SELECT qid, nid,
         |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
         |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val dims = Seq(1, 9, 17, 25, 33, 41, 49, 57)
-      val bucket = concat(dims.map(i =>
-        when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
-      val e = embs(s, d).select(col("vec_id"), col("embedding").as("v"),
-        bucket.as("bucket"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
-          col("bucket").as("qb"))
-      val n = e.select(col("vec_id").as("nid"), col("v").as("nv"), col("nrm").as("nn"),
-        col("bucket").as("nb2"))
-      q.join(n, col("qb") === col("nb2") && col("nid") =!= col("qid"))
-        .withColumn("c", round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      val e = vectors(embs(s, d), bucket = Some(signBucket))
+      rerank(queries(e.filter(col("vec_id") < 20))
+        .join(neighbours(e), col("qb") === col("nb") && col("nid") =!= col("qid")), 3)
+        .orderBy("qid", "rank")
     },
 
     // ---- multi-probe LSH ANN: the query probes its own bucket PLUS all 8
@@ -820,22 +844,11 @@ object DataPipeQueries {
          |rk AS (SELECT qid, nid,
          |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
          |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val e = embs(s, d).select(col("vec_id"), col("embedding").as("v"),
-        signBucket.as("bucket"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
-          col("bucket").as("qb"))
+      val e = vectors(embs(s, d), bucket = Some(signBucket))
+      val q = queries(e.filter(col("vec_id") < 20))
         .withColumn("probe", explode(probesExpr))
-      val n = e.select(col("vec_id").as("nid"), col("v").as("nv"),
-        col("nrm").as("nn"), col("bucket").as("nb"))
-      q.join(n, col("nb") === col("probe") && col("nid") =!= col("qid"))
-        .withColumn("c", round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      rerank(q.join(neighbours(e), col("nb") === col("probe") && col("nid") =!= col("qid")), 3)
+        .orderBy("qid", "rank")
     },
 
     // ---- ANN recall measurement, itself a cross-engine differential:
@@ -893,53 +906,19 @@ object DataPipeQueries {
          |  UNION ALL SELECT 'lsh_mp', count(*) FROM mp JOIN truth USING (qid, nid))
          |SELECT method, hits, CAST(hits * 50 AS INT) AS recall_bp FROM h
          |ORDER BY method""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val e = cycle(embs(s, d).select(col("vec_id"), col("embedding").as("v"),
-        signBucket.as("bucket"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v")))))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
-          col("bucket").as("qb"))
-      val n = e.select(col("vec_id").as("nid"), col("v").as("nv"),
-        col("nrm").as("nn"), col("bucket").as("nb"))
-      def cosQ = round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6)
-      def top10(df: DataFrame): DataFrame = df.withColumn("c", cosQ)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rk") <= 10).select("qid", "nid")
-      val truth = QueryCache.retain(top10(q.join(n, col("nid") =!= col("qid"))))
-      val lsh1 = top10(q.join(n, col("nb") === col("qb") && col("nid") =!= col("qid")))
-      val mp = top10(q.withColumn("probe", explode(probesExpr))
-        .join(n, col("nb") === col("probe") && col("nid") =!= col("qid")))
+      val e = cycle(vectors(embs(s, d), bucket = Some(signBucket)))
+      val q = queries(e.filter(col("vec_id") < 20))
+      val n = neighbours(e)
       // IVF, same codebook/probing as ann_ivf_topk but k=10 over the 20 queries
-      val cents = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
-      def nearestC(src: DataFrame, k: Int): DataFrame = src
-        .crossJoin(broadcast(cents))
-        .withColumn("cs", round(ArrayDot.dot(col("v"), col("cv"))
-          / (col("nrm") * col("cn")), 6))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(desc("cs"), asc("cid"))))
-        .filter(col("rk") <= k)
-      val asg = nearestC(e, 1).select(col("vec_id").as("nid"), col("cid"),
-        col("v").as("nv"), col("nrm").as("nn"))
-      val ipr = nearestC(e.filter(col("vec_id") < 20), 2)
-        .select(col("vec_id").as("qid"), col("cid"),
-          col("v").as("qv"), col("nrm").as("qn"))
+      val asg = neighbours(nearestStandIn(e, e, 1), Seq("cid"))
+      val ipr = queries(nearestStandIn(e, e.filter(col("vec_id") < 20), 2), Seq("cid"))
       val ivf = broadcast(ipr).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
         .select("qid", "nid", "qv", "qn", "nv", "nn").distinct()
-        .withColumn("c", cosQ)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rk") <= 10).select("qid", "nid")
-      def hitRow(m: String, cand: DataFrame): DataFrame =
-        cand.join(truth, Seq("qid", "nid"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(m).as("method"), col("hits"),
-            (col("hits") * 50).cast("int").as("recall_bp"))
-      hitRow("ivf", ivf).unionByName(hitRow("lsh1", lsh1))
-        .unionByName(hitRow("lsh_mp", mp))
-        .orderBy("method")
+      recallRows(q, n,
+        "ivf" -> ivf,
+        "lsh1" -> q.join(n, col("nb") === col("qb") && col("nid") =!= col("qid")),
+        "lsh_mp" -> q.withColumn("probe", explode(probesExpr))
+          .join(n, col("nb") === col("probe") && col("nid") =!= col("qid")))
     },
 
     // ---- IVF ANN (scale path #2): coarse quantizer = 16 deterministic
@@ -974,32 +953,12 @@ object DataPipeQueries {
         |rk AS (SELECT qid, nid,
         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
         |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val e = embs(s, d).select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
-      val cents = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
-      def nearest(src: org.apache.spark.sql.DataFrame, n: Int) = src
-        .crossJoin(broadcast(cents))
-        .withColumn("cs", round(ArrayDot.dot(col("v"), col("cv"))
-          / (col("nrm") * col("cn")), 6))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(desc("cs"), asc("cid"))))
-        .filter(col("rk") <= n)
-      val asg = nearest(e, 1).select(col("vec_id").as("nid"), col("cid"),
-        col("v").as("nv"), col("nrm").as("nn"))
-      val probes = nearest(e.filter(col("vec_id") < 10), 2)
-        .select(col("vec_id").as("qid"), col("cid"),
-          col("v").as("qv"), col("nrm").as("qn"))
-      broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"), col("qv"), col("qn"), col("nv"), col("nn"))
-        .distinct()
-        .withColumn("cs", round(ArrayDot.dot(col("qv"), col("nv"))
-          / (col("qn") * col("nn")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("cs"), asc("nid"))))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      val e = vectors(embs(s, d))
+      val asg = neighbours(nearestStandIn(e, e, 1), Seq("cid"))
+      val probes = queries(nearestStandIn(e, e.filter(col("vec_id") < 10), 2), Seq("cid"))
+      rerank(broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
+        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct(), 3)
+        .orderBy("qid", "rank")
     },
 
     // ---- random-hyperplane LSH ANN (r4 — the production sign-LSH path):
@@ -1028,11 +987,8 @@ object DataPipeQueries {
          |rk AS (SELECT qid, nid,
          |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
          |SELECT qid, rank, nid FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import graft.functions.ArrayDot
-      val base = cycle(embs(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
-        .withColumn("nrm", sqrt(ArrayDot.dot(col("vd"), col("vd")))))
-      val idx = base.select(col("vec_id"), rpIdxCol(col("vd")).as("tb"))
+      val base = cycle(vectors(embs(s, d), col("embedding").cast("array<double>")))
+      val idx = base.select(col("vec_id"), rpIdxCol(col("v")).as("tb"))
         .select(col("vec_id"), col("tb.t").as("t"), col("tb.bk").as("bk"))
       val pr = idx.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("t").as("qt"), col("bk").as("qb"))
@@ -1042,17 +998,8 @@ object DataPipeQueries {
           col("t") === col("qt") && col("bk") === col("probe") &&
             col("nid") =!= col("qid"))
         .select("qid", "nid").distinct()
-      cand
-        .join(base.select(col("vec_id").as("qid"), col("vd").as("qv"),
-          col("nrm").as("qn")), "qid")
-        .join(base.select(col("vec_id").as("nid"), col("vd").as("nv"),
-          col("nrm").as("nn")), "nid")
-        .withColumn("c",
-          round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rank") <= 5)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      rerank(cand.join(queries(base), "qid").join(neighbours(base), "nid"), 5)
+        .orderBy("qid", "rank")
     },
 
     // ---- TRAINED-codebook IVF ANN (r4): distributed Lloyd's (k=16, 3
@@ -1063,50 +1010,15 @@ object DataPipeQueries {
     // training's main win is BALANCED posting lists (partition keys at
     // scale); the recall gain is measured in ann_recall_v2 and the clustered
     // case in AnnSpec.
-    Q("ann_ivf_trained", {
-      val cos = s"${graft.operators.IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
-      s"""WITH ${graft.operators.IvfTrain.oracleCtes(IvfK, IvfIters, 64)},
-         |asg AS (
-         |  SELECT vec_id AS nid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 10) WHERE rk <= $IvfProbes),
-         |cand AS (
-         |  SELECT DISTINCT p.qid, a.nid
-         |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
-         |sc AS (
-         |  SELECT cand.qid, cand.nid,
-         |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
-         |  FROM cand
-         |  JOIN embeddings q ON q.vec_id = cand.qid
-         |  JOIN embeddings n ON n.vec_id = cand.nid),
-         |rk AS (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
-         |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
-    }) { (s, d) =>
-      import graft.functions.ArrayDot
-      import graft.operators.IvfTrain
+    Q("ann_ivf_trained", ivfSearchSql(3)) { (s, d) =>
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
-      val asg = IvfTrain.nearest(ep, cents, 1)
-        .select(col("vec_id").as("nid"), col("cid"),
-          col("vd").as("nv"), col("nd").as("nn"))
-      val probes = IvfTrain.nearest(ep.filter(col("vec_id") < 10), cents, IvfProbes)
-        .select(col("vec_id").as("qid"), col("cid"),
-          col("vd").as("qv"), col("nd").as("qn"))
-      broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct()
-        .withColumn("cs",
-          round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("cs"), asc("nid"))))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "nid").orderBy("qid", "rank")
+      val asg = neighbours(IvfTrain.nearest(ep, cents, 1), Seq("cid"), "vd", "nd")
+      val probes = queries(IvfTrain.nearest(ep.filter(col("vec_id") < 10), cents,
+        IvfProbes), Seq("cid"), "vd", "nd")
+      rerank(broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
+        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct(), 3)
+        .orderBy("qid", "rank")
     },
 
     // ---- MATERIALIZED-IVF round trip (r5, VERDICT r4 #5): train → write
@@ -1116,33 +1028,7 @@ object DataPipeQueries {
     // differential rather than only a plan assert (AnnSpec keeps pinning
     // the PartitionFilters pruning). The oracle replays training via the
     // unrolled CTE chain and searches the probed lists directly.
-    Q("ann_ivf_index", {
-      val cos = s"${graft.operators.IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
-      s"""WITH ${graft.operators.IvfTrain.oracleCtes(IvfK, IvfIters, 64)},
-         |asg AS (
-         |  SELECT vec_id AS nid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 10) WHERE rk <= $IvfProbes),
-         |cand AS (
-         |  SELECT DISTINCT p.qid, a.nid
-         |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
-         |sc AS (
-         |  SELECT cand.qid, cand.nid,
-         |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
-         |  FROM cand
-         |  JOIN embeddings q ON q.vec_id = cand.qid
-         |  JOIN embeddings n ON n.vec_id = cand.nid),
-         |rk AS (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
-         |SELECT qid, rank, nid FROM rk WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
-    }) { (s, d) =>
-      import graft.operators.IvfTrain
+    Q("ann_ivf_index", ivfSearchSql(10)) { (s, d) =>
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
       // per-application scratch dir, not a fresh temp dir per invocation (ADVICE r5):
@@ -1162,34 +1048,8 @@ object DataPipeQueries {
     // first half (oracleCtes trainWhere) but assigns/search over everything
     // — exactly what the append produces. This is the vector-side twin of
     // dd_incremental: ingest N new embeddings costs O(N·k), not O(corpus).
-    Q("ann_ivf_append", {
-      val cos = s"${graft.operators.IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
-      s"""WITH ${graft.operators.IvfTrain.oracleCtes(IvfK, IvfIters, 64,
-             "vec_id < (SELECT count(*) // 2 FROM embeddings)")},
-         |asg AS (
-         |  SELECT vec_id AS nid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 10) WHERE rk <= $IvfProbes),
-         |cand AS (
-         |  SELECT DISTINCT p.qid, a.nid
-         |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
-         |sc AS (
-         |  SELECT cand.qid, cand.nid,
-         |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
-         |  FROM cand
-         |  JOIN embeddings q ON q.vec_id = cand.qid
-         |  JOIN embeddings n ON n.vec_id = cand.nid),
-         |rk AS (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
-         |SELECT qid, rank, nid FROM rk WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
-    }) { (s, d) =>
-      import graft.operators.IvfTrain
+    Q("ann_ivf_append",
+      ivfSearchSql(10, "vec_id < (SELECT count(*) // 2 FROM embeddings)")) { (s, d) =>
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
       val half = embs(s, d).count() / 2
       val cents =
@@ -1206,9 +1066,8 @@ object DataPipeQueries {
     // ---- recall of the r4 production paths (lsh_rp multi-table,
     // ivf_trained) vs brute-force truth@10 — itself a differential, like
     // ann_recall for the r3 paths. recall_bp = hits·10000/(10·20).
-    Q("ann_recall_v2", {
-      val cos = s"${graft.operators.IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
-      s"""WITH ${graft.operators.IvfTrain.oracleCtes(IvfK, IvfIters, 64)},
+    Q("ann_recall_v2",
+      s"""WITH ${IvfTrain.oracleCtes(IvfK, IvfIters, 64)},
          |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 20),
          |truth AS (
          |  SELECT qid, nid FROM (
@@ -1233,12 +1092,12 @@ object DataPipeQueries {
          |asg AS (
          |  SELECT vec_id AS nid, cid FROM (
          |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
+         |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
          |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
          |iprobes AS (
          |  SELECT vec_id AS qid, cid FROM (
          |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $cos DESC, c.cid) AS rk
+         |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
          |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 20) WHERE rk <= $IvfProbes),
          |icand AS (
          |  SELECT DISTINCT p.qid, a.nid
@@ -1253,22 +1112,10 @@ object DataPipeQueries {
          |  SELECT 'ivf_trained' AS method, count(*) AS hits FROM ivf JOIN truth USING (qid, nid)
          |  UNION ALL SELECT 'lsh_rp', count(*) FROM lsh JOIN truth USING (qid, nid))
          |SELECT method, hits, CAST(hits * 50 AS INT) AS recall_bp FROM h
-         |ORDER BY method""".stripMargin
-    }) { (s, d) =>
-      import graft.functions.ArrayDot
-      import graft.operators.IvfTrain
+         |ORDER BY method""".stripMargin) { (s, d) =>
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
-      val q = ep.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("vd").as("qv"), col("nd").as("qn"))
-      val n = ep.select(col("vec_id").as("nid"), col("vd").as("nv"),
-        col("nd").as("nn"))
-      def top10(df: DataFrame): DataFrame = df
-        .withColumn("c",
-          round(ArrayDot.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("c"), asc("nid"))))
-        .filter(col("rk") <= 10).select("qid", "nid")
-      val truth = QueryCache.retain(top10(q.join(n, col("nid") =!= col("qid"))))
+      val q = queries(ep.filter(col("vec_id") < 20), v = "vd", nrm = "nd")
+      val n = neighbours(ep, v = "vd", nrm = "nd")
       val idx = ep.select(col("vec_id"), rpIdxCol(col("vd")).as("tb"))
         .select(col("vec_id"), col("tb.t").as("t"), col("tb.bk").as("bk"))
       val pr = idx.filter(col("vec_id") < 20)
@@ -1279,7 +1126,6 @@ object DataPipeQueries {
           col("t") === col("qt") && col("bk") === col("probe") &&
             col("nid") =!= col("qid2"))
         .select(col("qid2").as("qid"), col("nid")).distinct()
-      val lsh = top10(lcand.join(q, "qid").join(n, "nid"))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
       val asg = IvfTrain.nearest(ep, cents, 1)
         .select(col("vec_id").as("nid"), col("cid"))
@@ -1287,14 +1133,9 @@ object DataPipeQueries {
         .select(col("vec_id").as("qid"), col("cid"))
       val icand = broadcast(iprobes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
         .select("qid", "nid").distinct()
-      val ivf = top10(icand.join(q, "qid").join(n, "nid"))
-      def hitRow(m: String, cand: DataFrame): DataFrame =
-        cand.join(truth, Seq("qid", "nid"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(m).as("method"), col("hits"),
-            (col("hits") * 50).cast("int").as("recall_bp"))
-      hitRow("ivf_trained", ivf).unionByName(hitRow("lsh_rp", lsh))
-        .orderBy("method")
+      recallRows(q, n,
+        "ivf_trained" -> icand.join(q, "qid").join(n, "nid"),
+        "lsh_rp" -> lcand.join(q, "qid").join(n, "nid"))
     },
 
     // ---- language-ID: stopword-hit scores per language, argmax.

@@ -26,6 +26,15 @@ object LogQueries {
   // ---------- shared Spark-side inputs ----------
   private[entry] def T(s: SparkSession, d: String): DataFrame = TestdataAdapter.turns(s, d)
   private[entry] def P(s: SparkSession, d: String): DataFrame = Parse(T(s, d), tconf)
+  /** C1→C2 survivors: fp-dedup, then the whitelist. */
+  private def survivors(s: SparkSession, d: String): DataFrame =
+    Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist)
+  /** C3→C5 over the survivors: IOC, signature rules, reference check. */
+  private def c3to5(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    RefCheck(SigRules(IocEnrich(survivors(s, d), TestdataTables.ioc.toDF()),
+      TestdataTables.sigRules), TestdataTables.refBaseline.toDF(), tconf)
+  }
 
   // ---------- shared DuckDB CTEs ----------
   private val parsedCte: String = s"""parsed AS (
@@ -819,8 +828,7 @@ scored AS (
       """SELECT conv_id, turn_idx, ioc_score FROM en WHERE ioc_score > 0
         |ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val enr = IocEnrich(Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.ioc.toDF())
+      val enr = IocEnrich(survivors(s, d), TestdataTables.ioc.toDF())
       enr.select(col("conv_id"), col("turn_idx"),
         aggregate(col("hits_ioc"), lit(0), (a, h) => a + h.getField("score")).as("ioc_score"))
         .filter(col("ioc_score") > 0)
@@ -848,8 +856,7 @@ scored AS (
         TestdataTables.ioc.filter(_.kind == "domain").map(_.copy(kind = "host")) ++
           Seq(IocEntry("path", "/api/secret/keys", 50), IocEntry("path", "/debug/trace", 25))
       val confB = tconf.copy(iocKindFields = Seq("host" -> "dst_host", "path" -> "uri"))
-      val enr = IocEnrich(Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        iocB.toDF(), confB)
+      val enr = IocEnrich(survivors(s, d), iocB.toDF(), confB)
       enr.select(col("conv_id"), col("turn_idx"),
         aggregate(col("hits_ioc"), lit(0), (a, h) => a + h.getField("score")).as("ioc_score"),
         array_join(transform(col("hits_ioc"), h => h.getField("name")), ",").as("names"))
@@ -862,8 +869,7 @@ scored AS (
         s"(CASE WHEN ${rulePredSql(cl)} THEN '$rid' END)"
       }.mkString("concat_ws(',', ", ", ", ")")} AS rule_ids
          |FROM en WHERE sig_score > 0 ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
-      val enr = SigRules(Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.sigRules)
+      val enr = SigRules(survivors(s, d), TestdataTables.sigRules)
       enr.select(col("conv_id"), col("turn_idx"),
         aggregate(col("hits_sig"), lit(0), (a, h) => a + h.getField("score")).as("sig_score"),
         array_join(transform(col("hits_sig"), h => h.getField("rule_id").cast("string")), ",").as("rule_ids"))
@@ -877,8 +883,7 @@ scored AS (
       }.mkString("concat_ws(',', ", ", ", ")")} AS rule_ids
          |FROM en WHERE sig_score > 0 ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val enr = SigRulesData(Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.sigRules.toDF(), tconf)
+      val enr = SigRulesData(survivors(s, d), TestdataTables.sigRules.toDF(), tconf)
       enr.select(col("conv_id"), col("turn_idx"),
         aggregate(col("hits_sig"), lit(0), (a, h) => a + h.getField("score")).as("sig_score"),
         array_join(transform(col("hits_sig"), h => h.getField("rule_id").cast("string")), ",").as("rule_ids"))
@@ -899,8 +904,7 @@ scored AS (
         |   OR (parse_ok AND dst_host IS NOT NULL AND rh.value IS NULL)
         |ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val enr = RefCheck(Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.refBaseline.toDF(), tconf)
+      val enr = RefCheck(survivors(s, d), TestdataTables.refBaseline.toDF(), tconf)
       enr.select(col("conv_id"), col("turn_idx"),
         exists(col("hits_ref"), h => h.getField("name") === "ref:action").as("dev_action"),
         exists(col("hits_ref"), h => h.getField("name") === "ref:dst_host").as("dev_host"))
@@ -911,12 +915,7 @@ scored AS (
     Q("c6_first_seen", sqlFull(
       """SELECT conv_id, turn_idx, new_user, new_host FROM fs
         |WHERE new_user OR new_host ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
-      import s.implicits._
-      val base = RefCheck(SigRules(IocEnrich(
-        Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.ioc.toDF()), TestdataTables.sigRules),
-        TestdataTables.refBaseline.toDF(), tconf)
-      FirstSeen(base, tconf)
+      FirstSeen(c3to5(s, d), tconf)
         .select(col("conv_id"), col("turn_idx"),
           exists(col("hits_new"), h => h.getField("name") === "new:user").as("new_user"),
           exists(col("hits_new"), h => h.getField("name") === "new:dst_host").as("new_host"))
@@ -926,12 +925,7 @@ scored AS (
 
     Q("c7_frequency", sqlFull(
       """SELECT conv_id, turn_idx FROM fr2 WHERE freq_hit ORDER BY conv_id, turn_idx""")) { (s, d) =>
-      import s.implicits._
-      val base = RefCheck(SigRules(IocEnrich(
-        Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist),
-        TestdataTables.ioc.toDF()), TestdataTables.sigRules),
-        TestdataTables.refBaseline.toDF(), tconf)
-      Frequency(FirstSeen(base, tconf), tconf)
+      Frequency(FirstSeen(c3to5(s, d), tconf), tconf)
         .filter(col("freq_hit")).select("conv_id", "turn_idx")
         .orderBy("conv_id", "turn_idx")
     },

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The two text units the curation family chunks documents into — shared by
-  * the batch queries (entry/DataPipeQueries) and the resumable curation-state
-  * runner (operators/CurationState), so the incremental path can never drift
-  * from the single-pass differential semantics. DuckDB oracle twins live next
+/** The two text units the curation family chunks documents into, and the
+  * boilerplate screen over the first — shared by the batch queries
+  * (entry/DataPipeQueries) and the resumable curation-state runner
+  * (operators/CurationState), so the incremental path can never drift from
+  * the single-pass differential semantics. DuckDB oracle twins live next
   * to the queries that render them. */
 object TextUnits {
 
@@ -18,6 +19,18 @@ object TextUnits {
       |  sequence(0, CAST(floor((size(split(text, ' ')) + 9) / 10) AS INT) - 1),
       |  k -> struct(k AS seg_idx,
       |    array_join(slice(split(text, ' '), k * 10 + 1, 10), ' ') AS seg))""".stripMargin)
+
+  /** Per-doc boilerplate screen over `(doc_id, seg_idx, seg, boiler)`
+    * segment rows: `n_segs`, `n_dropped` (boiler segments) and `clean_text`,
+    * the other segments rejoined in `seg_idx` order ('' when none is
+    * left). */
+  def screenSegs(segs: DataFrame): DataFrame = segs.groupBy("doc_id")
+    .agg(count(lit(1)).cast("int").as("n_segs"),
+      sum(when(col("boiler"), 1).otherwise(0)).cast("int").as("n_dropped"),
+      coalesce(array_join(transform(
+        array_sort(collect_list(when(!col("boiler"),
+          struct(col("seg_idx"), col("seg"))))),
+        x => x.getField("seg")), " "), lit("")).as("clean_text"))
 
   /** Distinct md5-hashed word-8-gram shingles of `text` (the
     * eval-contamination screen unit). Caller filters to docs of ≥ 8 words. */

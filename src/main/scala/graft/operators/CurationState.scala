@@ -176,15 +176,8 @@ object CurationState {
     val e = docsDf.select(col("doc_id"), explode(TextUnits.segWindows).as("s"))
       .select(col("doc_id"), col("s.seg_idx").as("seg_idx"), col("s.seg").as("seg"))
     val fr = st.segFreq.getOrElse(Seq.empty[(String, Long)].toDF("h", "n"))
-    val line = e.join(fr, md5(col("seg")) === col("h"), "left_outer")
-      .withColumn("boiler", coalesce(col("n"), lit(0L)) >= BoilerThreshold)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("int").as("n_segs"),
-        sum(when(col("boiler"), 1).otherwise(0)).cast("int").as("n_dropped"),
-        coalesce(array_join(transform(
-          array_sort(collect_list(when(!col("boiler"),
-            struct(col("seg_idx"), col("seg"))))),
-          x => x.getField("seg")), " "), lit("")).as("clean_text"))
+    val line = TextUnits.screenSegs(e.join(fr, md5(col("seg")) === col("h"), "left_outer")
+      .withColumn("boiler", coalesce(col("n"), lit(0L)) >= BoilerThreshold))
     val eg = st.evalGrams.getOrElse(Seq.empty[String].toDF("h"))
     val shared = docsDf.filter(size(split(col("text"), " ")) >= 8)
       .select(col("doc_id"), explode(TextUnits.gram8).as("h"))

@@ -55,6 +55,50 @@ object Hyperplanes {
       .mkString(" || ")
 }
 
+/** The pieces every cosine top-k search shares: the vector frame, its query
+  * and neighbour sides, and the rerank that cuts the candidates to k. The
+  * search paths differ only in how they generate candidates (all pairs, LSH
+  * buckets, IVF posting lists), which stays with each caller. */
+object VectorSearch {
+
+  /** `(vec_id, v, nrm[, bucket])` over a table with `vec_id` and
+    * `embedding`: `v` is the vector (the embedding unless given), `nrm` its
+    * L2 norm by [[ArrayDot]]. */
+  def vectors(e: DataFrame, v: Column = col("embedding"),
+      bucket: Option[Column] = None): DataFrame =
+    e.select(Seq(col("vec_id"), v.as("v")) ++ bucket.map(_.as("bucket")): _*)
+      .withColumn("nrm", sqrt(ArrayDot.dot(col("v"), col("v"))))
+
+  /** Query side `(qid, [keep…,] qv, qn[, qb])` of a vector frame whose
+    * vector and norm columns are `v` and `nrm` (`vd` and `nd` for
+    * [[IvfTrain.prepared]]); `keep` columns ride along unrenamed, and `qb`
+    * comes with a `bucket` column. */
+  def queries(f: DataFrame, keep: Seq[String] = Nil, v: String = "v",
+      nrm: String = "nrm"): DataFrame = side(f, "q", keep, v, nrm)
+
+  /** Neighbour side `(nid, nv, nn[, nb])`, as [[queries]]. */
+  def neighbours(f: DataFrame, keep: Seq[String] = Nil, v: String = "v",
+      nrm: String = "nrm"): DataFrame = side(f, "n", keep, v, nrm)
+
+  private def side(f: DataFrame, p: String, keep: Seq[String], v: String,
+      nrm: String): DataFrame =
+    f.select((col("vec_id").as(s"${p}id") +: keep.map(col)) ++
+      Seq(col(v).as(s"${p}v"), col(nrm).as(s"${p}n")) ++
+      (if (f.columns.contains("bucket")) Seq(col("bucket").as(s"${p}b")) else Nil): _*)
+
+  /** Top-k of `(qid, nid, qv, qn, nv, nn)` candidates per query as
+    * `(qid, rank, nid)`: the cosine `dot / (qn · nn)` rounded to 6 decimals
+    * (the rank key both engines compute alike), ranked descending with ties
+    * broken by the lower `nid`. */
+  def rerank(cand: DataFrame, k: Int): DataFrame =
+    cand.withColumn("cs", round(ArrayDot.dot(col("qv"), col("nv"))
+        / (col("qn") * col("nn")), 6))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("cs"), asc("nid"))))
+      .filter(col("rank") <= k)
+      .select("qid", "rank", "nid")
+}
+
 /** Trained IVF coarse quantizer: distributed Lloyd's with a FIXED iteration
   * count, deterministic init (first k vectors by vec_id), and an
   * EXACT-INTEGER update step so the oracle can replay training bit-for-bit:
@@ -202,21 +246,16 @@ object IvfTrain {
     * filter so partition pruning happens at plan time. */
   def search(spark: SparkSession, path: String, cents: Seq[Centroid],
       queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val probes = nearest(queries, cents, nprobe)
-      .select(col("vec_id").as("qid"), col("cid"),
-        col("vd").as("qv"), col("nd").as("qn"))
+    val probes = VectorSearch.queries(nearest(queries, cents, nprobe),
+      Seq("cid"), "vd", "nd")
     val cids = probes.select("cid").distinct().collect().map(_.getInt(0))
     val idx = spark.read.parquet(path).filter(col("cid").isin(cids.map(c => c: Any): _*))
-    broadcast(probes).join(idx, Seq("cid"))
+    // the index side is renamed after the join, so the pruned scan feeds
+    // the join with no projection of its own
+    VectorSearch.rerank(broadcast(probes).join(idx, Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), col("qv"), col("qn"),
-        col("vd").as("nv"), col("nd").as("nn")).distinct()
-      .withColumn("cs", round(ArrayDot.dot(col("qv"), col("nv"))
-        / (col("qn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("cs"), asc("nid"))))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid")
+        col("vd").as("nv"), col("nd").as("nn")).distinct(), k)
   }
 
   // ---------- DuckDB replay ----------

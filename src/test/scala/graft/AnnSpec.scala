@@ -32,6 +32,27 @@ class AnnSpec extends SparkSuite {
       s"trained-IVF recall@10 floor 0.70 violated: $rows")
   }
 
+  test("rerank: cosines equal at 6 decimals tie to the lower nid; exactly k rows per query") {
+    // Cosine = c exactly: qv = (1, 0) with qn = 1, nv = (c, √(1−c²)) with
+    // nn = 1, so dot = c·1 + √(1−c²)·0 = c. Query 0's nids 3 and 7 differ
+    // past the 6th decimal (7 is higher) but round to 0.500000, so they tie
+    // and nid 3 comes first; nid 8 (0.500004) is above both at 6 decimals
+    // but would tie with them at 5. Each query has more neighbours than k.
+    import graft.operators.VectorSearch
+    import spark.implicits._
+    def nb(qid: Long, nid: Long, c: Double) =
+      (qid, nid, Seq(1.0, 0.0), 1.0, Seq(c, math.sqrt(1 - c * c)), 1.0)
+    val cand = Seq(
+      nb(0, 2, 0.1), nb(0, 3, 0.4999996), nb(0, 4, 0.2), nb(0, 7, 0.5000001),
+      nb(0, 8, 0.500004),
+      nb(1, 1, 0.3), nb(1, 5, 0.9), nb(1, 6, 0.7), nb(1, 9, 0.8))
+      .toDF("qid", "nid", "qv", "qn", "nv", "nn")
+    val got = VectorSearch.rerank(cand, 3).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(t => (t._1, t._2)).toSeq
+    assert(got === Seq((0L, 1, 8L), (0L, 2, 3L), (0L, 3, 7L),
+      (1L, 1, 5L), (1L, 2, 9L), (1L, 3, 6L)))
+  }
+
   test("trained IVF beats the untrained stand-in where data is actually clustered") {
     // The driver fixtures are ISOTROPIC (near-uniform directions), where any
     // reasonable codebook ties — so this builds a CLUSTERED fixture (10

@@ -5,9 +5,12 @@ tables and compare (columns sorted by name, rows sorted, values normalized).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
-Each query's line carries its time in DuckDB, in reading the Spark output
-and in normalize+compare; the run ends with the ten slowest queries.
+The first line is the sha256 of oracle_sql.json, so each run records which
+reference it checked against. Each query's line carries its time in DuckDB,
+in reading the Spark output and in normalize+compare; the run ends with the
+ten slowest queries.
 """
+import hashlib
 import json
 import sys
 import time
@@ -48,7 +51,10 @@ def main():
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
-    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    with open(f"{outdir}/oracle_sql.json", "rb") as f:
+        raw = f.read()
+    print(f"oracle_sql.json sha256 {hashlib.sha256(raw).hexdigest()}", flush=True)
+    oracle = json.loads(raw)
     n_ok, fails, times = 0, [], []
     for name in sorted(oracle):
         why = compare(con, oracle[name], f"{outdir}/{name}", name, times)
