@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.ArrayDot
-import graft.operators.IvfTrain
-import graft.operators.VectorSearch.{neighbours, queries, rerank, vectors}
+import graft.functions.{ArrayDot, TextUnits}
+import graft.operators.{CurationState, IvfTrain, NearDup}
+import graft.operators.CurationState.{BoilerThreshold, EvalSet, PseudoEvalModulus}
+import graft.operators.VectorSearch.{hammingProbes, hyperplaneCandidates,
+  ivfCandidates, neighbours, queries, rerank, vectors}
 
 /** Training-data pipeline operators over `documents`/`embeddings`:
   * deduplication (exact / n-gram Jaccard / MinHash-LSH / SimHash /
@@ -34,21 +36,12 @@ object DataPipeQueries {
   private def embs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/embeddings.parquet")
 
-  /** words / distinct word-3-gram shingles of `text` (Spark side).
-    * The words array is bound ONCE per row via a single-element transform
-    * lambda — referencing `split(text, ' ')` inside the shingle lambda would
-    * re-split the whole text per shingle (O(words²) character work per doc;
-    * lambda bodies defeat codegen subexpression elimination). */
+  /** words of `text` (Spark side). */
   private val wordsCol = split(col("text"), " ")
-  private def shinglesExpr = expr(
-    """element_at(transform(array(split(text, ' ')), ws ->
-      |  array_distinct(transform(sequence(0, size(ws) - 3),
-      |    i -> concat(element_at(ws, i + 1), ' ',
-      |                element_at(ws, i + 2), ' ',
-      |                element_at(ws, i + 3))))), 1)""".stripMargin)
 
-  /** DuckDB: distinct word-3-gram shingle list (single line — embedded in
-    * stripMargin templates, so it must not start lines with '|'). */
+  /** DuckDB twin of [[NearDup]]'s distinct word-3-gram shingle list (single
+    * line — embedded in stripMargin templates, so it must not start lines
+    * with '|'). */
   private val shinglesSqlD =
     "list_distinct(list_transform(range(len(str_split(text, ' ')) - 2), " +
       "i -> str_split(text, ' ')[i + 1] || ' ' || str_split(text, ' ')[i + 2] " +
@@ -77,27 +70,21 @@ object DataPipeQueries {
   private val SignDims = Seq(1, 9, 17, 25, 33, 41, 49, 57)
   private def signBucket: Column = concat(SignDims.map(i =>
     when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
+  private val signCasesSqlD = SignDims.map(i =>
+    s"(CASE WHEN embedding[$i] >= 0 THEN '1' ELSE '0' END)")
   // single line — embedded in stripMargin templates, so it must not start
   // lines with '|' (stripMargin would eat half of a '||' concat)
-  private val signBucketSqlD: String = SignDims.map(i =>
-    s"(CASE WHEN embedding[$i] >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
-
-  /** Hamming-1 multi-probe list over a `qb` bucket column: the bucket itself
-    * plus each single-bit flip (9 probes for 8 bits). */
-  private def probesExpr: Column = expr(
-    """transform(sequence(0, 8), i -> CASE WHEN i = 0 THEN qb
-      |  ELSE concat(substring(qb, 1, i - 1),
-      |              CASE WHEN substring(qb, i, 1) = '1' THEN '0' ELSE '1' END,
-      |              substring(qb, i + 1, 8)) END)""".stripMargin)
+  private val signBucketSqlD: String = signCasesSqlD.mkString(" || ")
+  /** The `bk` CTE of dd_embed_lsh and ann_lsh_topk, one sign per line —
+    * so it is concatenated to a query, never embedded in a stripMargin one. */
+  private val signBucketCteSqlD: String = "WITH bk AS (\n  SELECT vec_id, embedding,\n    " +
+    signCasesSqlD.mkString("\n    || ") + " AS bucket\n  FROM embeddings)"
 
   // ---- seeded random-hyperplane LSH (r4): 8 tables × 8 Rademacher planes,
   // inlined as constants into both engines; Hamming-1 multi-probe per table.
   // Sign decisions ride bit-exact left-assoc double sums (see Hyperplanes).
   private val RpTables = 8
   private val rpPlanes = graft.operators.Hyperplanes.planes(7L, RpTables, 8, 64)
-  private def rpIdxCol(vd: Column): Column = explode(array((0 until RpTables).map(t =>
-    struct(lit(t).as("t"),
-      graft.operators.Hyperplanes.bucketCol(vd, rpPlanes(t)).as("bk"))): _*))
   private def rpIdxSqlD: String = (0 until RpTables).map(t =>
     s"SELECT vec_id, embedding, $t AS t, " +
       s"${graft.operators.Hyperplanes.bucketSql(rpPlanes(t), "embedding")} AS bk " +
@@ -106,6 +93,18 @@ object DataPipeQueries {
     "unnest(list_transform(range(0, 9), i -> CASE WHEN i = 0 THEN bk " +
       "ELSE substr(bk, 1, i - 1) || (CASE WHEN substr(bk, i, 1) = '1' " +
       "THEN '0' ELSE '1' END) || substr(bk, i + 1) END))"
+  /** DuckDB random-hyperplane candidates for the queries vec_id < 20: the
+    * CTEs `idx` and `pr`, then the `(qid, nid)` pairs as CTE `cand`. */
+  private def rpCandSql(cand: String): String =
+    s"""idx AS (
+       |$rpIdxSqlD),
+       |pr AS (
+       |  SELECT vec_id AS qid, t, $rpProbeSqlD AS probe
+       |  FROM idx WHERE vec_id < 20),
+       |$cand AS (
+       |  SELECT DISTINCT pr.qid, i.vec_id AS nid
+       |  FROM pr JOIN idx i ON i.t = pr.t AND i.bk = pr.probe
+       |    AND i.vec_id != pr.qid)""".stripMargin
 
   // trained-IVF knobs (r4): k=16 centroids, 3 Lloyd iterations, nprobe=3
   private val IvfK = 16
@@ -145,45 +144,101 @@ object DataPipeQueries {
   private val ivfCosSql =
     s"${IvfTrain.dotSql("e.embedding", "c.cv", 64)} / (e.nd * c.cn)"
 
-  /** DuckDB replay of a trained-IVF search for queries vec_id < 10: the
-    * training CTEs, then assignment, probes, candidates and the top `k`. */
-  private def ivfSearchSql(k: Int, trainWhere: String = ""): String =
-    s"""WITH ${IvfTrain.oracleCtes(IvfK, IvfIters, 64, trainWhere)},
-       |asg AS (
+  /** DuckDB trained-IVF candidates after the training CTEs: `asg`, the
+    * probes of the queries vec_id < `nq` as CTE `probes`, and their
+    * `(qid, nid)` pairs as CTE `cand`. */
+  private def ivfCandSql(probes: String, cand: String, nq: Int): String =
+    s"""asg AS (
        |  SELECT vec_id AS nid, cid FROM (
        |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
        |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
        |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
-       |probes AS (
+       |$probes AS (
        |  SELECT vec_id AS qid, cid FROM (
        |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
        |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
-       |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 10) WHERE rk <= $IvfProbes),
-       |cand AS (
+       |    FROM eq e, cents$IvfIters c WHERE e.vec_id < $nq) WHERE rk <= $IvfProbes),
+       |$cand AS (
        |  SELECT DISTINCT p.qid, a.nid
-       |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
-       |sc AS (
+       |  FROM $probes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid)""".stripMargin
+
+  /** DuckDB top-`k` tail over a `sc` CTE of `(qid, nid, <c>)` cosines. */
+  private def rankSql(c: String, k: Int): String =
+    s"""rk AS (SELECT qid, nid,
+       |    row_number() OVER (PARTITION BY qid ORDER BY $c DESC, nid) AS rank FROM sc)
+       |SELECT qid, rank, nid FROM rk WHERE rank <= $k ORDER BY qid, rank""".stripMargin
+
+  /** DuckDB rerank of a `cand` CTE of `(qid, nid)`: the cosine as column `c`
+    * of CTE `sc`, then the top `k`. */
+  private def candRerankSql(c: String, k: Int): String =
+    s"""sc AS (
        |  SELECT cand.qid, cand.nid,
-       |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
+       |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS $c
        |  FROM cand
        |  JOIN embeddings q ON q.vec_id = cand.qid
        |  JOIN embeddings n ON n.vec_id = cand.nid),
-       |rk AS (SELECT qid, nid,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
-       |SELECT qid, rank, nid FROM rk WHERE rank <= $k ORDER BY qid, rank""".stripMargin
+       |${rankSql(c, k)}""".stripMargin
 
-  /** Non-overlapping 10-word segment windows of `text` (the CCNet-style
-    * "line" unit, dd_line_dedup) — canonical Spark form in
-    * [[graft.functions.TextUnits]], shared with the resumable curation-state
-    * runner so batch and incremental semantics cannot drift. */
-  private def segWindowsExpr: Column = graft.functions.TextUnits.segWindows
+  /** DuckDB top-10 `(qid, nid)` CTE `name` of the queries `p` (`qid`, `qv`)
+    * over the embeddings `e`, both joined as `from`. */
+  private def top10Sql(name: String, p: String, from: String): String =
+    s"""$name AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT $p.qid, e.vec_id AS nid, row_number() OVER (PARTITION BY $p.qid
+       |      ORDER BY round(list_cosine_similarity($p.qv, e.embedding), 6) DESC, e.vec_id) AS rk
+       |    FROM $from) WHERE rk <= 10)""".stripMargin
 
-  /** Distinct md5-hashed word-8-gram shingles of `text` (contamination
-    * screen); single-line DuckDB twin below. */
-  private def gram8Expr: Column = graft.functions.TextUnits.gram8
+  /** DuckDB top-10 `(qid, nid)` CTE `name` of the candidate CTE `cand`. */
+  private def candTop10Sql(name: String, cand: String): String =
+    s"""$name AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT $cand.qid, $cand.nid, row_number() OVER (PARTITION BY $cand.qid
+       |      ORDER BY round(list_cosine_similarity(q.qv, n.embedding), 6) DESC, $cand.nid) AS rk
+       |    FROM $cand JOIN q ON q.qid = $cand.qid
+       |    JOIN embeddings n ON n.vec_id = $cand.nid) WHERE rk <= 10)""".stripMargin
+
+  /** DuckDB replay of a trained-IVF search for queries vec_id < 10: the
+    * training CTEs, then assignment, probes, candidates and the top `k`. */
+  private def ivfSearchSql(k: Int, trainWhere: String = ""): String =
+    s"""WITH ${IvfTrain.oracleCtes(IvfK, IvfIters, 64, trainWhere)},
+       |${ivfCandSql("probes", "cand", 10)},
+       |${candRerankSql("cs", k)}""".stripMargin
+
+  /** DuckDB `segs`, `e`, `fr` and `k` CTEs over the table `src`: the
+    * 10-word segments of [[TextUnits.segWindows]], their corpus frequency
+    * and the boilerplate flag — shared by dd_line_dedup and dd_incremental,
+    * with [[lineAggSql]], the per-doc screen of [[TextUnits.screenSegs]]. */
+  private def segOracleCtes(src: String): String =
+    s"""segs AS (
+       |  SELECT doc_id, unnest(list_transform(
+       |    range((len(str_split(text, ' ')) + 9) // 10), k ->
+       |      {'seg_idx': k, 'seg': array_to_string(
+       |        str_split(text, ' ')[k * 10 + 1 : k * 10 + 10], ' ')})) AS s
+       |  FROM $src),
+       |e AS (SELECT doc_id, s.seg_idx AS seg_idx, s.seg AS seg FROM segs),
+       |fr AS (SELECT md5(seg) AS h, count(*) AS n FROM e GROUP BY 1),
+       |k AS (SELECT e.doc_id, e.seg_idx, e.seg, fr.n >= $BoilerThreshold AS boiler
+       |      FROM e JOIN fr ON md5(e.seg) = fr.h)""".stripMargin
+  private val lineAggSql: String =
+    """SELECT doc_id, CAST(count(*) AS INT) AS n_segs,
+      |  CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS INT) AS n_dropped,
+      |  coalesce(string_agg(CASE WHEN NOT boiler THEN seg END, ' '
+      |    ORDER BY seg_idx), '') AS clean_text""".stripMargin
+
+  /** DuckDB twin of [[TextUnits.gram8Rows]]: the distinct md5-hashed
+    * word-8-gram list of `text` and its word floor (single lines). */
   private val gram8SqlD: String =
     "list_distinct(list_transform(range(len(str_split(text, ' ')) - 7), " +
       "i -> md5(array_to_string(str_split(text, ' ')[i + 1 : i + 8], ' '))))"
+  private val gram8FloorSqlD = "len(str_split(text, ' ')) >= 8"
+
+  /** DuckDB `g8` (the corpus 8-grams) and `ev` (the pseudo eval set's
+    * 8-grams) CTEs of dd_contamination and ta_curation. */
+  private val evalGramsOracleCtes: String =
+    s"""g8 AS (
+       |  SELECT doc_id, unnest($gram8SqlD) AS h
+       |  FROM documents WHERE $gram8FloorSqlD),
+       |ev AS (SELECT DISTINCT h FROM g8 WHERE doc_id % $PseudoEvalModulus = 0)""".stripMargin
 
   // stopword dictionaries for the language-ID heuristic
   private val langDicts: Seq[(String, Seq[String])] = Seq(
@@ -242,45 +297,22 @@ object DataPipeQueries {
     mixSpec.map { case (l, b, t) => s"('$l', '$b', $t)" }.mkString(", ")
 
   /** Eval seam (r5, VERDICT r4 #3): (eval 8-gram set, train-doc 8-grams)
-    * for the contamination screen. `spark.graft.eval.path` set ⇒ the eval
-    * set is a LOADED table (RuleLoader.evalTexts — json or parquet) and
-    * every document is a train doc; unset (the driver's differential mode)
-    * ⇒ the deterministic pseudo-set fixture (doc_id % 23 membership). */
-  private[entry] def evalSplit(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val g8 = docs(s, d).filter(size(wordsCol) >= 8)
-      .select(col("doc_id"), explode(gram8Expr).as("h"))
-    s.conf.getOption("spark.graft.eval.path") match {
-      case Some(p) =>
-        val ev = graft.sources.RuleLoader.evalTexts(s, p)
-          .filter(size(split(col("text"), " ")) >= 8)
-          .select(explode(gram8Expr).as("h")).distinct()
-        (ev, g8)
+    * of the corpus `ds` for the contamination screen under the eval set
+    * `es` — a loaded table's grams against every document, or the
+    * pseudo-set members' grams against the other documents. */
+  private def evalSplit(ds: DataFrame, es: EvalSet): (DataFrame, DataFrame) = {
+    val g8 = TextUnits.gram8Rows(ds, "doc_id")
+    es.loaded match {
+      case Some(ev) => (TextUnits.gram8Rows(ev).distinct(), g8)
       case None =>
         // r6: the eval and train legs split ONE persisted gram table —
         // unpersisted, each leg re-ran the full docs scan + 8-gram explode
         // + md5 (~n_words md5s per doc per leg). retain (not cycle):
-        // ta_curation calls this after jaccardVerified's cycle.
+        // ta_curation calls this after nearDupPairs' cycle.
         val g8p = QueryCache.retain(g8)
-        (g8p.filter(col("doc_id") % 23 === 0).select("h").distinct(),
-          g8p.filter(col("doc_id") % 23 =!= 0))
+        (g8p.filter(es.member).select("h").distinct(), g8p.filter(!es.member))
     }
   }
-
-  /** All ordered pairs (i < j) of an ASCENDING-sorted id array, as an array
-    * of (i, j) structs — the in-array pair generator for bucket-equijoin
-    * candidate generation (r6): `groupBy(bucket) → collect sorted members →
-    * explode pairs` computes the bucket index ONCE, where the former
-    * `index.as("a") JOIN index.as("b") ON same bucket AND a.id < b.id`
-    * evaluated the whole index subtree twice (once per join side) plus a
-    * join. Output pair set is identical. Skew note: a hot bucket is
-    * quadratic in EITHER form (that is the LSH candidate set itself); this
-    * form additionally holds one bucket's member ids in an array — ids
-    * only, bounded by the band collision rate, same order of memory as the
-    * join's per-key build side. */
-  private def sortedPairs(ids: Column): Column =
-    flatten(transform(ids, (x, ix) =>
-      transform(slice(ids, ix + lit(2), size(ids) - ix - lit(1)),
-        y => struct(x.as("i"), y.as("j")))))
 
   /** DuckDB `sh` (distinct word-3-gram shingles per doc of ≥ 3 words) and
     * `pairs` (shared-shingle counts per doc pair) CTEs — the candidate side
@@ -309,126 +341,16 @@ object DataPipeQueries {
        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
        |lab AS (SELECT node, min(r) AS comp FROM reach GROUP BY node)""".stripMargin
 
-  /** Verified n-gram-Jaccard near-dup pairs (threshold 1/2), Spark side —
-    * the EXACT prefix-filtered AllPairs join (see dd_ngram_jaccard for the
-    * algorithm notes). Returns (i, j, inter, na, nb); shared by
-    * dd_ngram_jaccard and the connected-components clustering. */
-  private[entry] def jaccardVerified(s: SparkSession, d: String): DataFrame = {
-    // docsh fans into 4 consumers (token index + both verify sides) —
-    // persist via the latest-only cycle() so the shingle arrays are
-    // computed once per query, not once per consumer
-    val docsh = cycle(docs(s, d).filter(size(wordsCol) >= 3)
-      .select(col("doc_id"), shinglesExpr.as("shs"))
-      .select(col("doc_id"), col("shs"), size(col("shs")).as("nsh")))
-    // candidate generation runs on 64-bit shingle hashes (cheap shuffles,
-    // no long strings); a hash collision can only ADD a candidate, never
-    // drop one, and the exact array_intersect verification removes it
-    val tok = docsh.select(col("doc_id"), col("nsh"), explode(col("shs")).as("sh"))
-      .select(col("doc_id"), col("nsh"), xxhash64(col("sh")).as("shh"))
-    val dfreq = tok.groupBy("shh").agg(count(lit(1)).as("df"))
-    val prefix = tok.join(dfreq, "shh")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("shh"))))
-      .filter(col("rk") <= floor(col("nsh") / 2) + 1)
-      .select("doc_id", "shh")
-    // (r6 note: a sortedPairs-style grouped rewrite of this self-join was
-    // measured SLOWER here — both prefix sides read the cached docsh, so
-    // the duplicate side is cheap and AQE broadcasts the join, while the
-    // grouped form adds a collect_list aggregation. See OPTIMIZATION_r06.md)
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.shh") === col("b.shh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
-    // verify joins keyed by i/j with NO broadcast hint: an explicit hint
-    // is never demoted for size, but AQE converts these to broadcast at
-    // runtime when the cached docsh side is small, and shuffles cleanly
-    // by i/j at corpus scale
-    cand
-      .join(docsh.select(col("doc_id").as("i"), col("shs").as("sa"),
-        col("nsh").as("na")), "i")
-      .join(docsh.select(col("doc_id").as("j"), col("shs").as("sb"),
-        col("nsh").as("nb")), "j")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .filter(lit(3) * col("inter") >= col("na") + col("nb"))
-      .select(col("i"), col("j"), col("inter"), col("na"), col("nb"))
-  }
+  /** The corpus's verified near-dup pairs (dd_ngram_jaccard), over a
+    * shingle frame cached for this query. */
+  private def nearDupPairs(s: SparkSession, d: String): DataFrame =
+    NearDup.pairs(cycle(NearDup.shingleSets(docs(s, d))))
 
-  /** Connected components of the near-dup pair graph by iterative min-label
-    * propagation WITH pointer-doubling: each round (a) takes the min comp
-    * over graph neighbours (one shuffle join keyed by node id) and then
-    * (b) shortcuts comp := comp(comp) via a labels self-join — the classic
-    * path-halving step, so rounds grow O(log diameter) instead of
-    * O(diameter) and a templated-corpus chain of length 10^6 converges in
-    * ~20 rounds, not 10^6 (ADVICE r3). Each round eagerly localCheckpoints —
-    * without it the logical plan DOUBLES per iteration (every round
-    * re-embeds the previous one), exploding optimizer time; with it every
-    * round plans against a materialized leaf, the scale-safe form of any
-    * iterative Spark loop. The round cap is 64 — with doubling that covers
-    * diameters ~2^64, so hitting it means a real bug, and it fails loud.
-    * Returns (node, comp) where comp = min doc_id of the component — the
-    * kept canonical doc. */
-  private[entry] def ccLabels(pairs: DataFrame): DataFrame = {
-    // fault-tolerance seam (VERDICT r4 #7): localCheckpoint truncates
-    // lineage but stores blocks only on executors — on a real cluster a
-    // lost executor invalidates the loop mid-flight. Setting
-    // `spark.graft.cc.checkpointDir` switches every per-round checkpoint to
-    // a RELIABLE one (HDFS/object-store backed), the form a 100-TB CC run
-    // needs; the local harness keeps the cheap default.
-    val sess = pairs.sparkSession
-    val reliable = sess.conf.getOption("spark.graft.cc.checkpointDir")
-    reliable.foreach { dir =>
-      if (sess.sparkContext.getCheckpointDir.isEmpty)
-        sess.sparkContext.setCheckpointDir(dir)
-    }
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable.isDefined) df.checkpoint() else df.localCheckpoint()
-    // retain (NOT cycle): jaccardVerified already cycled its docsh cache for
-    // this query; cycling again here would evict it before materialization
-    val jp = QueryCache.retain(pairs.select(col("i"), col("j")))
-    val edges = ckpt(jp.unionAll(jp.select(col("j").as("i"), col("i").as("j")))
-      .toDF("a", "b"))
-    var labels = ckpt(edges.select(col("a").as("node")).distinct()
-      .withColumn("comp", col("node")))
-    var changed = 1L
-    var iter = 0
-    val MaxIter = 64
-    while (changed > 0 && iter < MaxIter) {
-      val nbr = edges
-        .join(labels.select(col("node").as("b"), col("comp").as("nc")), "b")
-        .groupBy(col("a").as("node")).agg(min(col("nc")).as("nbr_min"))
-      // checkpoint before the self-join below, or the neighbour join runs
-      // twice per round (once per self-join side)
-      val prop = ckpt(labels.join(nbr, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
-          (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("_chg")))
-      // pointer doubling: comp := comp(comp). comp is always some node's id
-      // (init comp=node), so the self-join by comp→node total-covers.
-      // r6: the convergence count rides the checkpoint's materialization
-      // job as an observed metric — one job per round instead of two
-      // (checkpoint + count); Observation delivery on eager checkpoint
-      // actions verified, empty-frame edge included (sum→null→coalesce 0)
-      val obs = org.apache.spark.sql.Observation()
-      val next = ckpt(prop
-        .join(prop.select(col("node").as("comp"), col("comp").as("cc2")),
-          Seq("comp"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("cc2"), col("comp"))).as("comp"),
-          (col("_chg") ||
-            coalesce(col("cc2"), col("comp")) < col("comp")).as("_chg"))
-        .observe(obs, coalesce(sum(when(col("_chg"), 1L).otherwise(0L)),
-          lit(0L)).as("chg")))
-      changed = obs.get("chg").asInstanceOf[Long]
-      labels = next.drop("_chg")
-      iter += 1
-    }
-    // a silent non-converged exit would return WRONG labels (and disagree
-    // with the oracle's exact transitive closure) — fail loud instead
-    require(changed == 0,
-      s"connected components did not converge within $MaxIter rounds " +
-        "(pair-graph diameter too large?)")
-    labels
-  }
+  /** Near-dup CC labels `(node, comp)` of the corpus (dd_cluster_cc,
+    * ta_curation). retain (NOT cycle): cycling here would evict the
+    * shingle frame nearDupPairs cached before it materialized. */
+  private def ccLabels(s: SparkSession, d: String): DataFrame =
+    NearDup.ccLabels(QueryCache.retain(nearDupPairs(s, d).select(col("i"), col("j"))))
 
   val all: Seq[Q] = Seq(
 
@@ -446,43 +368,65 @@ object DataPipeQueries {
     },
 
     // ---- n-gram Jaccard near-dup pairs (integer-exact threshold 0.5; the
-    // DuckDB oracle stays the naive full inverted-index join).
-    //
-    // Spark side is EXACT prefix filtering (AllPairs/PPJoin, Bayardo et al.
-    // WWW'07): order shingles globally by ascending document frequency; for
-    // Jaccard ≥ 1/2 a pair must share ≥ ⌈n/2⌉ shingles, so each doc only
-    // needs its ⌊n/2⌋+1 RAREST shingles in the candidate index — a stop
-    // shingle in k docs no longer yields k² candidate pairs, because high-df
-    // shingles fall out of the prefixes. Candidates are then verified
-    // exactly with array_intersect, so the result is identical to the naive
-    // join (lossless, not an approximation).
+    // DuckDB oracle stays the naive full inverted-index join, the Spark side
+    // is NearDup.pairs' exact prefix-filtered AllPairs join).
     Q("dd_ngram_jaccard",
       s"""WITH $pairsOracleCtes
          |SELECT i, j, CAST(inter AS BIGINT) AS inter,
          |  CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb
          |FROM pairs WHERE 3 * inter >= na + nb ORDER BY i, j""".stripMargin) { (s, d) =>
-      jaccardVerified(s, d).orderBy("i", "j")
+      nearDupPairs(s, d).orderBy("i", "j")
     },
 
     // ---- near-dup CLUSTERING: the verified Jaccard pairs are only half the
     // dedup story — production dedup must group transitively-connected docs
     // into one cluster and keep a single canonical doc per cluster.
-    // Spark side: iterative min-label propagation over the pair graph (the
-    // standard distributed connected-components loop — each iteration is one
-    // shuffle join keyed by node id, converging in O(diameter) rounds; at
-    // corpus scale each round would also localCheckpoint to truncate
-    // lineage). Oracle: DuckDB recursive CTE computing the same transitive
-    // closure. comp = min doc_id of the component = the kept canonical doc.
+    // Spark side: NearDup.ccLabels' label propagation. Oracle: DuckDB
+    // recursive CTE computing the same transitive closure. comp = min doc_id
+    // of the component = the kept canonical doc.
     Q("dd_cluster_cc",
       s"""WITH RECURSIVE $ccOracleCtes
          |SELECT CAST(node AS BIGINT) AS doc_id, CAST(comp AS BIGINT) AS comp,
          |  CAST(count(*) OVER (PARTITION BY comp) AS BIGINT) AS n_members
          |FROM lab ORDER BY doc_id""".stripMargin) { (s, d) =>
-      ccLabels(jaccardVerified(s, d))
+      ccLabels(s, d)
         .withColumn("n_members",
           count(lit(1)).over(Window.partitionBy("comp")).cast("long"))
         .select(col("node").cast("long").as("doc_id"),
           col("comp").cast("long").as("comp"), col("n_members"))
+        .orderBy("doc_id")
+    },
+
+    // ---- CCNet-style segment-level boilerplate removal (r4): chunk every
+    // doc into non-overlapping 10-word segments, drop segments whose CORPUS
+    // frequency ≥ 3 (repeated template/boilerplate text), reassemble the
+    // doc from the survivors in order. The within-doc complement of
+    // doc-level dedup: near-dup docs keep their unique tails, shared
+    // boilerplate goes. Scale: explode ×~nw/10, hash-groupBy freq (map-side
+    // combine), one equijoin back — all embarrassingly parallel.
+    Q("dd_line_dedup",
+      s"""WITH ${segOracleCtes("documents")}
+         |$lineAggSql
+         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val e = TextUnits.segRows(docs(s, d))
+      val fr = e.groupBy(md5(col("seg")).as("h")).agg(count(lit(1)).as("n"))
+      TextUnits.screenSegs(e.join(fr, md5(col("seg")) === col("h"))
+        .withColumn("boiler", col("n") >= BoilerThreshold))
+        .orderBy("doc_id")
+    },
+
+    // ---- eval-contamination screen (r4): deterministic pseudo-eval-set
+    // (CurationState.evalSet); a training doc is contaminated when it shares
+    // ANY distinct 8-gram with any eval doc. Shape: hashed-shingle equijoin
+    // (the same primitive as dd_ngram_jaccard), never doc×doc.
+    Q("dd_contamination",
+      s"""WITH $evalGramsOracleCtes,
+         |tr AS (SELECT doc_id, h FROM g8 WHERE doc_id % $PseudoEvalModulus != 0)
+         |SELECT doc_id, CAST(count(*) AS INT) AS n_shared
+         |FROM tr JOIN ev USING (h) GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val (ev, tr) = evalSplit(docs(s, d), CurationState.evalSet(s))
+      tr.join(ev, "h")
+        .groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_shared"))
         .orderBy("doc_id")
     },
 
@@ -492,65 +436,12 @@ object DataPipeQueries {
     // canonicalization (drop every non-canonical member of a Jaccard
     // cluster). All pieces are the already-differential operators composed
     // into one plan: narrow feature projections + the CC loser anti-join.
-    // ---- CCNet-style segment-level boilerplate removal (r4): chunk every
-    // doc into non-overlapping 10-word segments, drop segments whose CORPUS
-    // frequency ≥ 3 (repeated template/boilerplate text), reassemble the
-    // doc from the survivors in order. The within-doc complement of
-    // doc-level dedup: near-dup docs keep their unique tails, shared
-    // boilerplate goes. Scale: explode ×~nw/10, hash-groupBy freq (map-side
-    // combine), one equijoin back — all embarrassingly parallel.
-    Q("dd_line_dedup",
-      """WITH segs AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    range((len(str_split(text, ' ')) + 9) // 10), k ->
-        |      {'seg_idx': k, 'seg': array_to_string(
-        |        str_split(text, ' ')[k * 10 + 1 : k * 10 + 10], ' ')})) AS s
-        |  FROM documents),
-        |e AS (SELECT doc_id, s.seg_idx AS seg_idx, s.seg AS seg FROM segs),
-        |fr AS (SELECT md5(seg) AS h, count(*) AS n FROM e GROUP BY 1),
-        |k AS (SELECT e.doc_id, e.seg_idx, e.seg, fr.n >= 3 AS boiler
-        |      FROM e JOIN fr ON md5(e.seg) = fr.h)
-        |SELECT doc_id, CAST(count(*) AS INT) AS n_segs,
-        |  CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS INT) AS n_dropped,
-        |  coalesce(string_agg(CASE WHEN NOT boiler THEN seg END, ' '
-        |    ORDER BY seg_idx), '') AS clean_text
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val e = docs(s, d).select(col("doc_id"), explode(segWindowsExpr).as("s"))
-        .select(col("doc_id"), col("s.seg_idx").as("seg_idx"),
-          col("s.seg").as("seg"))
-      val fr = e.groupBy(md5(col("seg")).as("h")).agg(count(lit(1)).as("n"))
-      graft.functions.TextUnits.screenSegs(e.join(fr, md5(col("seg")) === col("h"))
-        .withColumn("boiler", col("n") >= 3))
-        .orderBy("doc_id")
-    },
-
-    // ---- eval-contamination screen (r4): deterministic pseudo-eval-set
-    // (doc_id % 23 == 0); a training doc is contaminated when it shares ANY
-    // distinct 8-gram with any eval doc. Shape: hashed-shingle equijoin
-    // (the same primitive as dd_ngram_jaccard), never doc×doc.
-    Q("dd_contamination",
-      s"""WITH g8 AS (
-         |  SELECT doc_id, unnest($gram8SqlD) AS h
-         |  FROM documents WHERE len(str_split(text, ' ')) >= 8),
-         |ev AS (SELECT DISTINCT h FROM g8 WHERE doc_id % 23 = 0),
-         |tr AS (SELECT doc_id, h FROM g8 WHERE doc_id % 23 != 0)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_shared
-         |FROM tr JOIN ev USING (h) GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val (ev, tr) = evalSplit(s, d)
-      tr.join(ev, "h")
-        .groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_shared"))
-        .orderBy("doc_id")
-    },
-
     Q("ta_curation",
       s"""WITH RECURSIVE $ccOracleCtes,
-         |g8 AS (
-         |  SELECT doc_id, unnest($gram8SqlD) AS h
-         |  FROM documents WHERE len(str_split(text, ' ')) >= 8),
-         |ev AS (SELECT DISTINCT h FROM g8 WHERE doc_id % 23 = 0),
+         |$evalGramsOracleCtes,
          |contaminated AS (
          |  SELECT DISTINCT tr.doc_id FROM g8 tr JOIN ev USING (h)
-         |  WHERE tr.doc_id % 23 != 0),
+         |  WHERE tr.doc_id % $PseudoEvalModulus != 0),
          |losers AS (SELECT node AS doc_id FROM lab WHERE node != comp),
          |f AS (SELECT doc_id, $langScoresSqlD,
          |    len(str_split(text, ' ')) AS nw,
@@ -561,7 +452,7 @@ object DataPipeQueries {
          |SELECT doc_id, CAST(nw AS INT) AS nw, CAST(uniq_bp AS INT) AS uniq_bp
          |FROM g WHERE pred_lang = 'en' AND nw >= 5 AND uniq_bp >= 3500
          |  AND doc_id NOT IN (SELECT doc_id FROM losers)
-         |  AND doc_id % 23 != 0
+         |  AND doc_id % $PseudoEvalModulus != 0
          |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val feat = withLangScores(docs(s, d))
@@ -569,23 +460,20 @@ object DataPipeQueries {
         .withColumn("uniq_bp",
           floor(size(array_distinct(wordsCol)) * 10000 / size(wordsCol)).cast("int"))
         .withColumn("pred_lang", predLangCol)
-      val losers = ccLabels(jaccardVerified(s, d))
+      val losers = ccLabels(s, d)
         .filter(col("node") =!= col("comp")).select(col("node").as("doc_id"))
       // r4: the eval-contamination screen rides the same curation pass —
       // eval-member docs and any train doc sharing an 8-gram with one are
       // excluded from the training corpus (anti-joins, same primitive).
-      // Under the r5 conf-driven eval seam there are no member doc_ids, so
-      // the id-membership gate exists only in pseudo mode; loaded-eval
-      // exact copies are caught by the gram screen itself.
-      val (ev, trG8) = evalSplit(s, d)
+      // A loaded eval table has no member doc_ids, so its exact copies are
+      // caught by the gram screen itself.
+      val es = CurationState.evalSet(s)
+      val (ev, trG8) = evalSplit(docs(s, d), es)
       val contaminated = trG8.join(ev, "h").select("doc_id").distinct()
-      val memberGate =
-        if (s.conf.getOption("spark.graft.eval.path").isDefined) lit(true)
-        else col("doc_id") % 23 =!= 0
       feat.join(losers, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
         .filter(col("pred_lang") === "en" && col("nw") >= 5 &&
-          col("uniq_bp") >= 3500 && memberGate)
+          col("uniq_bp") >= 3500 && !es.member)
         .select(col("doc_id"), col("nw").cast("int").as("nw"), col("uniq_bp"))
         .orderBy("doc_id")
     },
@@ -605,32 +493,19 @@ object DataPipeQueries {
          |  UNION ALL
          |  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), text
          |  FROM documents),
-         |segs AS (
-         |  SELECT doc_id, unnest(list_transform(
-         |    range((len(str_split(text, ' ')) + 9) // 10), k ->
-         |      {'seg_idx': k, 'seg': array_to_string(
-         |        str_split(text, ' ')[k * 10 + 1 : k * 10 + 10], ' ')})) AS s
-         |  FROM docs2),
-         |e AS (SELECT doc_id, s.seg_idx AS seg_idx, s.seg AS seg FROM segs),
-         |fr AS (SELECT md5(seg) AS h, count(*) AS n FROM e GROUP BY 1),
-         |k AS (SELECT e.doc_id, e.seg_idx, e.seg, fr.n >= 3 AS boiler
-         |      FROM e JOIN fr ON md5(e.seg) = fr.h),
-         |line AS (SELECT doc_id, CAST(count(*) AS INT) AS n_segs,
-         |  CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS INT) AS n_dropped,
-         |  coalesce(string_agg(CASE WHEN NOT boiler THEN seg END, ' '
-         |    ORDER BY seg_idx), '') AS clean_text
+         |${segOracleCtes("docs2")},
+         |line AS ($lineAggSql
          |  FROM k GROUP BY doc_id),
          |keepers AS (SELECT min(doc_id) AS doc_id FROM docs2 GROUP BY md5(text)),
          |g8 AS (SELECT doc_id, unnest($gram8SqlD) AS h
-         |  FROM docs2 WHERE len(str_split(text, ' ')) >= 8),
-         |ev AS (SELECT DISTINCT h FROM g8 WHERE doc_id % 23 = 0),
+         |  FROM docs2 WHERE $gram8FloorSqlD),
+         |ev AS (SELECT DISTINCT h FROM g8 WHERE doc_id % $PseudoEvalModulus = 0),
          |sh AS (SELECT doc_id, CAST(count(*) AS INT) AS n_shared
          |  FROM g8 JOIN ev USING (h) GROUP BY doc_id)
          |SELECT kp.doc_id, line.n_segs, line.n_dropped, line.clean_text,
          |  coalesce(sh.n_shared, 0) AS n_shared
          |FROM keepers kp JOIN line USING (doc_id) LEFT JOIN sh USING (doc_id)
          |ORDER BY kp.doc_id""".stripMargin) { (s, d) =>
-      import graft.operators.CurationState
       val base = docs(s, d).select(col("doc_id"), col("text"))
       val mx = base.agg(max(col("doc_id"))).first().getLong(0)
       val shifted = base.select((col("doc_id") + lit(mx + 1)).as("doc_id"),
@@ -672,8 +547,7 @@ object DataPipeQueries {
       // shingle rows (not a 12× seed explode — that multiplied shuffle input
       // by MinhashSeeds); band signatures are then a narrow concat + a
       // 3-element explode of the per-doc row.
-      val sh = docs(s, d).filter(size(wordsCol) >= 3)
-        .select(col("doc_id"), explode(shinglesExpr).as("sh"))
+      val sh = NearDup.shingleRows(docs(s, d))
       val mhAggs = (0 until MinhashSeeds).map(k =>
         min(md5(concat(col("sh"), lit(s"#$k")))).as(s"mh$k"))
       val mh = sh.groupBy("doc_id").agg(mhAggs.head, mhAggs.tail: _*)
@@ -690,7 +564,7 @@ object DataPipeQueries {
       bands.groupBy("band", "sig")
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        .select(explode(sortedPairs(col("ids"))).as("p"))
+        .select(explode(NearDup.sortedPairs(col("ids"))).as("p"))
         .select(col("p.i").as("i"), col("p.j").as("j"))
         .distinct().orderBy("i", "j")
     },
@@ -748,18 +622,8 @@ object DataPipeQueries {
     // ---- embedding near-dup, SCALE path: sign-bit LSH bucketing (8 fixed
     // dims) restricts candidate pairs to one bucket — the bucketed twin of
     // the all-pairs dd_embed_cosine verification path above.
-    Q("dd_embed_lsh",
-      """WITH bk AS (
-        |  SELECT vec_id, embedding,
-        |    (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[9] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[17] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[25] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[33] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[41] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[49] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[57] >= 0 THEN '1' ELSE '0' END) AS bucket
-        |  FROM embeddings)
+    Q("dd_embed_lsh", signBucketCteSqlD +
+      """
         |SELECT a.vec_id AS i, b.vec_id AS j
         |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.3
@@ -794,26 +658,14 @@ object DataPipeQueries {
 
     // ---- LSH-bucketed ANN (scale path): bucket = sign bits of 8 fixed
     // dims; candidates only within the query's bucket.
-    Q("ann_lsh_topk",
-      """WITH bk AS (
-        |  SELECT vec_id, embedding,
-        |    (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[9] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[17] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[25] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[33] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[41] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[49] >= 0 THEN '1' ELSE '0' END)
-        |    || (CASE WHEN embedding[57] >= 0 THEN '1' ELSE '0' END) AS bucket
-        |  FROM embeddings),
+    Q("ann_lsh_topk", signBucketCteSqlD +
+      s""",
         |sc AS (
         |  SELECT q.vec_id AS qid, e.vec_id AS nid,
         |    round(list_cosine_similarity(q.embedding, e.embedding), 6) AS c
         |  FROM bk q JOIN bk e ON q.bucket = e.bucket AND e.vec_id != q.vec_id
         |  WHERE q.vec_id < 20),
-        |rk AS (SELECT qid, nid,
-        |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
-        |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
+        |${rankSql("c", 3)}""".stripMargin) { (s, d) =>
       val e = vectors(embs(s, d), bucket = Some(signBucket))
       rerank(queries(e.filter(col("vec_id") < 20))
         .join(neighbours(e), col("qb") === col("nb") && col("nid") =!= col("qid")), 3)
@@ -841,12 +693,10 @@ object DataPipeQueries {
          |  SELECT pr.qid, e.vec_id AS nid,
          |    round(list_cosine_similarity(pr.qv, e.embedding), 6) AS c
          |  FROM pr JOIN bk e ON e.bucket = pr.probe AND e.vec_id != pr.qid),
-         |rk AS (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
-         |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
+         |${rankSql("c", 3)}""".stripMargin) { (s, d) =>
       val e = vectors(embs(s, d), bucket = Some(signBucket))
       val q = queries(e.filter(col("vec_id") < 20))
-        .withColumn("probe", explode(probesExpr))
+        .withColumn("probe", explode(hammingProbes))
       rerank(q.join(neighbours(e), col("nb") === col("probe") && col("nid") =!= col("qid")), 3)
         .orderBy("qid", "rank")
     },
@@ -860,16 +710,8 @@ object DataPipeQueries {
       s"""WITH e AS (
          |  SELECT vec_id, embedding, $signBucketSqlD AS bucket FROM embeddings),
          |q AS (SELECT vec_id AS qid, embedding AS qv, bucket AS qb FROM e WHERE vec_id < 20),
-         |truth AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.qid, e.vec_id AS nid, row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY round(list_cosine_similarity(q.qv, e.embedding), 6) DESC, e.vec_id) AS rk
-         |    FROM q, e WHERE e.vec_id != q.qid) WHERE rk <= 10),
-         |lsh1 AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.qid, e.vec_id AS nid, row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY round(list_cosine_similarity(q.qv, e.embedding), 6) DESC, e.vec_id) AS rk
-         |    FROM q JOIN e ON e.bucket = q.qb AND e.vec_id != q.qid) WHERE rk <= 10),
+         |${top10Sql("truth", "q", "q, e WHERE e.vec_id != q.qid")},
+         |${top10Sql("lsh1", "q", "q JOIN e ON e.bucket = q.qb AND e.vec_id != q.qid")},
          |pr AS (
          |  SELECT qid, qv, unnest(list_transform(range(0, 9), i ->
          |    CASE WHEN i = 0 THEN qb
@@ -877,11 +719,7 @@ object DataPipeQueries {
          |           || (CASE WHEN substr(qb, i, 1) = '1' THEN '0' ELSE '1' END)
          |           || substr(qb, i + 1) END)) AS probe
          |  FROM q),
-         |mp AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT pr.qid, e.vec_id AS nid, row_number() OVER (PARTITION BY pr.qid
-         |      ORDER BY round(list_cosine_similarity(pr.qv, e.embedding), 6) DESC, e.vec_id) AS rk
-         |    FROM pr JOIN e ON e.bucket = pr.probe AND e.vec_id != pr.qid) WHERE rk <= 10),
+         |${top10Sql("mp", "pr", "pr JOIN e ON e.bucket = pr.probe AND e.vec_id != pr.qid")},
          |c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
          |asg AS (SELECT vec_id, cid FROM (
          |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
@@ -912,12 +750,10 @@ object DataPipeQueries {
       // IVF, same codebook/probing as ann_ivf_topk but k=10 over the 20 queries
       val asg = neighbours(nearestStandIn(e, e, 1), Seq("cid"))
       val ipr = queries(nearestStandIn(e, e.filter(col("vec_id") < 20), 2), Seq("cid"))
-      val ivf = broadcast(ipr).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct()
       recallRows(q, n,
-        "ivf" -> ivf,
+        "ivf" -> ivfCandidates(ipr, asg, "qv", "qn", "nv", "nn"),
         "lsh1" -> q.join(n, col("nb") === col("qb") && col("nid") =!= col("qid")),
-        "lsh_mp" -> q.withColumn("probe", explode(probesExpr))
+        "lsh_mp" -> q.withColumn("probe", explode(hammingProbes))
           .join(n, col("nb") === col("probe") && col("nid") =!= col("qid")))
     },
 
@@ -928,7 +764,7 @@ object DataPipeQueries {
     // At 100 TB the posting lists are the partition keys: assignment is a
     // broadcast join (codebook is tiny), search touches only nprobe lists.
     Q("ann_ivf_topk",
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
+      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
         |asg AS (
         |  SELECT vec_id, cid FROM (
         |    SELECT e.vec_id, c.cid,
@@ -944,20 +780,11 @@ object DataPipeQueries {
         |cand AS (
         |  SELECT DISTINCT p.qid, a.vec_id AS nid
         |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id != p.qid),
-        |sc AS (
-        |  SELECT cand.qid, cand.nid,
-        |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS cs
-        |  FROM cand
-        |  JOIN embeddings q ON q.vec_id = cand.qid
-        |  JOIN embeddings n ON n.vec_id = cand.nid),
-        |rk AS (SELECT qid, nid,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, nid) AS rank FROM sc)
-        |SELECT qid, rank, nid FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin) { (s, d) =>
+        |${candRerankSql("cs", 3)}""".stripMargin) { (s, d) =>
       val e = vectors(embs(s, d))
       val asg = neighbours(nearestStandIn(e, e, 1), Seq("cid"))
       val probes = queries(nearestStandIn(e, e.filter(col("vec_id") < 10), 2), Seq("cid"))
-      rerank(broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct(), 3)
+      rerank(ivfCandidates(probes, asg, "qv", "qn", "nv", "nn"), 3)
         .orderBy("qid", "rank")
     },
 
@@ -969,35 +796,10 @@ object DataPipeQueries {
     // single fixed-dim table — ann_recall_v2 / BENCH.md). At 100 TB each
     // (t, bk) bucket is an equijoin key; candidates ≈ L·9·N/256 per query.
     Q("ann_lsh_rp",
-      s"""WITH idx AS (
-         |$rpIdxSqlD),
-         |pr AS (
-         |  SELECT vec_id AS qid, t, $rpProbeSqlD AS probe
-         |  FROM idx WHERE vec_id < 20),
-         |cand AS (
-         |  SELECT DISTINCT pr.qid, i.vec_id AS nid
-         |  FROM pr JOIN idx i ON i.t = pr.t AND i.bk = pr.probe
-         |    AND i.vec_id != pr.qid),
-         |sc AS (
-         |  SELECT cand.qid, cand.nid,
-         |    round(list_cosine_similarity(q.embedding, n.embedding), 6) AS c
-         |  FROM cand
-         |  JOIN embeddings q ON q.vec_id = cand.qid
-         |  JOIN embeddings n ON n.vec_id = cand.nid),
-         |rk AS (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank FROM sc)
-         |SELECT qid, rank, nid FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin) { (s, d) =>
+      s"""WITH ${rpCandSql("cand")},
+         |${candRerankSql("c", 5)}""".stripMargin) { (s, d) =>
       val base = cycle(vectors(embs(s, d), col("embedding").cast("array<double>")))
-      val idx = base.select(col("vec_id"), rpIdxCol(col("v")).as("tb"))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.bk").as("bk"))
-      val pr = idx.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("t").as("qt"), col("bk").as("qb"))
-        .withColumn("probe", explode(probesExpr))
-      val cand = pr
-        .join(idx.select(col("vec_id").as("nid"), col("t"), col("bk")),
-          col("t") === col("qt") && col("bk") === col("probe") &&
-            col("nid") =!= col("qid"))
-        .select("qid", "nid").distinct()
+      val cand = hyperplaneCandidates(base, "v", rpPlanes, 20)
       rerank(cand.join(queries(base), "qid").join(neighbours(base), "nid"), 5)
         .orderBy("qid", "rank")
     },
@@ -1016,8 +818,7 @@ object DataPipeQueries {
       val asg = neighbours(IvfTrain.nearest(ep, cents, 1), Seq("cid"), "vd", "nd")
       val probes = queries(IvfTrain.nearest(ep.filter(col("vec_id") < 10), cents,
         IvfProbes), Seq("cid"), "vd", "nd")
-      rerank(broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select("qid", "nid", "qv", "qn", "nv", "nn").distinct(), 3)
+      rerank(ivfCandidates(probes, asg, "qv", "qn", "nv", "nn"), 3)
         .orderBy("qid", "rank")
     },
 
@@ -1069,45 +870,11 @@ object DataPipeQueries {
     Q("ann_recall_v2",
       s"""WITH ${IvfTrain.oracleCtes(IvfK, IvfIters, 64)},
          |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 20),
-         |truth AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.qid, e.vec_id AS nid, row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY round(list_cosine_similarity(q.qv, e.embedding), 6) DESC, e.vec_id) AS rk
-         |    FROM q, embeddings e WHERE e.vec_id != q.qid) WHERE rk <= 10),
-         |idx AS (
-         |$rpIdxSqlD),
-         |pr AS (
-         |  SELECT vec_id AS qid, t, $rpProbeSqlD AS probe
-         |  FROM idx WHERE vec_id < 20),
-         |lcand AS (
-         |  SELECT DISTINCT pr.qid, i.vec_id AS nid
-         |  FROM pr JOIN idx i ON i.t = pr.t AND i.bk = pr.probe
-         |    AND i.vec_id != pr.qid),
-         |lsh AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT lcand.qid, lcand.nid, row_number() OVER (PARTITION BY lcand.qid
-         |      ORDER BY round(list_cosine_similarity(q.qv, n.embedding), 6) DESC, lcand.nid) AS rk
-         |    FROM lcand JOIN q ON q.qid = lcand.qid
-         |    JOIN embeddings n ON n.vec_id = lcand.nid) WHERE rk <= 10),
-         |asg AS (
-         |  SELECT vec_id AS nid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c) WHERE rk = 1),
-         |iprobes AS (
-         |  SELECT vec_id AS qid, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY $ivfCosSql DESC, c.cid) AS rk
-         |    FROM eq e, cents$IvfIters c WHERE e.vec_id < 20) WHERE rk <= $IvfProbes),
-         |icand AS (
-         |  SELECT DISTINCT p.qid, a.nid
-         |  FROM iprobes p JOIN asg a ON p.cid = a.cid AND a.nid != p.qid),
-         |ivf AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT icand.qid, icand.nid, row_number() OVER (PARTITION BY icand.qid
-         |      ORDER BY round(list_cosine_similarity(q.qv, n.embedding), 6) DESC, icand.nid) AS rk
-         |    FROM icand JOIN q ON q.qid = icand.qid
-         |    JOIN embeddings n ON n.vec_id = icand.nid) WHERE rk <= 10),
+         |${top10Sql("truth", "q", "q, embeddings e WHERE e.vec_id != q.qid")},
+         |${rpCandSql("lcand")},
+         |${candTop10Sql("lsh", "lcand")},
+         |${ivfCandSql("iprobes", "icand", 20)},
+         |${candTop10Sql("ivf", "icand")},
          |h AS (
          |  SELECT 'ivf_trained' AS method, count(*) AS hits FROM ivf JOIN truth USING (qid, nid)
          |  UNION ALL SELECT 'lsh_rp', count(*) FROM lsh JOIN truth USING (qid, nid))
@@ -1116,23 +883,13 @@ object DataPipeQueries {
       val ep = cycle(IvfTrain.prepared(embs(s, d)))
       val q = queries(ep.filter(col("vec_id") < 20), v = "vd", nrm = "nd")
       val n = neighbours(ep, v = "vd", nrm = "nd")
-      val idx = ep.select(col("vec_id"), rpIdxCol(col("vd")).as("tb"))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.bk").as("bk"))
-      val pr = idx.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid2"), col("t").as("qt"), col("bk").as("qb"))
-        .withColumn("probe", explode(probesExpr))
-      val lcand = pr
-        .join(idx.select(col("vec_id").as("nid"), col("t"), col("bk")),
-          col("t") === col("qt") && col("bk") === col("probe") &&
-            col("nid") =!= col("qid2"))
-        .select(col("qid2").as("qid"), col("nid")).distinct()
+      val lcand = hyperplaneCandidates(ep, "vd", rpPlanes, 20)
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
       val asg = IvfTrain.nearest(ep, cents, 1)
         .select(col("vec_id").as("nid"), col("cid"))
       val iprobes = IvfTrain.nearest(ep.filter(col("vec_id") < 20), cents, IvfProbes)
         .select(col("vec_id").as("qid"), col("cid"))
-      val icand = broadcast(iprobes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
-        .select("qid", "nid").distinct()
+      val icand = ivfCandidates(iprobes, asg)
       recallRows(q, n,
         "ivf_trained" -> icand.join(q, "qid").join(n, "nid"),
         "lsh_rp" -> lcand.join(q, "qid").join(n, "nid"))

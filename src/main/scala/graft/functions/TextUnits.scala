@@ -20,6 +20,11 @@ object TextUnits {
       |  k -> struct(k AS seg_idx,
       |    array_join(slice(split(text, ' '), k * 10 + 1, 10), ' ') AS seg))""".stripMargin)
 
+  /** One row `(doc_id, seg_idx, seg)` per [[segWindows]] segment of `df`. */
+  def segRows(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), explode(segWindows).as("s"))
+      .select(col("doc_id"), col("s.seg_idx").as("seg_idx"), col("s.seg").as("seg"))
+
   /** Per-doc boilerplate screen over `(doc_id, seg_idx, seg, boiler)`
     * segment rows: `n_segs`, `n_dropped` (boiler segments) and `clean_text`,
     * the other segments rejoined in `seg_idx` order ('' when none is
@@ -33,8 +38,16 @@ object TextUnits {
         x => x.getField("seg")), " "), lit("")).as("clean_text"))
 
   /** Distinct md5-hashed word-8-gram shingles of `text` (the
-    * eval-contamination screen unit). Caller filters to docs of ≥ 8 words. */
+    * eval-contamination screen unit); valid only on docs of ≥ 8 words, so
+    * screens go through [[gram8Rows]]. */
   def gram8: Column = expr(
     """array_distinct(transform(sequence(0, size(split(text, ' ')) - 8),
       |  i -> md5(array_join(slice(split(text, ' '), i + 1, 8), ' '))))""".stripMargin)
+
+  /** One row `(keep…, h)` per distinct 8-gram hash of each row of `df` with
+    * at least 8 words. The floor keeps [[gram8]] valid: for a shorter text
+    * `sequence(0, size − 8)` counts down instead of coming out empty. */
+  def gram8Rows(df: DataFrame, keep: String*): DataFrame =
+    df.filter(size(split(col("text"), " ")) >= 8)
+      .select(keep.map(col) :+ explode(gram8).as("h"): _*)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,6 +41,22 @@ object CurationState {
   /** Segment corpus-frequency at/above which a segment is boilerplate. */
   val BoilerThreshold = 3
 
+  /** The pseudo eval set is the corpus docs with doc_id % 23 == 0. */
+  val PseudoEvalModulus = 23
+
+  /** The eval set: the table `loaded` from `spark.graft.eval.path` (json or
+    * parquet, RuleLoader.evalTexts) when set, else the pseudo-set — the
+    * deterministic fixture the differential runs on. */
+  final case class EvalSet(loaded: Option[DataFrame]) {
+    /** Whether a corpus doc is itself an eval doc (only pseudo-set ones are). */
+    def member: Column =
+      if (loaded.isDefined) lit(false) else col("doc_id") % PseudoEvalModulus === 0
+    /** The eval rows (with `text`): the loaded table, or the members of `docs`. */
+    def rows(docs: DataFrame): DataFrame = loaded.getOrElse(docs.filter(member))
+  }
+  def evalSet(spark: SparkSession): EvalSet = EvalSet(spark.conf
+    .getOption("spark.graft.eval.path").map(graft.sources.RuleLoader.evalTexts(spark, _)))
+
   final case class State(
       contentHashes: Option[DataFrame], // (fp, keep_id)
       segFreq: Option[DataFrame],       // (h, n) — n capped at BoilerThreshold
@@ -63,9 +79,8 @@ object CurationState {
     * all prior content (within-batch first-occurrence + cross-run anti-join,
     * the C1 shape), fold the batch's segment frequencies and eval 8-grams
     * into the state, write the full snapshot + manifest. `evalDocs` supplies
-    * the eval rows of this batch ((doc_id, text); defaults to the
-    * deterministic pseudo-set doc_id % 23 == 0 — the differential fixture;
-    * production loads a real table through the RuleLoader-style seam).
+    * the eval rows of this batch ((doc_id, text)); without it the session's
+    * [[evalSet]] does.
     *
     * Batches must be doc_id-ascending and non-overlapping (the Incremental
     * contract): then `kept` across runs equals single-batch exact dedup. */
@@ -91,21 +106,15 @@ object CurationState {
         case None => firstInBatch
       }
 
+      // each snapshot is the batch's rows, folded into the prior ones
+      def merged(prior: Option[DataFrame], batchRows: DataFrame)(
+          fold: DataFrame => DataFrame): DataFrame =
+        prior.fold(batchRows)(p => fold(p.unionByName(batchRows)))
       // --- content_hashes snapshot: union-min (associative, so batch order
       // cannot change the canonical keeper given ascending doc_ids)
-      val batchMin = fp.groupBy("fp").agg(min(col("doc_id")).as("keep_id"))
-      val chSnap = st.contentHashes match {
-        case Some(ch) => ch.unionByName(batchMin)
-          .groupBy("fp").agg(min(col("keep_id")).as("keep_id"))
-        case None => batchMin
-      }
-      // r6: snapshot row counts ride the write actions as observed metrics
-      // (same values as the former written-back re-reads — the observation
-      // counts exactly the rows the write commits — minus three read-back
-      // jobs per run; delivery on non-partitioned parquet writes verified
-      // incl. the empty-snapshot edge)
-      import org.apache.spark.sql.Observation
-      val chObs = Observation()
+      val chSnap = merged(st.contentHashes,
+        fp.groupBy("fp").agg(min(col("doc_id")).as("keep_id")))(
+        _.groupBy("fp").agg(min(col("keep_id")).as("keep_id")))
 
       // --- seg_freq snapshot: counts over ALL batch rows (single-pass
       // dd_line_dedup counts the full doc set, so the incremental fold must
@@ -114,40 +123,30 @@ object CurationState {
       val batchSegs = fp
         .select(explode(TextUnits.segWindows).as("s"))
         .groupBy(md5(col("s.seg")).as("h")).agg(count(lit(1)).as("n"))
-      val sfSnap = (st.segFreq match {
-        case Some(sf) => sf.unionByName(batchSegs)
-          .groupBy("h").agg(sum(col("n")).as("n"))
-        case None => batchSegs
-      }).select(col("h"),
+      val sfSnap = merged(st.segFreq, batchSegs)(
+        _.groupBy("h").agg(sum(col("n")).as("n"))).select(col("h"),
         least(col("n"), lit(BoilerThreshold.toLong)).cast("long").as("n"))
-      val sfObs = Observation()
 
       // --- eval_grams snapshot: distinct union of the batch's eval grams.
-      // Eval source precedence: explicit evalDocs param > the conf-driven
-      // loaded table (spark.graft.eval.path — json or parquet, the
-      // RuleLoader seam) > the deterministic pseudo-set fixture. NOTE with a
-      // loaded table the eval set is ingested on the FIRST run and re-folded
-      // idempotently on later ones (distinct union), so batches keep the
-      // boundary identity either way.
-      val evalRows = evalDocs
-        .orElse(spark.conf.getOption("spark.graft.eval.path")
-          .map(p => graft.sources.RuleLoader.evalTexts(spark, p)))
-        .getOrElse(fp.filter(col("doc_id") % 23 === 0))
-      val batchGrams = evalRows.filter(size(split(col("text"), " ")) >= 8)
-        .select(explode(TextUnits.gram8).as("h")).distinct()
-      val egSnap = st.evalGrams match {
-        case Some(eg) => eg.unionByName(batchGrams).distinct()
-        case None => batchGrams
-      }
-      val egObs = Observation()
-      // all three snapshots have committed before the manifest lands
-      def snapshot(df: DataFrame, obs: Observation, table: String): () => Unit =
-        () => df.observe(obs, count(lit(1)).as("n"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table")
-      graft.util.Concurrent.run(spark, Seq(
-        snapshot(chSnap, chObs, "content_hashes"),
-        snapshot(sfSnap, sfObs, "seg_freq"),
-        snapshot(egSnap, egObs, "eval_grams")))
+      // An explicit evalDocs param takes precedence over the session's eval
+      // set. NOTE with a loaded table the eval set is ingested on the FIRST
+      // run and re-folded idempotently on later ones (distinct union), so
+      // batches keep the boundary identity either way.
+      val evalRows = evalDocs.getOrElse(evalSet(spark).rows(fp))
+      val batchGrams = TextUnits.gram8Rows(evalRows).distinct()
+      val egSnap = merged(st.evalGrams, batchGrams)(_.distinct())
+      // all three snapshots have committed before the manifest lands.
+      // r6: snapshot row counts ride the write actions as observed metrics
+      // (same values as the former written-back re-reads — the observation
+      // counts exactly the rows the write commits — minus three read-back
+      // jobs per run; delivery on non-partitioned parquet writes verified
+      // incl. the empty-snapshot edge)
+      val snaps = Seq("content_hashes" -> chSnap, "seg_freq" -> sfSnap,
+        "eval_grams" -> egSnap).map { case (t, df) => (t, df, Observation()) }
+      graft.util.Concurrent.run(spark, snaps.map { case (t, df, obs) => () =>
+        df.observe(obs, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$runDir/$t")
+      })
 
       // --- metrics (same values as before — observed counts of the rows
       // each snapshot write committed), then manifest LAST
@@ -155,10 +154,8 @@ object CurationState {
       val metrics = Map(
         "n_batch" -> nBatch,
         "n_kept_new" -> keptN,
-        "n_dup" -> (nBatch - keptN),
-        "n_content_hashes" -> chObs.get("n").asInstanceOf[Long],
-        "n_seg_freq" -> sfObs.get("n").asInstanceOf[Long],
-        "n_eval_grams" -> egObs.get("n").asInstanceOf[Long])
+        "n_dup" -> (nBatch - keptN)) ++
+        snaps.map { case (t, _, obs) => s"n_$t" -> obs.get("n").asInstanceOf[Long] }
       graft.Incremental.writeManifest(stateDir, runId, metrics, Seq.empty)
       BatchResult(runId, kept.drop("fp"), metrics)
     } finally fp.unpersist()
@@ -173,14 +170,12 @@ object CurationState {
 
   def screenWith(spark: SparkSession, docsDf: DataFrame, st: State): DataFrame = {
     import spark.implicits._
-    val e = docsDf.select(col("doc_id"), explode(TextUnits.segWindows).as("s"))
-      .select(col("doc_id"), col("s.seg_idx").as("seg_idx"), col("s.seg").as("seg"))
+    val e = TextUnits.segRows(docsDf)
     val fr = st.segFreq.getOrElse(Seq.empty[(String, Long)].toDF("h", "n"))
     val line = TextUnits.screenSegs(e.join(fr, md5(col("seg")) === col("h"), "left_outer")
       .withColumn("boiler", coalesce(col("n"), lit(0L)) >= BoilerThreshold))
     val eg = st.evalGrams.getOrElse(Seq.empty[String].toDF("h"))
-    val shared = docsDf.filter(size(split(col("text"), " ")) >= 8)
-      .select(col("doc_id"), explode(TextUnits.gram8).as("h"))
+    val shared = TextUnits.gram8Rows(docsDf, "doc_id")
       .join(eg, Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_shared"))
     line.join(shared, Seq("doc_id"), "left_outer")

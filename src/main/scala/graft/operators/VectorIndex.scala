@@ -86,6 +86,42 @@ object VectorSearch {
       Seq(col(v).as(s"${p}v"), col(nrm).as(s"${p}n")) ++
       (if (f.columns.contains("bucket")) Seq(col("bucket").as(s"${p}b")) else Nil): _*)
 
+  /** Hamming-1 multi-probe list over an 8-bit `qb` bucket column: the
+    * bucket itself plus each single-bit flip (9 probes). */
+  def hammingProbes: Column = expr(
+    """transform(sequence(0, 8), i -> CASE WHEN i = 0 THEN qb
+      |  ELSE concat(substring(qb, 1, i - 1),
+      |              CASE WHEN substring(qb, i, 1) = '1' THEN '0' ELSE '1' END,
+      |              substring(qb, i + 1, 8)) END)""".stripMargin)
+
+  /** Random-hyperplane LSH candidates `(qid, nid)` over a frame with
+    * `vec_id` and the `array<double>` vector column `v`: every vector goes
+    * into one bucket per table of `planes`, each query (vec_id < nq) probes
+    * its bucket and the Hamming-1 flips in every table, and the pairs are
+    * distinct across tables, self excluded. */
+  def hyperplaneCandidates(f: DataFrame, v: String,
+      planes: IndexedSeq[IndexedSeq[Array[Double]]], nq: Int): DataFrame = {
+    val idx = f.select(col("vec_id"), explode(array(planes.indices.map(t =>
+        struct(lit(t).as("t"), Hyperplanes.bucketCol(col(v), planes(t)).as("bk"))): _*))
+        .as("tb"))
+      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bk").as("bk"))
+    val pr = idx.filter(col("vec_id") < nq)
+      .select(col("vec_id").as("qid"), col("t").as("qt"), col("bk").as("qb"))
+      .withColumn("probe", explode(hammingProbes))
+    pr.join(idx.select(col("vec_id").as("nid"), col("t"), col("bk")),
+        col("t") === col("qt") && col("bk") === col("probe") &&
+          col("nid") =!= col("qid"))
+      .select("qid", "nid").distinct()
+  }
+
+  /** IVF candidates: each query of `probes` (`qid`, `cid`, …) with every
+    * member of its probed posting lists in `asg` (`nid`, `cid`, …), self
+    * excluded, one row per pair of `(qid, nid, carry…)`. The probes side is
+    * broadcast: a query batch is small, the corpus is not. */
+  def ivfCandidates(probes: DataFrame, asg: DataFrame, carry: String*): DataFrame =
+    broadcast(probes).join(asg, Seq("cid")).filter(col("nid") =!= col("qid"))
+      .select("qid", "nid" +: carry: _*).distinct()
+
   /** Top-k of `(qid, nid, qv, qn, nv, nn)` candidates per query as
     * `(qid, rank, nid)`: the cosine `dot / (qn · nn)` rounded to 6 decimals
     * (the rank key both engines compute alike), ranked descending with ties

@@ -16,4 +16,19 @@ package object graftbridge {
   def inSession(session: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
       df.queryExecution.logical)
+
+  /** A checkpointed `df` with its carried size estimate capped at
+    * `spark.sql.defaultSizeInBytes` (the size of a leaf Spark cannot
+    * estimate; past it an estimate decides nothing). A join's estimate is
+    * the product of its sides', so in a loop that joins its own previous
+    * checkpoint the estimate's digits double every round. */
+  def withCappedStats(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case r: execution.LogicalRDD
+        if r.stats.sizeInBytes > BigInt(r.conf.defaultSizeInBytes) =>
+      val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+      classic.Dataset.ofRows(session, r.copy()(session,
+        Some(catalyst.plans.logical.Statistics(BigInt(r.conf.defaultSizeInBytes))),
+        Some(r.constraints)))
+    case _ => df
+  }
 }

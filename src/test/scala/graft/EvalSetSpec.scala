@@ -47,7 +47,10 @@ class EvalSetSpec extends SparkSuite {
 
       // ta_curation under the loaded table: the pseudo screen's id gate is
       // gone, but ≥8-word members are 100% contaminated, so the only rows
-      // that may appear beyond the pseudo output are short (<8-word) members
+      // that may appear beyond the pseudo output are short (<8-word) members.
+      // On sf0.001 no member has fewer than 8 words (every doc has 10–100),
+      // so shortMembers is empty and this subset check only passes when
+      // extra is empty; ShortDocSpec runs the short-doc floors themselves.
       val extCur = SparkEntry.queries("ta_curation")(spark, d)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       spark.conf.unset("spark.graft.eval.path")
