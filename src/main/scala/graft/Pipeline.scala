@@ -94,7 +94,8 @@ object Pipeline {
   }
 
   /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency
-    * read again (aux): enrichPlanned and Incremental.run pass them persisted.
+    * read again (aux): enrichPlanned, Incremental.run and the harness chain
+    * (LogQueries.scored) pass them persisted.
     * Also returns the C6/C7 part of the state after them
     * ([[NewAndFrequent.withState]]), which Incremental.run snapshots. */
   private[graft] def scoreSurvivors(survivors: DataFrame, tables: RuleTables,
@@ -106,52 +107,6 @@ object Pipeline {
       freq = true, state.seenValues, state.freqCounts, state.firedBuckets,
       aux = Some(survivors))
     (Scoring(flagged, conf), next)
-  }
-
-  // latest managed enrich: (identity key, result, cache-release thunk)
-  private val managedRef =
-    new java.util.concurrent.atomic.AtomicReference[Option[(Any, DataFrame, () => Unit)]](None)
-
-  /** enrichPlanned for fire-and-forget callers (the driver-harness queries,
-    * SparkEntry.entry): the returned DataFrame still benefits from the diamond
-    * persist, at most ONE managed plan's caches are ever live (the harness
-    * runs queries sequentially — no unbounded persist leak), and consecutive
-    * calls with the SAME inputs return the SAME DataFrame so its cached
-    * stages are shared instead of re-materialized (c8/c9/c9b run one chain,
-    * not three). Callers that control their own lifecycle should use
-    * enrichPlanned + the thunk.
-    *
-    * CONTRACT: callers are sequential and inputs are immutable — the cache is
-    * keyed by the canonicalized logical plan, so if the files under the same
-    * path change between calls the previous persisted data would be served;
-    * interleaved callers can see their cache released mid-use. Both hold for
-    * the driver harness (sequential queries over immutable sf dirs); anything
-    * else must use enrichPlanned directly. */
-  def enrichManaged(turns: DataFrame, tables: RuleTables,
-      conf: PipelineConf): DataFrame = managedRef.synchronized {
-    val key = (turns.queryExecution.logical.canonicalized, conf,
-      tables.sigRules, tables.whitelist,
-      tables.ioc.queryExecution.logical.canonicalized,
-      tables.ref.queryExecution.logical.canonicalized)
-    managedRef.get() match {
-      case Some((k, df, _)) if k == key => df
-      case prev =>
-        // release BEFORE persisting: persisting while the previous identical
-        // plan is still registered logs 'already cached' and the later
-        // unpersist would evict the shared entry from under the new plan
-        prev.foreach(_._3())
-        val (df, cleanup) = enrichPlanned(turns, tables, conf)
-        // r6: persist the FINAL enriched output too, not only the survivors
-        // diamond — the sharing callers (c8/c9/c9b/agg_rollup_sev_kind) each
-        // re-ran the post-survivors half of the chain (ioc/sig/ref joins +
-        // first-seen/frequency joins + scoring, ~2.5 s each at sf0.1)
-        // against the cached survivors; with the result cached they read one
-        // materialization (guide §5: reuse justifies the persist, and the
-        // managed lifecycle already bounds it to one live plan)
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        managedRef.set(Some((key, cached, () => { cached.unpersist(); cleanup() })))
-        cached
-    }
   }
 
   /** FIR alert-document projection (SURVEY §2.1 S4): the reference's output

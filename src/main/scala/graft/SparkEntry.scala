@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.entry.{LogQueries, Q, TestdataAdapter, TestdataTables}
+import graft.entry.{LogQueries, Q}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Queries live in graft.entry.* registries; each carries its DuckDB oracle. */
@@ -14,10 +14,7 @@ object SparkEntry {
   /** Flagship: full parse→enrich→score chain over sf0.001 events-as-turns,
     * severity distribution over ALL enriched rows (always non-empty). */
   def entry(spark: SparkSession): DataFrame =
-    Pipeline.enrichManaged(
-      TestdataAdapter.turns(spark, "/root/testdata/sf0.001"),
-      TestdataTables.rules(spark), LogQueries.tconf)
-      .groupBy("severity").count()
+    LogQueries.scored(spark, "/root/testdata/sf0.001").groupBy("severity").count()
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -23,8 +23,6 @@ import graft.operators.VectorSearch.{hammingProbes, hyperplaneCandidates,
   * scale paths (candidates only within shared buckets). */
 object DataPipeQueries {
 
-  private def cycle(df: DataFrame): DataFrame = QueryCache.cycle(df)
-
   /** A query's scratch dir under java.io.tmpdir, one per Spark application:
     * wiped and rewritten by each invocation in that application, never
     * shared with another JVM's. */
@@ -344,7 +342,7 @@ object DataPipeQueries {
   /** The corpus's verified near-dup pairs (dd_ngram_jaccard), over a
     * shingle frame cached for this query. */
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    NearDup.pairs(cycle(NearDup.shingleSets(docs(s, d))))
+    NearDup.pairs(QueryCache.cycle(NearDup.shingleSets(docs(s, d))))
 
   /** Near-dup CC labels `(node, comp)` of the corpus (dd_cluster_cc,
     * ta_curation). retain (NOT cycle): cycling here would evict the
@@ -744,7 +742,7 @@ object DataPipeQueries {
          |  UNION ALL SELECT 'lsh_mp', count(*) FROM mp JOIN truth USING (qid, nid))
          |SELECT method, hits, CAST(hits * 50 AS INT) AS recall_bp FROM h
          |ORDER BY method""".stripMargin) { (s, d) =>
-      val e = cycle(vectors(embs(s, d), bucket = Some(signBucket)))
+      val e = QueryCache.cycle(vectors(embs(s, d), bucket = Some(signBucket)))
       val q = queries(e.filter(col("vec_id") < 20))
       val n = neighbours(e)
       // IVF, same codebook/probing as ann_ivf_topk but k=10 over the 20 queries
@@ -798,7 +796,7 @@ object DataPipeQueries {
     Q("ann_lsh_rp",
       s"""WITH ${rpCandSql("cand")},
          |${candRerankSql("c", 5)}""".stripMargin) { (s, d) =>
-      val base = cycle(vectors(embs(s, d), col("embedding").cast("array<double>")))
+      val base = QueryCache.cycle(vectors(embs(s, d), col("embedding").cast("array<double>")))
       val cand = hyperplaneCandidates(base, "v", rpPlanes, 20)
       rerank(cand.join(queries(base), "qid").join(neighbours(base), "nid"), 5)
         .orderBy("qid", "rank")
@@ -813,7 +811,7 @@ object DataPipeQueries {
     // scale); the recall gain is measured in ann_recall_v2 and the clustered
     // case in AnnSpec.
     Q("ann_ivf_trained", ivfSearchSql(3)) { (s, d) =>
-      val ep = cycle(IvfTrain.prepared(embs(s, d)))
+      val ep = QueryCache.cycle(IvfTrain.prepared(embs(s, d)))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
       val asg = neighbours(IvfTrain.nearest(ep, cents, 1), Seq("cid"), "vd", "nd")
       val probes = queries(IvfTrain.nearest(ep.filter(col("vec_id") < 10), cents,
@@ -830,7 +828,7 @@ object DataPipeQueries {
     // the PartitionFilters pruning). The oracle replays training via the
     // unrolled CTE chain and searches the probed lists directly.
     Q("ann_ivf_index", ivfSearchSql(10)) { (s, d) =>
-      val ep = cycle(IvfTrain.prepared(embs(s, d)))
+      val ep = QueryCache.cycle(IvfTrain.prepared(embs(s, d)))
       val cents = IvfTrain.train(s, ep, IvfK, IvfIters, 64)
       // per-application scratch dir, not a fresh temp dir per invocation (ADVICE r5):
       // the overwrite-mode index write wipes it, so repeated bench runs
@@ -851,7 +849,7 @@ object DataPipeQueries {
     // dd_incremental: ingest N new embeddings costs O(N·k), not O(corpus).
     Q("ann_ivf_append",
       ivfSearchSql(10, "vec_id < (SELECT count(*) // 2 FROM embeddings)")) { (s, d) =>
-      val ep = cycle(IvfTrain.prepared(embs(s, d)))
+      val ep = QueryCache.cycle(IvfTrain.prepared(embs(s, d)))
       val half = embs(s, d).count() / 2
       val cents =
         IvfTrain.train(s, ep.filter(col("vec_id") < half), IvfK, IvfIters, 64)
@@ -880,7 +878,7 @@ object DataPipeQueries {
          |  UNION ALL SELECT 'lsh_rp', count(*) FROM lsh JOIN truth USING (qid, nid))
          |SELECT method, hits, CAST(hits * 50 AS INT) AS recall_bp FROM h
          |ORDER BY method""".stripMargin) { (s, d) =>
-      val ep = cycle(IvfTrain.prepared(embs(s, d)))
+      val ep = QueryCache.cycle(IvfTrain.prepared(embs(s, d)))
       val q = queries(ep.filter(col("vec_id") < 20), v = "vd", nrm = "nd")
       val n = neighbours(ep, v = "vd", nrm = "nd")
       val lcand = hyperplaneCandidates(ep, "vd", rpPlanes, 20)

@@ -29,6 +29,23 @@ object LogQueries {
   /** C1→C2 survivors: fp-dedup, then the whitelist. */
   private def survivors(s: SparkSession, d: String): DataFrame =
     Whitelist(Dedup(P(s, d), tconf), TestdataTables.whitelist)
+  /** The survivors, cached through [[QueryCache]]: the live cache when a
+    * chain query cached them, else cycled for this query. */
+  private def sharedSurvivors(s: SparkSession, d: String): DataFrame = {
+    val sv = survivors(s, d)
+    QueryCache.reuse(sv).getOrElse(QueryCache.cycle(sv))
+  }
+  /** The C1→C8 chain under [[tconf]], scored, for c8, c9, c9b,
+    * agg_rollup_sev_kind and [[graft.SparkEntry.entry]]. The scored frame is
+    * retained next to [[sharedSurvivors]], found by its turns' plan, so
+    * consecutive chain queries read one materialization until the next
+    * query cycles; a hit builds no plan, so it collects no rule dims. */
+  private[graft] def scored(s: SparkSession, d: String): DataFrame = {
+    val turns = T(s, d)
+    QueryCache.reuse(turns).getOrElse(QueryCache.retain(Pipeline.scoreSurvivors(
+      sharedSurvivors(s, d), TestdataTables.rules(s), tconf, Pipeline.State.empty)._1,
+      key = turns))
+  }
   /** C3→C5 over the survivors: IOC, signature rules, reference check. */
   private def c3to5(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -933,8 +950,7 @@ scored AS (
     Q("c8_scoring", sqlFull(
       """SELECT conv_id, turn_idx, note, severity, routed FROM scored
         |ORDER BY conv_id, turn_idx""".stripMargin)) { (s, d) =>
-      Pipeline.enrichManaged(T(s, d), TestdataTables.rules(s), tconf)
-        .select("conv_id", "turn_idx", "note", "severity", "routed")
+      scored(s, d).select("conv_id", "turn_idx", "note", "severity", "routed")
         .orderBy("conv_id", "turn_idx")
     },
 
@@ -942,13 +958,15 @@ scored AS (
     // numeric config surface (per-hit scores, FIR threshold, severity
     // bands, cf. RuleLoader mappings.json) proven end-to-end: both engines
     // re-derive note/severity/routed from the conf, so a stage silently
-    // ignoring the conf fails the differential. Uncached enrich on purpose
-    // (a second conf must not evict the c8/c9 shared chain cache).
+    // ignoring the conf fails the differential. confB reads nothing of C1
+    // or C2, so C3→C8 runs over the shared survivors; its output is not
+    // cached, so c9 still reads c8's scored frame.
     Q("c8b_scoring_conf", sqlFullFor(confB)(
       """SELECT severity, count(*) AS n, count(*) FILTER (WHERE routed) AS n_routed,
         |  CAST(sum(note) AS BIGINT) AS note_sum
         |FROM scored GROUP BY severity ORDER BY severity""".stripMargin)) { (s, d) =>
-      Pipeline.enrich(T(s, d), TestdataTables.rules(s), confB)
+      Pipeline.scoreSurvivors(sharedSurvivors(s, d), TestdataTables.rules(s), confB,
+        Pipeline.State.empty)._1
         .groupBy("severity")
         .agg(count(lit(1)).as("n"),
           count(when(col("routed"), 1)).as("n_routed"),
@@ -959,9 +977,7 @@ scored AS (
     Q("c9_route_counts", sqlFull(
       """SELECT severity, count(*) AS n FROM scored WHERE routed
         |GROUP BY severity ORDER BY severity""".stripMargin)) { (s, d) =>
-      Pipeline.rollupBySink(
-        Pipeline.enrichManaged(T(s, d), TestdataTables.rules(s), tconf))
-        .orderBy("severity")
+      Pipeline.rollupBySink(scored(s, d)).orderBy("severity")
     },
 
     // C9b: the FIR alert-document projection over routed rows — category =
@@ -988,9 +1004,7 @@ scored AS (
          |  ON scored.conv_id = f.conv_id AND scored.turn_idx = f.turn_idx) s
          |WHERE s.routed
          |ORDER BY s.conv_id, s.turn_idx""".stripMargin)) { (s, d) =>
-      Pipeline.alertDocs(
-        Pipeline.enrichManaged(T(s, d), TestdataTables.rules(s), tconf)
-          .filter(col("routed")))
+      Pipeline.alertDocs(scored(s, d).filter(col("routed")))
         .select("conv_id", "turn_idx", "note", "severity", "category", "subject")
         .orderBy("conv_id", "turn_idx")
     },
@@ -1037,7 +1051,7 @@ scored AS (
          |  WHERE s.routed)
          |GROUP BY ROLLUP(severity, kind)
          |ORDER BY severity_g, kind_g""".stripMargin)) { (s, d) =>
-      val enr = Pipeline.enrichManaged(T(s, d), TestdataTables.rules(s), tconf)
+      val enr = scored(s, d)
       val kindCases = Seq("ioc", "sig", "ref", "new", "freq")
         .map(k => s"CASE WHEN exists(hits, h -> h.kind = '$k') THEN '$k' END")
         .mkString(", ")
