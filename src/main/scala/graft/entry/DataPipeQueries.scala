@@ -346,7 +346,10 @@ object DataPipeQueries {
 
   /** Near-dup CC labels `(node, comp)` of the corpus (dd_cluster_cc,
     * ta_curation). retain (NOT cycle): cycling here would evict the
-    * shingle frame nearDupPairs cached before it materialized. */
+    * shingle frame nearDupPairs cached before it materialized. GraphX reads
+    * the pairs once either way, but uncached, AQE coalesces their verify
+    * stage to fewer tasks than the cached plan keeps (BENCH.md "CC through
+    * GraphX"). */
   private def ccLabels(s: SparkSession, d: String): DataFrame =
     NearDup.ccLabels(QueryCache.retain(nearDupPairs(s, d).select(col("i"), col("j"))))
 

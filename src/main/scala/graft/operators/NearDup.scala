@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graphx.Graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** Near-duplicate detection over `(doc_id, text)` documents: word-3-gram
   * shingles, the exact Jaccard ≥ 1/2 pairs and the connected components of
   * the pair graph (one canonical doc per near-dup cluster). Callers persist
-  * the frames they hand in; every decision is integer-exact, so the DuckDB
-  * oracles replay it bit for bit. */
+  * the shingle frame they hand to [[pairs]]; every decision is
+  * integer-exact, so the DuckDB oracles replay it bit for bit. */
 object NearDup {
 
   /** Distinct word-3-gram shingles of `text`. The words array is bound ONCE
@@ -101,74 +102,32 @@ object NearDup {
       .select(col("i"), col("j"), col("inter"), col("na"), col("nb"))
   }
 
-  /** Connected components of the near-dup pair graph `jp` (`i`, `j`) by
-    * iterative min-label propagation WITH pointer-doubling: each round (a)
-    * takes the min comp over graph neighbours (one shuffle join keyed by
-    * node id) and then (b) shortcuts comp := comp(comp) via a labels
-    * self-join — the classic path-halving step, so on a chain whose ids
-    * ascend along it rounds grow O(log diameter) instead of O(diameter)
-    * (ADVICE r3); ids shuffled along a chain take more rounds (26 for the
-    * 41-node path of NearDupSpec). Each round eagerly localCheckpoints —
-    * without it the logical plan DOUBLES per iteration (every round re-embeds
-    * the previous one), exploding optimizer time; with it every round plans
-    * against a materialized leaf, the scale-safe form of any iterative Spark
-    * loop. The round cap is 64, and hitting it fails loud. `jp` is read by
-    * both edge directions, so the caller passes it persisted. Returns
-    * (node, comp) where comp = min doc_id of the component — the kept
-    * canonical doc. */
+  /** Connected components of the near-dup pair graph `jp` (`i`, `j`, ids
+    * as longs): `(node, comp)` where comp = min doc_id of the component —
+    * the kept canonical doc. GraphX `connectedComponents` (Pregel min-id
+    * propagation, Gonzalez et al. OSDI'14) runs the fixpoint to convergence
+    * with no round cap; it reads `jp` once, into cached edge partitions,
+    * one per partition of `jp`. The one RDD of the operator lives here and
+    * does not leave it: the labels come back as a checkpointed DataFrame
+    * and the graphs are unpersisted. A deep graph's Pregel lineage is cut
+    * by Spark's own `spark.graphx.pregel.checkpointInterval` (needs a
+    * checkpoint dir).
+    *
+    * Fault-tolerance seam (VERDICT r4 #7, CcCheckpointSpec): when the
+    * context has a checkpoint directory (Spark's `spark.checkpoint.dir`)
+    * the labels are a RELIABLE checkpoint there (HDFS/object-store backed),
+    * the form a 100-TB run needs; otherwise a localCheckpoint. */
   def ccLabels(jp: DataFrame): DataFrame = {
-    // fault-tolerance seam (VERDICT r4 #7): localCheckpoint truncates
-    // lineage but stores blocks only on executors — on a real cluster a
-    // lost executor invalidates the loop mid-flight. When the context has a
-    // checkpoint directory (Spark's `spark.checkpoint.dir`), every per-round
-    // checkpoint is a RELIABLE one there (HDFS/object-store backed), the
-    // form a 100-TB CC run needs; the local harness keeps the cheap default.
-    val reliable = jp.sparkSession.sparkContext.getCheckpointDir.isDefined
-    // capped: the estimate a checkpoint carries doubles its digits per round
-    def ckpt(df: DataFrame): DataFrame = org.apache.spark.sql.graftbridge
-      .withCappedStats(if (reliable) df.checkpoint() else df.localCheckpoint())
-    val edges = ckpt(jp.unionAll(jp.select(col("j").as("i"), col("i").as("j")))
-      .toDF("a", "b"))
-    var labels = ckpt(edges.select(col("a").as("node")).distinct()
-      .withColumn("comp", col("node")))
-    var changed = 1L
-    var iter = 0
-    val MaxIter = 64
-    while (changed > 0 && iter < MaxIter) {
-      val nbr = edges
-        .join(labels.select(col("node").as("b"), col("comp").as("nc")), "b")
-        .groupBy(col("a").as("node")).agg(min(col("nc")).as("nbr_min"))
-      // checkpoint before the self-join below, or the neighbour join runs
-      // twice per round (once per self-join side)
-      val prop = ckpt(labels.join(nbr, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
-          (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("_chg")))
-      // pointer doubling: comp := comp(comp). comp is always some node's id
-      // (init comp=node), so the self-join by comp→node total-covers.
-      // r6: the convergence count rides the checkpoint's materialization
-      // job as an observed metric — one job per round instead of two
-      // (checkpoint + count); Observation delivery on eager checkpoint
-      // actions verified, empty-frame edge included (sum→null→coalesce 0)
-      val obs = org.apache.spark.sql.Observation()
-      val next = ckpt(prop
-        .join(prop.select(col("node").as("comp"), col("comp").as("cc2")),
-          Seq("comp"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("cc2"), col("comp"))).as("comp"),
-          (col("_chg") ||
-            coalesce(col("cc2"), col("comp")) < col("comp")).as("_chg"))
-        .observe(obs, coalesce(sum(when(col("_chg"), 1L).otherwise(0L)),
-          lit(0L)).as("chg")))
-      changed = obs.get("chg").asInstanceOf[Long]
-      labels = next.drop("_chg")
-      iter += 1
-    }
-    // a silent non-converged exit would return WRONG labels (and disagree
-    // with the oracle's exact transitive closure) — fail loud instead
-    require(changed == 0,
-      s"connected components did not converge within $MaxIter rounds " +
-        "(pair-graph diameter too large?)")
-    labels
+    import jp.sparkSession.implicits._
+    val graph = Graph.fromEdgeTuples(
+      jp.select(col("i").cast("long"), col("j").cast("long")).as[(Long, Long)].rdd, 0L)
+    val cc = graph.connectedComponents()
+    val labels = cc.vertices.toDF("node", "comp")
+    val kept =
+      if (jp.sparkSession.sparkContext.getCheckpointDir.isDefined) labels.checkpoint()
+      else labels.localCheckpoint()
+    cc.unpersist()
+    graph.unpersist()
+    kept
   }
 }

@@ -27,9 +27,6 @@ object RefModel {
       severity: String,
       routed: Boolean)
 
-  private val stringFields =
-    Seq("action", "user", "src_ip", "dst_host", "hashv", "uri")
-
   private def fieldOf(t: Turn, fields: Map[String, String], name: String): Option[String] =
     name match {
       case "role"    => Option(t.role)

@@ -67,7 +67,7 @@ object StreamPipeline {
             }
           } else {
             val wmMs = state.getCurrentWatermarkMs()
-            val sorted = it.toArray.sortBy(e => (e.ts_us, e.ts_sec))
+            val sorted = it.toArray.sortBy(e => (e.ts_us, !e.start))
             var st = state.getOption.getOrElse(ElapsedSt(-1L, -1L, done = false))
             val out = scala.collection.mutable.ArrayBuffer.empty[ElapsedOut]
             // An open transaction whose deadline the watermark has already

@@ -206,9 +206,35 @@ class ElapsedSpec extends SparkSuite {
       "fixture must exercise both resolutions through the stream")
   }
 
+  /** One tape event `(conv_id, ts_us, ts_sec, action, ts)` at second `sec`. */
+  private def ev(k: String, sec: Long, a: String) =
+    (k, sec * 1000000L, sec, a, new java.sql.Timestamp(sec * 1000L))
+
+  /** A file stream over `files`, one parquet file each (rows in the given
+    * order), replayed one file per micro-batch in list order. */
+  private def tapeStream(files: Seq[Seq[(String, Long, Long, String, java.sql.Timestamp)]]) = {
+    import java.nio.file.Files
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-elapsed-tape").toString
+    files.zipWithIndex.foreach { case (evs, i) =>
+      val tmp = Files.createTempDirectory("graft-elapsed-tape-part").toString
+      evs.toDF("conv_id", "ts_us", "ts_sec", "action", "ts")
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val src = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
+      Files.move(src.toPath, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+      ()
+    }
+    spark.readStream
+      .schema(spark.read.parquet(base).schema)
+      .option("maxFilesPerTrigger", "1").parquet(base)
+  }
+
   test("streaming: watermark passes deadline in the batch where new key data arrives " +
       "(ADVICE r4 race) — query survives, timeout-fires-first divergence pinned") {
-    import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamPipeline
     import spark.implicits._
@@ -223,30 +249,12 @@ class ElapsedSpec extends SparkSuite {
     // Pre-fix, batch 1 re-armed k's timeout at 1600s ≤ watermark 1700s and
     // GroupStateImpl.setTimeoutTimestamp threw, killing the whole query.
     val timeoutSec = 600L
-    def ev(k: String, sec: Long, a: String) =
-      (k, sec * 1000000L, sec, a, new java.sql.Timestamp(sec * 1000L))
     // w's events must survive the operator's isStart||isEnd filter (the
     // watermark is applied AFTER it), so they are starts; asserts filter to k
-    val files = Seq(
+    val stream = tapeStream(Seq(
       Seq(ev("k", 1000L, "s"), ev("w", 1700L, "s")),
       Seq(ev("k", 1750L, "s")),
-      Seq(ev("k", 1760L, "e"), ev("w", 3000L, "s")))
-    val base = Files.createTempDirectory("graft-elapsed-race").toString
-    files.zipWithIndex.foreach { case (evs, i) =>
-      val tmp = Files.createTempDirectory("graft-elapsed-race-part").toString
-      evs.toDF("conv_id", "ts_us", "ts_sec", "action", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      ()
-    }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+      Seq(ev("k", 1760L, "e"), ev("w", 3000L, "s"))))
 
     // multi: old txn expires (extra=0 — the 1750 start is NOT an extra start,
     // it opens a NEW transaction: the documented timeout-fires-first
@@ -277,6 +285,29 @@ class ElapsedSpec extends SparkSuite {
       if (r.isNullAt(3)) -1L else r.getLong(3), r.getString(4)))
       .filter(_._1 == "k").toSeq
     assert(gotS === Seq(("k", 1000L, -1L, -1L, "expired")))
+  }
+
+  test("streaming: an end and a start at the same microsecond pair as start-first, " +
+      "elapsed 0, as batch does") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamPipeline
+
+    // file 0 holds k's end row BEFORE its start row, both at 1000s; file 1
+    // moves the watermark past k's deadline, so a dropped end would show up
+    // as k expiring
+    val files = Seq(
+      Seq(ev("k", 1000L, "e"), ev("k", 1000L, "s")),
+      Seq(ev("w", 3000L, "s")))
+    val (isStart, isEnd) = (col("action") === "s", col("action") === "e")
+    val expect = Seq(("k", 1000L, 1000L, 0L, "matched"))
+    val batch = rows(Elapsed(files.flatten.toDF("conv_id", "ts_us", "ts_sec", "action", "ts"),
+      "conv_id", isStart, isEnd, 600L)).filter(_._1 == "k")
+    assert(batch === expect)
+    val q = StreamPipeline.elapsedStream(tapeStream(files), "conv_id", isStart, isEnd, 600L)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("elap_tie").trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    assert(rows(spark.table("elap_tie")).filter(_._1 == "k") === expect)
   }
 
   test("multi streaming twin (FMGWS): matched == batch multi exactly, expired a subset") {

@@ -7,7 +7,7 @@ import graft.operators.NearDup
 /** NearDup's pairs and components against values worked out by hand: the
   * Jaccard ≥ 1/2 boundary `3·inter = na + nb` (kept) and one shingle past it
   * (dropped), a stop shingle in many docs (pruned from the prefixes, yet no
-  * pair lost), and a long path whose labels need many propagation rounds. */
+  * pair lost), and long paths whose labels need many propagation rounds. */
 class NearDupSpec extends SparkSuite {
   import spark.implicits._
 
@@ -40,12 +40,20 @@ class NearDupSpec extends SparkSuite {
 
   test("ccLabels: every label is its component's minimum id (41-node path + a pair)") {
     // a path over a permutation of 1000..1040 (its minimum at one end, the
-    // slowest case for min-label propagation), and a separate 2-node component
-    val path = (0 until 41).map(k => 1000L + (k * 17) % 41)
-    val edges = path.zip(path.tail).map { case (a, b) => (a min b, a max b) } :+ (3L -> 9L)
+    // slowest case for min-label propagation), a separate 2-node component,
+    // and a 65-node chain over a permutation of 2000..2064 (longer than any
+    // fixed 64-round cap could label)
+    def chain(base: Long, n: Int, step: Int) = (0 until n).map(k => base + (k * step) % n)
+    val path = chain(1000L, 41, 17)
+    val long = chain(2000L, 65, 64)
+    def links(p: Seq[Long]) = p.zip(p.tail).map { case (a, b) => (a min b, a max b) }
+    val edges = links(path) ++ links(long) :+ (3L -> 9L)
+    val before = spark.sparkContext.getPersistentRDDs.size
     val labels = NearDup.ccLabels(edges.toDF("i", "j"))
-      .select(col("node").cast("long"), col("comp").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(labels == path.map(_ -> 1000L).toMap ++ Map(3L -> 3L, 9L -> 3L))
+    val persisted = spark.sparkContext.getPersistentRDDs.size - before
+    assert(persisted <= 1, s"$persisted persisted RDDs left behind (only the labels may stay)")
+    assert(labels.select(col("node").cast("long"), col("comp").cast("long"))
+      .as[(Long, Long)].collect().toMap ==
+      path.map(_ -> 1000L).toMap ++ long.map(_ -> 2000L) ++ Map(3L -> 3L, 9L -> 3L))
   }
 }
