@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -18,18 +18,11 @@ import graft.operators._
   * many runs came before, and state size stays bounded by the configured
   * windows instead of growing with history:
   * {{{
-  *   run-<id>/seen_values/   (field, value)         — full merged set
-  *   run-<id>/fp_seen/       (fp, fp_bucket)        — only the live bucket(s):
-  *                           ascending batches mean a future row's bucket is
-  *                           ≥ this run's max bucket, so older buckets can
-  *                           never suppress anything again
-  *   run-<id>/freq_counts/   (key, sec, cnt)        — only secs within
-  *                           freqWindowSec of this run's max ts_sec (the only
-  *                           ones a future trailing window can reach)
-  *   run-<id>/fired/         (key, reset_bucket)    — only buckets ≥ the max
-  *                           ts_sec's reset bucket
-  *   run-<id>/input_files/   (file)                 — lineage, written as a
-  *                           DataFrame (never collected to the driver)
+  *   run-<id>/<table>/       one dir per Pipeline.State table, pruned by
+  *                           State.live to what a later batch can reach
+  *   run-<id>/input_files/   (file)                 — lineage: every file the
+  *                           run read, written as a DataFrame (never
+  *                           collected to the driver)
   *   manifest/run-<id>.json  (written LAST — a run without a manifest is
   *                            invisible to state readers, so crashes are safe)
   * }}}
@@ -84,15 +77,7 @@ object Incremental {
   }
 
   def loadFullState(spark: SparkSession, stateDir: String): Pipeline.State =
-    Pipeline.State(
-      seenValues = loadLatest(spark, stateDir, "seen_values")
-        .map(_.select("field", "value")),
-      fpSeen = loadLatest(spark, stateDir, "fp_seen")
-        .map(_.select("fp", "fp_bucket")),
-      freqCounts = loadLatest(spark, stateDir, "freq_counts")
-        .map(_.select("key", "sec", "cnt")),
-      firedBuckets = loadLatest(spark, stateDir, "fired")
-        .map(_.select("key", "reset_bucket")))
+    Pipeline.State(loadLatest(spark, stateDir, _))
 
   /** Ops surface for the north rule's "lineage + metrics": every COMPLETED
     * run's manifest as ONE queryable DataFrame — run_id, the pointer to its
@@ -118,8 +103,8 @@ object Incremental {
   }
 
   /** Drill-down companion to [[stateReport]]: the raw LATEST snapshot of one
-    * state table (`seen_values` | `fp_seen` | `freq_counts` | `fired`) as a
-    * queryable DataFrame — None when no completed run has written it. */
+    * state table (a [[Pipeline.State.Tables]] name) as a queryable
+    * DataFrame — None when no completed run has written it. */
   def stateTable(spark: SparkSession, stateDir: String,
       table: String): Option[DataFrame] = loadLatest(spark, stateDir, table)
 
@@ -131,8 +116,6 @@ object Incremental {
     * over the same parquet the next run will load (nothing driver-side),
     * and a table the run never wrote reports 0 rows rather than vanishing. */
   def stateReport(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{count, lit}
-    val tables = Seq("seen_values", "fp_seen", "freq_counts", "fired")
     completedRuns(stateDir).lastOption match {
       case None =>
         spark.createDataFrame(
@@ -140,13 +123,11 @@ object Incremental {
           org.apache.spark.sql.types.StructType.fromDDL(
             "run_id string, table string, n_rows bigint"))
       case Some(r) =>
-        tables.map { t =>
-          loadLatest(spark, stateDir, t) match {
-            case Some(df) => df.agg(count(lit(1)).as("n_rows"))
-              .select(lit(r).as("run_id"), lit(t).as("table"), col("n_rows"))
-            case None => spark.range(1).select(lit(r).as("run_id"),
-              lit(t).as("table"), lit(0L).as("n_rows"))
-          }
+        val held = loadFullState(spark, stateDir).tables.toMap
+        Pipeline.State.Tables.map { case (t, _) =>
+          held.get(t).fold(spark.range(1).select(lit(0L).as("n_rows")))(
+            _.agg(count(lit(1)).as("n_rows")))
+            .select(lit(r).as("run_id"), lit(t).as("table"), col("n_rows"))
         }.reduce(_.unionByName(_))
     }
   }
@@ -220,21 +201,20 @@ object Incremental {
     // --- plan with observe() metrics at each stage boundary.
     // IMPORTANT: every observe node must sit BELOW a persist boundary —
     // `survivors` is read several times (the C3→C8 chain, NewAndFrequent's
-    // aggregation in the chain and again in the seen/freq/fired snapshots,
-    // the lineage), and a CollectMetrics node duplicated through those
-    // references reports NO metrics at all (observed empirically on Spark
-    // 4.1). Persisting the observed node makes downstream references hit the
-    // InMemoryRelation, so each observation executes exactly once.
+    // aggregation in the chain and again in the next state's snapshots),
+    // and a CollectMetrics node duplicated through those references reports
+    // NO metrics at all (observed empirically on Spark 4.1). Persisting the
+    // observed node makes downstream references hit the InMemoryRelation, so
+    // each observation executes exactly once.
     val obsIn = Observation(s"in-$runId")
     val obsDedup = Observation(s"dedup-$runId")
     val obsOut = Observation(s"out-$runId")
 
     val parsed = Parse(turns, conf)
-      .withColumn("_file", input_file_name())
       .observe(obsIn, count(lit(1)).as("n_input"),
         sum(when(col("parse_ok"), 1L).otherwise(0L)).as("n_parse_ok"))
     // persisted at the DEDUP boundary with a whitelist MARKER column (rows
-    // not yet dropped): the fp_seen snapshot must record fingerprints of
+    // not yet dropped): C1's next state must record fingerprints of
     // whitelisted rows too — in a single combined run, C1 dedup runs BEFORE
     // C2 whitelist, so a duplicate whose first occurrence was whitelisted is
     // still suppressed. Survivors are a narrow filter over this one cache.
@@ -245,7 +225,8 @@ object Incremental {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val survivors = deduped.filter(!col("_wl")).drop("_wl")
     val severities = conf.severityBands.map(_._2)
-    val (scored, next) = Pipeline.scoreSurvivors(survivors, tables, conf, state)
+    val (scored, checked) = Pipeline.scoreSurvivors(survivors, tables, conf, state)
+    val next = checked.copy(fpSeen = Some(Dedup.seen(deduped, state.fpSeen)))
     // the observation sees every scored row (max ts_sec is the time boundary
     // of this batch); only the routed rows, the alert sink's, are cached
     val routed = scored
@@ -253,10 +234,12 @@ object Incremental {
         max(col("ts_sec")).as("max_sec") +: Pipeline.sinkCountCols(conf, "sink_"): _*)
       .filter(col("routed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lineage: exact input files this run consumed, written distributed
-    // (never an O(files) driver collect — at 100 TB that's millions of
-    // entries). The manifest records the count + a bounded sample.
-    val files = survivors.select(col("_file").as("file")).distinct()
+    // lineage: every file this run reads, whether or not a row of it
+    // survives C1/C2, written distributed (never an O(files) driver collect —
+    // at 100 TB that's millions of entries). A scan of its own, so no
+    // observation is duplicated. The manifest records the count + a bounded
+    // sample.
+    val files = turns.select(input_file_name().as("file")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -285,7 +268,7 @@ object Incremental {
       // sinks: alert documents partitioned by (run_id, severity); dynamic
       // partition overwrite ⇒ a replayed run replaces its own partitions
       // (idempotent) without touching other runs'
-      def writeAlerts(): Unit = Pipeline.alertSink(routed.drop("_file"), conf)
+      def writeAlerts(): Unit = Pipeline.alertSink(routed, conf)
         .withColumn("run_id", lit(runId))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -293,26 +276,8 @@ object Incremental {
         .parquet(s"$outDir/alerts_all")
 
       // --- full, pruned state snapshot under run dir (invisible until the
-      // manifest lands): what a later row (ts_sec ≥ maxSec) can still reach
+      // manifest lands)
       val runDir = s"$stateDir/run-$runId"
-      def live(df: DataFrame, keep: Long => Column): DataFrame =
-        maxSec.fold(df)(s => df.filter(keep(s)))
-
-      // fp_seen from the POST-DEDUP, PRE-WHITELIST rows (see persist comment)
-      val batchFps = deduped.select(col("fp"), col("fp_bucket")).distinct()
-      val fpAll = state.fpSeen match {
-        case Some(st) => batchFps.unionByName(st.select("fp", "fp_bucket")).distinct()
-        case None => batchFps
-      }
-      // seen_values, freq_counts and fired come from the C6/C7 aggregation
-      val snapshots = Seq(
-        "seen_values" -> next.seenValues,
-        "fp_seen" -> Some(live(fpAll,
-          s => col("fp_bucket") >= Math.floorDiv(s, conf.dedupDelaySec))),
-        "freq_counts" -> next.freqCounts.map(live(_,
-          s => col("sec") >= s - conf.freqWindowSec)),
-        "fired" -> next.firedBuckets.map(live(_,
-          s => col("reset_bucket") >= Math.floorDiv(s, conf.freqResetSec))))
 
       var nFiles = 0L
       var fileSample = Seq.empty[String]
@@ -324,10 +289,9 @@ object Incremental {
       }
 
       // --- all six writes have committed before the manifest lands
-      def snapshot(df: DataFrame, table: String): () => Unit =
-        () => df.write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table")
       graft.util.Concurrent.run(spark, Seq(writeAlerts _, writeLineage _) ++
-        snapshots.collect { case (table, Some(df)) => snapshot(df, table) })
+        next.live(maxSec, conf).tables.map { case (table, df) =>
+          () => df.write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table") })
 
       val metrics = metrics0 + ("n_input_files" -> nFiles)
       val sinkCounts = severities.map(s => s -> metrics(s"sink_$s")).toMap

@@ -63,13 +63,50 @@ object Pipeline {
     * buckets, per-(key, sec) frequency counts, and fired frequency buckets.
     * Empty for a fresh run. Contract: batches are processed in ascending,
     * non-overlapping time ranges (assumed, not checked), under which
-    * run(A ∪ B) == run(B, state after A) exactly — see IncrementalSpec. */
+    * run(A ∪ B) == run(B, state after A) exactly — see IncrementalSpec.
+    * The checks build the next state: C1 its `fpSeen` ([[Dedup.seen]]), C6/C7
+    * the rest ([[NewAndFrequent.withState]]); [[live]] prunes it. */
   case class State(
       seenValues: Option[DataFrame],
       fpSeen: Option[DataFrame],
       freqCounts: Option[DataFrame] = None,
-      firedBuckets: Option[DataFrame] = None)
-  object State { val empty: State = State(None, None, None, None) }
+      firedBuckets: Option[DataFrame] = None) {
+    /** The tables held, by table name, in [[State.Tables]] order. */
+    def tables: Seq[(String, DataFrame)] =
+      State.Tables.map(_._1).zip(Seq(seenValues, fpSeen, freqCounts, firedBuckets))
+        .collect { case (t, Some(df)) => t -> df }
+
+    /** The rows a later batch can still reach: batches ascend, so its rows
+      * have ts_sec ≥ `maxSec`. fp_seen keeps the dedup buckets from
+      * `maxSec`'s on, freq_counts the seconds of one trailing window before
+      * it, fired the reset buckets from its own on; seen_values is kept
+      * whole. Without a `maxSec` (an empty batch) nothing is pruned. */
+    def live(maxSec: Option[Long], conf: PipelineConf): State = maxSec.fold(this) { s =>
+      def keep(t: Option[DataFrame], c: Column) = t.map(_.filter(c))
+      copy(
+        fpSeen = keep(fpSeen, col("fp_bucket") >= Math.floorDiv(s, conf.dedupDelaySec)),
+        freqCounts = keep(freqCounts, col("sec") >= s - conf.freqWindowSec),
+        firedBuckets = keep(firedBuckets,
+          col("reset_bucket") >= Math.floorDiv(s, conf.freqResetSec)))
+    }
+  }
+  object State {
+    val empty: State = State(None, None, None, None)
+
+    /** The four tables: name and columns, in field order. */
+    val Tables: Seq[(String, Seq[String])] = Seq(
+      "seen_values" -> Seq("field", "value"),
+      "fp_seen" -> Seq("fp", "fp_bucket"),
+      "freq_counts" -> Seq("key", "sec", "cnt"),
+      "fired" -> Seq("key", "reset_bucket"))
+
+    /** The state `load` finds, each table narrowed to its columns. */
+    def apply(load: String => Option[DataFrame]): State = {
+      val Seq(seen, fp, freq, fired) = Tables.map { case (t, cols) =>
+        load(t).map(_.select(cols.map(col): _*)) }
+      State(seen, fp, freq, fired)
+    }
+  }
 
   /** The pure transform: transcripts in, enriched detection rows out. No
     * persist: first-seen and frequency re-read the survivors' lineage. */
@@ -104,8 +141,7 @@ object Pipeline {
       SigRules(IocEnrich.probe(survivors, tables.iocByKind, conf), tables.sigRules),
       tables.refByField, conf)
     val (flagged, next) = NewAndFrequent.withState(enriched, conf, conf.trackedFields,
-      freq = true, state.seenValues, state.freqCounts, state.firedBuckets,
-      aux = Some(survivors))
+      freq = true, state, aux = Some(survivors))
     (Scoring(flagged, conf), next)
   }
 

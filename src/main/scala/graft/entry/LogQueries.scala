@@ -715,11 +715,8 @@ scored AS (
         |FROM tk, hw
         |WHERE end_sec IS NOT NULL OR last_sec + 25000 < hwm
         |ORDER BY conv_id""".stripMargin)) { (s, d) =>
-      TaskAggregate(P(s, d), "conv_id", col("action") === "exfil", 25000L,
-        Seq(coalesce(sum(col("status")), lit(0L)).cast("long").as("status_sum"),
-          countDistinct(col("action")).as("n_actions")))
-        .select("conv_id", "n_events", "first_sec", "last_sec", "end_sec",
-          "status_sum", "n_actions", "status")
+      TaskAggregate.finish(TaskAggregate.state(P(s, d), "conv_id",
+        col("action") === "exfil"), "conv_id", 25000L)
         .orderBy("conv_id")
     },
 

@@ -118,6 +118,14 @@ object Dedup {
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
+
+  /** The next `fp_seen`: the prior pairs plus those of `deduped`, which is
+    * [[apply]]'s output against the same `prior`: one row per pair and
+    * none of the prior ones, so a plain union is already a set (no shuffle). */
+  def seen(deduped: DataFrame, prior: Option[DataFrame]): DataFrame = {
+    val batch = deduped.select(col("fp"), col("fp_bucket"))
+    prior.fold(batch)(batch.unionByName(_))
+  }
 }
 
 /** C2 whitelist / first-stop rules: compiled predicate, applied BEFORE the
@@ -242,9 +250,10 @@ object RefCheck {
   *     tiny dim; AQE broadcasts it). A row is identified by (ts_us, conv_id,
   *     turn_idx), which the pipeline takes to be unique.
   *
-  * Cross-run state (resume): `seenValues` (field, value) pairs are not new;
-  * `priorCounts` per-(key, sec) counts extend the trailing window across a
-  * batch boundary; `firedBuckets` (key, reset-bucket) pairs do not fire again.
+  * Cross-run state (resume), from the prior [[graft.Pipeline.State]]:
+  * `seenValues` (field, value) pairs are not new; `freqCounts` per-(key, sec)
+  * counts extend the trailing window across a batch boundary; `firedBuckets`
+  * (key, reset-bucket) pairs do not fire again.
   * `aux`: the row source of the aggregation — pass the PERSISTED upstream
   * (the post-whitelist survivors) so it reads pruned cached columns instead
   * of recomputing the enrich chain. Must contain exactly the same rows as
@@ -252,15 +261,9 @@ object RefCheck {
 object NewAndFrequent {
   private val Freq = "" // the frequency events' check tag (no field name)
 
-  def apply(df: DataFrame, conf: PipelineConf, tracked: Seq[String], freq: Boolean,
-      seenValues: Option[DataFrame] = None,
-      priorCounts: Option[DataFrame] = None,
-      firedBuckets: Option[DataFrame] = None,
-      aux: Option[DataFrame] = None): DataFrame =
-    withState(df, conf, tracked, freq, seenValues, priorCounts, firedBuckets, aux)._1
-
-  /** [[apply]]'s rows and the C6/C7 part of the state after them, read off
-    * the same aggregation (unpruned; `fpSeen` is None):
+  /** The flagged rows and the C6/C7 part of the state after them, read off
+    * the same aggregation (unpruned; `fpSeen` is None, C1 builds its own
+    * with [[Dedup.seen]]):
     *  - `seenValues` (field, value): the prior values plus this batch's
     *    unseen ones — disjoint sets;
     *  - `freqCounts` (key, sec, cnt): the per-second counts the trailing
@@ -270,8 +273,7 @@ object NewAndFrequent {
     * Keys and values are cast back from the events' strings to the types of
     * the columns they came from, so the state keeps its schema. */
   def withState(df: DataFrame, conf: PipelineConf, tracked: Seq[String], freq: Boolean,
-      seenValues: Option[DataFrame], priorCounts: Option[DataFrame],
-      firedBuckets: Option[DataFrame],
+      prior: graft.Pipeline.State,
       aux: Option[DataFrame]): (DataFrame, graft.Pipeline.State) = {
     val src = aux.getOrElse(df)
     val rowKey = struct(col("ts_us"), col("conv_id"), col("turn_idx"))
@@ -287,7 +289,7 @@ object NewAndFrequent {
       .groupBy(col("_e._g").as("_g"), col("_e._k").as("_k"), col("_e._s").as("_s"))
       .agg(count(lit(1)).as("_c"), min(col("_r")).as("_w"))
     // prior seconds carry counts, but no row of this batch
-    val withPrior = priorCounts match {
+    val withPrior = prior.freqCounts match {
       case Some(p) => groups
         .unionByName(p.select(lit(Freq).as("_g"), col("key").cast("string").as("_k"),
           col("sec").as("_s"), col("cnt").as("_c"),
@@ -295,7 +297,7 @@ object NewAndFrequent {
         .groupBy("_g", "_k", "_s").agg(sum(col("_c")).as("_c"), min(col("_w")).as("_w"))
       case None => groups
     }
-    val unseen = seenValues match {
+    val unseen = prior.seenValues match {
       case Some(st) => withPrior.join(
         st.select(col("field").as("_g"), col("value").cast("string").as("_k")),
         Seq("_g", "_k"), "left_anti")
@@ -315,7 +317,7 @@ object NewAndFrequent {
           .over(w.rowsBetween(Window.unboundedPreceding, -1)))
         .filter(col("_g") =!= Freq || (col("_raw") &&
           (col("_pr").isNull || floor(col("_pr") / conf.freqResetSec) < col("_b"))))
-      firedBuckets match {
+      prior.firedBuckets match {
         case Some(fb) => fired.join(
           fb.select(lit(Freq).as("_g"), col("key").cast("string").as("_k"),
             col("reset_bucket").as("_b")),
@@ -340,8 +342,8 @@ object NewAndFrequent {
         when(col("freq_hit"),
           array(ClauseCompiler.hitStruct(0, "freq", lit(conf.freqScore), "freq")))
           .otherwise(array().cast("array<struct<rule_id:int,name:string,score:int,kind:string>>")))
-    def plus(prior: Option[DataFrame], batch: DataFrame) =
-      Some(prior.fold(batch)(batch.unionByName(_)))
+    def plus(before: Option[DataFrame], batch: DataFrame) =
+      Some(before.fold(batch)(batch.unionByName(_)))
     // the tracked fields' common type, as a union of them widens it
     def valueType = tracked.map(f => src.select(col(f).as("v")))
       .reduce(_ unionByName _).schema("v").dataType
@@ -352,13 +354,13 @@ object NewAndFrequent {
     // its generated classes: a filter on `_g` is pushed below the aggregation,
     // and a plan that drops `_w` drops its min, a new class per stage either way.
     val next = graft.Pipeline.State(
-      seenValues = if (tracked.isEmpty) seenValues else plus(seenValues,
+      seenValues = if (tracked.isEmpty) prior.seenValues else plus(prior.seenValues,
         (if (freq) firsts.filter(!col("_raw") && col("_w").isNotNull) else firsts)
           .select(col("_g").as("field"), col("_k").cast(valueType).as("value"))),
       fpSeen = None,
-      freqCounts = if (!freq) priorCounts else Some(withPrior.filter(col("_g") === Freq)
+      freqCounts = if (!freq) prior.freqCounts else Some(withPrior.filter(col("_g") === Freq)
         .select(key, col("_s").as("sec"), col("_c").as("cnt"))),
-      firedBuckets = if (!freq) firedBuckets else plus(firedBuckets,
+      firedBuckets = if (!freq) prior.firedBuckets else plus(prior.firedBuckets,
         firsts.filter(col("_raw") && col("_w").isNotNull)
           .select(key, col("_b").as("reset_bucket"))))
     (withFreq.drop(("_w" +: checks.indices.map(i => s"_m$i")): _*), next)
@@ -371,8 +373,8 @@ object FirstSeen {
   def apply(df: DataFrame, conf: PipelineConf,
       seenValues: Option[DataFrame] = None,
       aux: Option[DataFrame] = None): DataFrame =
-    NewAndFrequent(df, conf, conf.trackedFields, freq = false,
-      seenValues = seenValues, aux = aux)
+    NewAndFrequent.withState(df, conf, conf.trackedFields, freq = false,
+      graft.Pipeline.State(seenValues, None), aux)._1
 }
 
 /** C7 frequency check at second resolution: [[NewAndFrequent]] for the
@@ -382,8 +384,8 @@ object Frequency {
       priorCounts: Option[DataFrame] = None,
       firedBuckets: Option[DataFrame] = None,
       aux: Option[DataFrame] = None): DataFrame =
-    NewAndFrequent(df, conf, Nil, freq = true, priorCounts = priorCounts,
-      firedBuckets = firedBuckets, aux = aux)
+    NewAndFrequent.withState(df, conf, Nil, freq = true,
+      graft.Pipeline.State(None, None, priorCounts, firedBuckets), aux)._1
 }
 
 /** C8 scoring + severity banding. note = Σ hit scores via the higher-order

@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
   * (`push_map_as_event_on_timeout`). Tasks neither ended nor timed out stay
   * pending and emit nothing (the filter keeps them in its in-flight map).
   *
-  * Relational form of the accumulation: the caller passes the accumulator
-  * columns as aggregate expressions (the declarative twin of the filter's
-  * per-event ruby `map[...] ||= ...` code); the operator adds the task
-  * bookkeeping — first/last activity, end detection, completed|timeout
-  * status. One aggregation per key, like [[Elapsed]]'s one-transaction
-  * simplification.
+  * Relational form of the accumulation: [[state]] folds each task's events
+  * into fixed accumulators (event count, status sum, distinct actions — the
+  * declarative twin of the filter's per-event ruby `map[...] ||= ...` code)
+  * next to the task bookkeeping (first/last activity, end detection);
+  * [[finish]] decides completed|timeout status. One aggregation per key,
+  * like [[Elapsed]]'s one-transaction simplification.
   *
   * Shape at 10^12 rows: one hash-partitioned groupBy with map-side partial
   * aggregation (a hot task combines before the shuffle — no raw-row window,
@@ -66,27 +66,5 @@ object TaskAggregate {
       .select(col("key").as(key), col("n_events"), col("first_sec"),
         col("last_sec"), col("end_sec"), col("status_sum"),
         size(col("actions")).cast("long").as("n_actions"), col("status"))
-  }
-
-  /** @param aggs  caller accumulators, each aliased (e.g.
-    *              `sum("status").as("status_sum")`)
-    * @return one row per finished task: key, n_events, first_sec, last_sec,
-    *         end_sec (null when timed out), status, then `aggs` columns. */
-  def apply(df: DataFrame, key: String, isEnd: Column, timeoutSec: Long,
-      aggs: Seq[Column]): DataFrame = {
-    val bookkeeping = Seq(
-      count(lit(1)).as("n_events"),
-      min(col("ts_sec")).as("first_sec"),
-      max(col("ts_sec")).as("last_sec"),
-      max(when(isEnd, col("ts_sec"))).as("end_sec"))
-    val perTask = df.groupBy(col(key))
-      .agg(bookkeeping.head, (bookkeeping.tail ++ aggs): _*)
-    val hwm = df.agg(max(col("ts_sec")).as("_hwm"))
-    perTask.join(broadcast(hwm))
-      .withColumn("status",
-        when(col("end_sec").isNotNull, "completed")
-          .when(col("last_sec") + timeoutSec < col("_hwm"), "timeout"))
-      .filter(col("status").isNotNull)
-      .drop("_hwm")
   }
 }

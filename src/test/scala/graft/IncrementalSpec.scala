@@ -234,10 +234,17 @@ class IncrementalSpec extends SparkSuite {
 
     val stateDir = Files.createTempDirectory("graft-state").toString
     val outDir = Files.createTempDirectory("graft-out").toString
-    batches.zipWithIndex.foreach { case (b, i) =>
+    def files(runId: String, table: String) =
+      Option(new java.io.File(s"$stateDir/run-$runId/$table").listFiles()).toSeq.flatten
+        .count(_.getName.endsWith(".parquet"))
+    val nFiles = batches.zipWithIndex.map { case (b, i) =>
+      val runId = f"000${i + 1}"
       Incremental.run(spark, spark.createDataset(b).toDF(), tb, fx.conf,
-        stateDir, outDir, f"000${i + 1}")
+        stateDir, outDir, runId)
+      (files(runId, "fp_seen"), files(runId, "seen_values"))
     }
+    info(s"parquet files per run: fp_seen ${nFiles.map(_._1).mkString(", ")}; " +
+      s"seen_values ${nFiles.map(_._2).mkString(", ")}")
     assert(Incremental.completedRuns(stateDir).size === 5)
 
     // (a) the 5 runs' appended alerts == single-run routed rows, exactly
@@ -268,6 +275,35 @@ class IncrementalSpec extends SparkSuite {
     assert(st.fpSeen.get.select("fp_bucket").distinct().count() <= 1)
     st.firedBuckets.foreach(fb =>
       assert(fb.select("reset_bucket").distinct().count() <= 1))
+
+    // (c) the next state is a plain union of prior and batch rows: it stays
+    // a set only because the checks keep the two disjoint and each distinct
+    def twice(df: DataFrame, keys: String*) =
+      df.groupBy(keys.map(col): _*).count().filter(col("count") > 1).count()
+    assert(twice(st.fpSeen.get, "fp", "fp_bucket") === 0L)
+    assert(twice(st.seenValues.get, "field", "value") === 0L)
+    assert(twice(st.firedBuckets.get, "key", "reset_bucket") === 0L)
+  }
+
+  test("lineage records every file read, one whose rows are all whitelisted too") {
+    import java.sql.Timestamp
+    val fx = Gen.fixture(40)
+    val wl = Seq(WhitelistRule("role", "eq", "system"))
+    val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), wl)
+    val in = Files.createTempDirectory("graft-in").toString
+    val system = (0 until 3).map(i => Turn(s"sys$i", 0, "system", s"boot step $i", "",
+      new Timestamp((Gen.BaseEpochSec + i) * 1000L)))
+    assert(!fx.turns.exists(_.role == "system"))
+    Seq(fx.turns, system).foreach(t =>
+      spark.createDataset(t).toDF().coalesce(1).write.mode("append").parquet(in))
+
+    val stateDir = Files.createTempDirectory("graft-state").toString
+    val outDir = Files.createTempDirectory("graft-out").toString
+    val r = Incremental.run(spark, spark.read.parquet(in), tb, fx.conf,
+      stateDir, outDir, "0001")
+    assert(r.metrics("n_survivors") < r.metrics("n_input"))
+    assert(r.metrics("n_input_files") === 2L)
+    assert(r.inputFiles.size === 2)
   }
 
   test("fp_seen is recorded pre-whitelist: whitelisted first occurrence still suppresses the duplicate") {

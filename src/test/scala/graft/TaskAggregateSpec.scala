@@ -32,12 +32,8 @@ class TaskAggregateSpec extends SparkSuite {
       mk("t-open", 0, hwm0 + 2000L + timeoutSec + 3600L, "read"))
     val turns = fx.turns ++ crafted
     val parsed = Parse(spark.createDataset(turns).toDF(), fx.conf)
-    val got = TaskAggregate(parsed, "conv_id", col("action") === "upload",
-      timeoutSec,
-      Seq(coalesce(sum(col("status")), lit(0L)).cast("long").as("status_sum"),
-        countDistinct(col("action")).as("n_actions")))
-      .select("conv_id", "n_events", "first_sec", "last_sec", "end_sec",
-        "status_sum", "n_actions", "status")
+    val got = TaskAggregate.finish(TaskAggregate.state(parsed, "conv_id",
+      col("action") === "upload"), "conv_id", timeoutSec)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5), r.getLong(6),
@@ -71,7 +67,7 @@ class TaskAggregateSpec extends SparkSuite {
     assert(!got.exists(_._1 == "t-open"), "open task at the HWM stays pending")
   }
 
-  test("resume contract: finish(state(A∪B)) == finish(state(B, state(A))) == generic apply") {
+  test("resume contract: finish(state(A∪B)) == finish(state(B, state(A)))") {
     val fx = Gen.fixture(140)
     val isEnd = col("action") === "upload"
     val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
@@ -92,13 +88,6 @@ class TaskAggregateSpec extends SparkSuite {
       "conv_id", timeoutSec))
     assert(whole === resumed)
     assert(whole.nonEmpty)
-
-    val viaApply = rows(TaskAggregate(parse(sorted), "conv_id", isEnd, timeoutSec,
-      Seq(coalesce(sum(col("status")), lit(0L)).cast("long").as("status_sum"),
-        countDistinct(col("action")).as("n_actions")))
-      .select("conv_id", "n_events", "first_sec", "last_sec", "end_sec",
-        "status_sum", "n_actions", "status"))
-    assert(whole === viaApply, "fixed-schema state/finish == generic apply")
   }
 
   test("streaming twin (FMGWS event-time timeout): completed == emit-at-end oracle, timeouts match their own accumulation") {
