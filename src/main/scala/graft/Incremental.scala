@@ -16,15 +16,17 @@ import graft.operators._
   * Layout under `stateDir` — each run writes a FULL, PRUNED state snapshot
   * (not a delta), so readers load exactly ONE run's state regardless of how
   * many runs came before, and state size stays bounded by the configured
-  * windows instead of growing with history:
+  * windows instead of growing with history. [[commit]] writes it, for this
+  * runner and the curation runner (operators/CurationState.scala) alike:
   * {{{
-  *   run-<id>/<table>/       one dir per Pipeline.State table, pruned by
-  *                           State.live to what a later batch can reach
-  *   run-<id>/input_files/   (file)                 — lineage: every file the
-  *                           run read, written as a DataFrame (never
-  *                           collected to the driver)
+  *   run-<id>/<table>/       one dir per state table: Pipeline.State's,
+  *                           pruned by State.live, or the curation tables
+  *   run-<id>/input_files/   (file) — lineage, this runner's: every file the
+  *                           run read, written distributed (never collected)
   *   manifest/run-<id>.json  (written LAST — a run without a manifest is
-  *                            invisible to state readers, so crashes are safe)
+  *                            invisible to state readers, so crashes are safe):
+  *                            metrics + n_<table> rows written, lineage
+  *                            pointer + sample (null, empty without lineage)
   * }}}
   * Sink idempotency: alerts land under `alerts_all/run_id=<id>/severity=…`
   * via dynamic partition overwrite, so replaying a crashed run REPLACES its
@@ -145,7 +147,7 @@ object Incremental {
     val victims = completedRuns(stateDir).dropRight(keep)
     victims.foreach { r =>
       Option(Paths.get(stateDir, s"run-$r").toFile.listFiles()).toSeq.flatten
-        .filter(t => t.isDirectory && t.getName != "input_files")
+        .filter(t => t.isDirectory && t.getName != InputFiles)
         .foreach(graft.util.Fs.deleteRecursively)
     }
     victims
@@ -234,14 +236,6 @@ object Incremental {
         max(col("ts_sec")).as("max_sec") +: Pipeline.sinkCountCols(conf, "sink_"): _*)
       .filter(col("routed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lineage: every file this run reads, whether or not a row of it
-    // survives C1/C2, written distributed (never an O(files) driver collect —
-    // at 100 TB that's millions of entries). A scan of its own, so no
-    // observation is duplicated. The manifest records the count + a bounded
-    // sample.
-    val files = turns.select(input_file_name().as("file")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     try {
       // --- materialize both caches with a plain action FIRST: partitioned
       // file writes do not reliably deliver observe() metrics when the
@@ -275,37 +269,51 @@ object Incremental {
         .partitionBy("run_id", "severity")
         .parquet(s"$outDir/alerts_all")
 
-      // --- full, pruned state snapshot under run dir (invisible until the
-      // manifest lands)
-      val runDir = s"$stateDir/run-$runId"
-
-      var nFiles = 0L
-      var fileSample = Seq.empty[String]
-      def writeLineage(): Unit = {
-        files.write.mode(SaveMode.Overwrite).parquet(s"$runDir/input_files")
-        nFiles = files.count()
-        fileSample = files.orderBy("file").limit(100).collect()
-          .map(_.getString(0)).toSeq
-      }
-
-      // --- all six writes have committed before the manifest lands
-      graft.util.Concurrent.run(spark, Seq(writeAlerts _, writeLineage _) ++
-        next.live(maxSec, conf).tables.map { case (table, df) =>
-          () => df.write.mode(SaveMode.Overwrite).parquet(s"$runDir/$table") })
-
-      val metrics = metrics0 + ("n_input_files" -> nFiles)
+      // lineage: every file this run reads, whether or not a row of it
+      // survives C1/C2, written distributed (never an O(files) collect). A
+      // scan of its own, so no observation above is duplicated.
+      val files = turns.select(input_file_name().as("file")).distinct()
+      val (metrics, fileSample) = commit(spark, stateDir, runId,
+        next.live(maxSec, conf).tables :+ (InputFiles -> files),
+        Seq(writeAlerts _), metrics0)
       val sinkCounts = severities.map(s => s -> metrics(s"sink_$s")).toMap
-
-      writeManifest(stateDir, runId, metrics, fileSample)
       RunResult(runId, sinkCounts, metrics, fileSample)
     } finally {
-      files.unpersist(); routed.unpersist(); deduped.unpersist()
+      routed.unpersist(); deduped.unpersist()
     }
   }
 
+  private val InputFiles = "input_files" // the lineage table: one `file` column
+
+  /** The commit step of [[run]] and CurationState.run: lands `tables` under
+    * `run-<id>/` and the `beside` writes (the alert sink) in one
+    * [[graft.util.Concurrent.run]], each table's rows counted by an
+    * observation on its own write, then — all committed — the manifest:
+    * `metrics`, `n_<table>` per table and, if the run wrote `input_files`,
+    * its pointer and ≤100 of its files read back. Returns those metrics and
+    * that sample. */
+  private[graft] def commit(spark: SparkSession, stateDir: String, runId: String,
+      tables: Seq[(String, DataFrame)], beside: Seq[() => Unit],
+      metrics: Map[String, Long]): (Map[String, Long], Seq[String]) = {
+    val runDir = s"$stateDir/run-$runId"
+    val counted = tables.map { case (t, df) => (t, df, Observation()) }
+    graft.util.Concurrent.run(spark, beside ++ counted.map { case (t, df, obs) =>
+      () => df.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$runDir/$t")
+    })
+    // a plan over an empty relation folds its observation away: 0 rows
+    val all = metrics ++ counted.map { case (t, _, obs) =>
+      s"n_$t" -> obs.get.get("n").fold(0L)(_.asInstanceOf[Long]) }
+    val lineage = Option.when(tables.exists(_._1 == InputFiles))(s"run-$runId/$InputFiles")
+    val sample = lineage.fold(Seq.empty[String])(p => spark.read.parquet(s"$stateDir/$p")
+      .orderBy("file").limit(100).collect().map(_.getString(0)).toSeq)
+    writeManifest(stateDir, runId, all, lineage, sample)
+    (all, sample)
+  }
+
   /** Manifest written atomically (tmp + move) and LAST. */
-  private[graft] def writeManifest(stateDir: String, runId: String,
-      metrics: Map[String, Long], fileSample: Seq[String]): Unit = {
+  private def writeManifest(stateDir: String, runId: String, metrics: Map[String, Long],
+      lineage: Option[String], fileSample: Seq[String]): Unit = {
     // centralized escaper: control chars (a newline/tab is legal in a POSIX
     // input-file path) must not yield an unparseable manifest — that would
     // make a COMPLETED run invisible to completedRuns-based readers
@@ -315,7 +323,7 @@ object Incremental {
          | "metrics": {${metrics.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${q(k)}: $v" }.mkString(", ")}},
          | "input_files_sample": [${fileSample.map(q).mkString(", ")}],
-         | "input_files_table": ${q(s"run-$runId/input_files")},
+         | "input_files_table": ${lineage.fold("null")(q)},
          | "completed": true}""".stripMargin
     val dir = Paths.get(stateDir, "manifest")
     Files.createDirectories(dir)

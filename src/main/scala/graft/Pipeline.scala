@@ -120,14 +120,16 @@ object Pipeline {
     * aggregations, which read pruned column batches from the cache. Without
     * it, Spark recomputes the whole upstream (scan→parse→dedup) for every
     * branch (the plan-audit driver for this: docs/plans/enrich_full.txt).
-    * Callers own cleanup via the returned thunk. A fresh run (no carried
-    * state); resumed runs go through [[Incremental.run]]. */
+    * Callers own cleanup via the returned thunk; it releases only a cache
+    * this pass made (caches match by plan: a harness chain's stays). A fresh
+    * run (no carried state); resumed runs go through [[Incremental.run]]. */
   def enrichPlanned(turns: DataFrame, tables: RuleTables,
       conf: PipelineConf): (DataFrame, () => Unit) = {
-    val survivors = Whitelist(Dedup(Parse(turns, conf), conf, None),
-      tables.whitelist).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val survivors = Whitelist(Dedup(Parse(turns, conf), conf, None), tables.whitelist)
+    val own = survivors.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (own) survivors.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (scoreSurvivors(survivors, tables, conf, State.empty)._1,
-      () => { survivors.unpersist(); () })
+      () => { if (own) survivors.unpersist(); () })
   }
 
   /** The C3→C8 wiring over the C2 survivors, which first-seen and frequency

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import graft.functions.TextUnits
   * against everything already ingested, not just itself. This runner applies
   * the exact snapshot/manifest protocol of [[graft.Incremental]] (full pruned
   * snapshots per run, manifest written last, crash-safe, O(1)-in-run-count
-  * reads) to three curation state tables:
+  * reads), through its commit step, to three curation state tables:
   *
   * {{{
   *   run-<id>/content_hashes/  (fp, keep_id)  — md5(text) → canonical doc_id,
@@ -87,7 +87,6 @@ object CurationState {
   def run(spark: SparkSession, batch: DataFrame, stateDir: String,
       runId: String, evalDocs: Option[DataFrame] = None): BatchResult = {
     val st = load(spark, stateDir)
-    val runDir = s"$stateDir/run-$runId"
 
     val fp = batch.select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -135,28 +134,13 @@ object CurationState {
       val evalRows = evalDocs.getOrElse(evalSet(spark).rows(fp))
       val batchGrams = TextUnits.gram8Rows(evalRows).distinct()
       val egSnap = merged(st.evalGrams, batchGrams)(_.distinct())
-      // all three snapshots have committed before the manifest lands.
-      // r6: snapshot row counts ride the write actions as observed metrics
-      // (same values as the former written-back re-reads — the observation
-      // counts exactly the rows the write commits — minus three read-back
-      // jobs per run; delivery on non-partitioned parquet writes verified
-      // incl. the empty-snapshot edge)
-      val snaps = Seq("content_hashes" -> chSnap, "seg_freq" -> sfSnap,
-        "eval_grams" -> egSnap).map { case (t, df) => (t, df, Observation()) }
-      graft.util.Concurrent.run(spark, snaps.map { case (t, df, obs) => () =>
-        df.observe(obs, count(lit(1)).as("n"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$runDir/$t")
-      })
 
-      // --- metrics (same values as before — observed counts of the rows
-      // each snapshot write committed), then manifest LAST
+      // --- the three snapshots and the manifest land through the shared
+      // commit step, which adds the n_<table> row counts
       val keptN = kept.count()
-      val metrics = Map(
-        "n_batch" -> nBatch,
-        "n_kept_new" -> keptN,
-        "n_dup" -> (nBatch - keptN)) ++
-        snaps.map { case (t, _, obs) => s"n_$t" -> obs.get("n").asInstanceOf[Long] }
-      graft.Incremental.writeManifest(stateDir, runId, metrics, Seq.empty)
+      val (metrics, _) = graft.Incremental.commit(spark, stateDir, runId,
+        Seq("content_hashes" -> chSnap, "seg_freq" -> sfSnap, "eval_grams" -> egSnap),
+        Nil, Map("n_batch" -> nBatch, "n_kept_new" -> keptN, "n_dup" -> (nBatch - keptN)))
       BatchResult(runId, kept.drop("fp"), metrics)
     } finally fp.unpersist()
   }

@@ -247,8 +247,9 @@ object StreamPipeline {
               }
             }
             state.update(st)
-            if (!st.done && st.n > 0L)
-              state.setTimeoutTimestamp(st.last * 1000L + timeoutSec * 1000L)
+            if (!st.done && st.n > 0L) // clamp, as the elapsed twins do
+              state.setTimeoutTimestamp(math.max(st.last * 1000L + timeoutSec * 1000L,
+                state.getCurrentWatermarkMs() + 1L))
             out.iterator
           }
         })

@@ -65,4 +65,16 @@ class HarnessCacheSpec extends SparkSuite {
       assert(Pipeline.route(spark, enriched, conf, out)("total") > 0)
     } finally cleanup()
   }
+
+  test("an enrichPlanned+route pass right after a chain query leaves the chain's cache") {
+    query("c8_scoring")
+    assert(cached(survivors), "c8_scoring cached no chain")
+    val out = java.nio.file.Files.createTempDirectory("graft-harness-cache").toString
+    val (enriched, cleanup) = Pipeline.enrichPlanned(
+      TestdataAdapter.turns(spark, d), TestdataTables.rules(spark), conf)
+    try assert(Pipeline.route(spark, enriched, conf, out)("total") > 0)
+    finally cleanup()
+    assert(cached(survivors), "the pass released the chain's survivors")
+    query("agg_rollup_signature")
+  }
 }

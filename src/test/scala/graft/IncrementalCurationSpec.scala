@@ -123,4 +123,22 @@ class IncrementalCurationSpec extends SparkSuite {
       .agg(max("n")).first().getLong(0)
     assert(maxN <= CurationState.BoilerThreshold)
   }
+
+  test("runsReport over curation runs: no lineage pointer, n_<table> == the rows load() reads") {
+    val dd = docsDf
+    val sd = tmp()
+    CurationState.run(spark, dd.filter(col("doc_id") < 10), sd, "1")
+    CurationState.run(spark, dd.filter(col("doc_id") >= 10), sd, "2")
+    val rep = Incremental.runsReport(spark, sd).collect()
+    assert(rep.map(_.getAs[String]("run_id")).toSeq === Seq("1", "2"))
+    assert(rep.forall(r => r.isNullAt(r.fieldIndex("input_files_table"))),
+      "a curation run points at a lineage table")
+    val latest = rep.last
+    stateRows(sd).foreach { case (t, rows) =>
+      assert(latest.getAs[Long](s"n_$t") === rows.size.toLong, s"n_$t")
+    }
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(sd, "manifest", "run-2.json")))
+    assert(manifest.contains("\"input_files_sample\": []"), manifest)
+  }
 }

@@ -211,6 +211,8 @@ class IncrementalSpec extends SparkSuite {
       "freq_counts" -> st.freqCounts.map(_.count()).getOrElse(0L),
       "fired" -> st.firedBuckets.map(_.count()).getOrElse(0L))
     sr.foreach { case (_, t, n) => assert(n === loaded(t), s"table $t") }
+    // the manifest's n_<table>: the rows each snapshot write committed
+    sr.foreach { case (_, t, n) => assert(byRun("0002").getAs[Long](s"n_$t") === n, s"n_$t") }
     assert(sr.exists(_._3 > 0), "at least one state table must be non-empty")
     // drill-down accessor returns the same rows the loader uses
     val sv = Incremental.stateTable(spark, stateDir, "seen_values")

@@ -20,6 +20,39 @@ class TaskAggregateSpec extends SparkSuite {
         s"hash=${Gen.md5("f")} uri=/api/v1/r0", "",
       new java.sql.Timestamp(sec * 1000L))
 
+  /** A file stream over `parts`, one parquet file each, replayed one file
+    * per micro-batch in list order. */
+  private def fileStream(parts: Seq[org.apache.spark.sql.DataFrame]) = {
+    import java.nio.file.Files
+    val base = Files.createTempDirectory("graft-taskagg-in").toString
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val tmp = Files.createTempDirectory("graft-taskagg-part").toString
+      p.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val src = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
+      Files.move(src.toPath, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+      ()
+    }
+    spark.readStream
+      .schema(spark.read.parquet(base).schema)
+      .option("maxFilesPerTrigger", "1").parquet(base)
+  }
+
+  /** Drain a taskAggStream output (AvailableNow) into rows, end_sec -1 if null. */
+  private def streamRows(out: org.apache.spark.sql.Dataset[_], name: String) = {
+    import org.apache.spark.sql.streaming.Trigger
+    val q = out.toDF().writeStream.outputMode("append").format("memory")
+      .queryName(name).trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    spark.table(name).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5), r.getLong(6),
+        r.getString(7))).toSeq
+  }
+
   test("per-task accumulation matches the naive oracle; pending tasks emit nothing") {
     val fx = Gen.fixture(160)
     // pin all three emission classes: a task that completes, a task that
@@ -91,39 +124,17 @@ class TaskAggregateSpec extends SparkSuite {
   }
 
   test("streaming twin (FMGWS event-time timeout): completed == emit-at-end oracle, timeouts match their own accumulation") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.streaming.Trigger
     val fx = Gen.fixture(150)
     // three ascending-time files → ascending micro-batches; later files
     // advance the watermark so mid-stream inactivity timeouts actually fire
-    val base = Files.createTempDirectory("graft-taskagg-in").toString
     val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
     val n = sorted.size
-    Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
-      .zipWithIndex.foreach { case (p, i) =>
-        val tmp = Files.createTempDirectory("graft-taskagg-part").toString
-        spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
-        val src = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-        Files.move(src.toPath, dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        ()
-      }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+    val stream = fileStream(
+      Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
+        .map(spark.createDataset(_).toDF()))
     val streamTimeout = 600L // fixture spans ~100 min → quiet gaps exist
-    val out = graft.streaming.StreamPipeline.taskAggStream(
-      Parse(stream, fx.conf), "conv_id", col("action") === "exfil", streamTimeout)
-    val q = out.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("taskagg").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("taskagg").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5), r.getLong(6),
-        r.getString(7))).toSeq
+    val got = streamRows(graft.streaming.StreamPipeline.taskAggStream(
+      Parse(stream, fx.conf), "conv_id", col("action") === "exfil", streamTimeout), "taskagg")
     assert(got.map(_._1).distinct.size === got.size, "one emission per task")
 
     // emit-at-end oracle: accumulate in event-time order UP TO the first end
@@ -157,5 +168,21 @@ class TaskAggregateSpec extends SparkSuite {
       assert((nn, f, l, s, a) === ((on, of, ol, os, oa)), s"timeout row $cid")
       assert(!wantCompleted.exists(_._1 == cid), s"$cid has an end event")
     }
+  }
+
+  test("streaming twin with a zero timeout: a re-arm below the watermark is clamped") {
+    // key a at 1700000100.300 s, then at .500 s in the next micro-batch: the
+    // first batch moves the watermark to …100300 ms, past a's unclamped
+    // re-arm point in the second (last second × 1000 + 0 = …100000 ms)
+    val stream = fileStream(Seq(300L, 500L).map { ms =>
+      val tsMs = 1700000100000L + ms
+      Seq(("a", new java.sql.Timestamp(tsMs), tsMs * 1000L, tsMs / 1000L, 200, "read"))
+        .toDF("conv_id", "ts", "ts_us", "ts_sec", "status", "action")
+    })
+    val got = streamRows(graft.streaming.StreamPipeline.taskAggStream(
+      stream, "conv_id", col("action") === "upload", 0L), "taskagg_zero")
+    // the query survives; both events accumulate and the task times out in
+    // the no-data batch after the second
+    assert(got === Seq(("a", 2L, 1700000100L, 1700000100L, -1L, 400L, 1L, "timeout")))
   }
 }
