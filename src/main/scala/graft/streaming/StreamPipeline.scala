@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -12,29 +12,80 @@ import graft.model._
   * (graft.Incremental), which [[runFull]] and [[curationStream]] run per
   * micro-batch through one shared loop — so the stateful C6/C7 checks stream
   * through the same `NewAndFrequent` code and snapshot state as batch.
-  * The rest are `flatMapGroupsWithState` / watermark twins of operators whose
-  * event-time timeout semantics have no batch-exact form (elapsed, task-agg,
-  * sessions).
+  * The rest are watermark twins of operators whose event-time timeout
+  * semantics have no batch-exact form (elapsed, task-agg, sessions).
+  *
+  * The three correlation twins ([[elapsedStream]], [[elapsedMultiStream]],
+  * [[taskAggStream]]) are one per-key machine over one watermarked event
+  * source, and share one timeout rule: a key whose pending deadline is at or
+  * below the watermark has expired, and it expires BEFORE it sees any of its
+  * own later events — whether Spark calls the key for its timeout or, as it
+  * does when the key has new data, hands it the data first. So an answer
+  * never depends on where the micro-batches split. Timeouts re-arm strictly
+  * above the watermark (Spark rejects one at or below it), and those still
+  * pending when an AvailableNow stream stops have not fired.
   */
 object StreamPipeline {
 
-  final case class ElapsedEv(key: String, ts_us: Long, ts_sec: Long,
-      start: Boolean, end: Boolean, ts: java.sql.Timestamp)
+  /** One event of a correlation twin: the key, its time three ways (`ts` is
+    * the watermark column), the start/end predicates (null reads false) and
+    * the fields the task twin folds (null for the elapsed twins). */
+  final case class KeyEv(key: String, ts_us: Long, ts_sec: Long, start: Boolean,
+      end: Boolean, status: Option[Int], action: Option[String],
+      ts: java.sql.Timestamp)
 
-  /** The watermarked start/end events both elapsed twins group by key. */
-  private def elapsedEvents(parsed: DataFrame, key: String, isStart: Column,
-      isEnd: Column): Dataset[ElapsedEv] = {
+  /** The watermarked events a correlation twin groups by key: every row for
+    * the task twin, only start/end rows for the elapsed twins (so only those
+    * move their watermark). */
+  private def events(parsed: DataFrame, key: String, isStart: Column,
+      isEnd: Column, everyRow: Boolean): Dataset[KeyEv] = {
     import parsed.sparkSession.implicits._
+    val (start, end) = (coalesce(isStart, lit(false)), coalesce(isEnd, lit(false)))
+    val rows = parsed.withColumn("ts", col("ts").cast("timestamp"))
+    val (kept, status, action) =
+      if (everyRow) (rows, col("status"), col("action"))
+      else (rows.filter(start || end), lit(null).cast("int"), lit(null).cast("string"))
     // ts (the watermark column) must survive UNTOUCHED into the grouped
     // Dataset — event-time timeout requires the watermark attribute in the
     // child plan, and any cast/alias on it strips the event-time metadata
-    parsed.withColumn("ts", col("ts").cast("timestamp"))
-      .filter(isStart || isEnd)
-      .withWatermark("ts", "0 seconds")
+    kept.withWatermark("ts", "0 seconds")
       .select(col(key).cast("string").as("key"), col("ts_us"), col("ts_sec"),
-        isStart.as("start"), isEnd.as("end"), col("ts"))
-      .as[ElapsedEv]
+        start.as("start"), end.as("end"), status.as("status"), action.as("action"),
+        col("ts"))
+      .as[KeyEv]
   }
+
+  /** The one per-key machine behind the correlation twins, with event-time
+    * timeout. Per call it expires a key whose deadline is due (timed out, or
+    * at or below the watermark), folds the key's events in (ts_us, start
+    * first) order through `step`, then stores the state if `keep` says so
+    * (else removes it) and re-arms its timeout at max(deadline,
+    * watermark + 1). `deadlineMs` is empty when nothing is pending. */
+  private def perKey[S: Encoder, U: Encoder](evs: Dataset[KeyEv], init: S)(
+      step: (S, KeyEv) => (S, Option[U]), deadlineMs: S => Option[Long],
+      expire: (String, S) => (S, U), keep: S => Boolean): Dataset[U] =
+    evs.groupByKey(_.key)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (k: String, it: Iterator[KeyEv], state: GroupState[S]) => {
+          val wmMs = state.getCurrentWatermarkMs()
+          val out = scala.collection.mutable.ArrayBuffer.empty[U]
+          var st = state.getOption.getOrElse(init)
+          if (deadlineMs(st).exists(d => state.hasTimedOut || d <= wmMs)) {
+            val (next, row) = expire(k, st)
+            st = next
+            out += row
+          }
+          it.toArray.sortBy(e => (e.ts_us, !e.start)).foreach { e =>
+            val (next, row) = step(st, e)
+            st = next
+            out ++= row
+          }
+          if (keep(st)) {
+            state.update(st)
+            deadlineMs(st).foreach(d => state.setTimeoutTimestamp(math.max(d, wmMs + 1L)))
+          } else if (state.exists) state.remove()
+          out.iterator
+        })
 
   /** Per-key elapsed state: the first start (-1 = none yet) and whether the
     * transaction already resolved (matched or expired) — one small record
@@ -43,64 +94,32 @@ object StreamPipeline {
   final case class ElapsedOut(key: String, start_sec: Long,
       end_sec: Option[Long], elapsed_sec: Option[Long], status: String)
 
-  /** P20 elapsed, streaming twin: flatMapGroupsWithState with EVENT-TIME
-    * timeout. A matched/too-late end resolves the transaction inline; a
-    * start whose end never arrives expires when the watermark passes
-    * start + timeout. Same one-transaction-per-key semantics as
-    * [[graft.operators.Elapsed]] (resolved keys stay done). Trailing
-    * caveat (ElapsedSpec): timeouts pending when the stream stops have not
-    * fired yet — streaming `expired` is a prefix of the batch answer, while
-    * `matched` agrees exactly. */
+  /** P20 elapsed, streaming twin: a matched/too-late end resolves the
+    * transaction inline; a start whose end never arrives expires once the
+    * watermark passes start + timeout. Same one-transaction-per-key semantics
+    * as [[graft.operators.Elapsed]]: resolved keys stay done, so later events
+    * never re-pair. `matched` agrees with batch exactly; `expired` is a
+    * prefix of the batch answer (ElapsedSpec). */
   def elapsedStream(parsed: DataFrame, key: String, isStart: Column,
       isEnd: Column, timeoutSec: Long): Dataset[ElapsedOut] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    elapsedEvents(parsed, key, isStart, isEnd).groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (k: String, it: Iterator[ElapsedEv], state: GroupState[ElapsedSt]) => {
-          if (state.hasTimedOut) {
-            val st = state.get
-            if (st.done) Iterator.empty
-            else {
-              state.update(st.copy(done = true)) // keep: later starts must not re-pair
-              Iterator.single(ElapsedOut(k, st.sSec, None, None, "expired"))
-            }
-          } else {
-            val wmMs = state.getCurrentWatermarkMs()
-            val sorted = it.toArray.sortBy(e => (e.ts_us, !e.start))
-            var st = state.getOption.getOrElse(ElapsedSt(-1L, -1L, done = false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[ElapsedOut]
-            // An open transaction whose deadline the watermark has already
-            // passed HAS expired — but Spark delivers this data batch before
-            // its timeout callback, and re-arming a timeout at-or-below the
-            // watermark throws (killing the query; ADVICE r4). Close it here
-            // exactly as the hasTimedOut branch would; any end event in this
-            // batch necessarily has ts ≥ watermark > deadline, so it would
-            // have been classified `expired` anyway — same output either way.
-            if (st.sUs >= 0 && !st.done &&
-                st.sUs / 1000L + timeoutSec * 1000L <= wmMs) {
-              out += ElapsedOut(k, st.sSec, None, None, "expired")
-              st = st.copy(done = true)
-            }
-            for (e <- sorted if !st.done) {
-              if (st.sUs < 0 && e.start) st = ElapsedSt(e.ts_us, e.ts_sec, done = false)
-              else if (st.sUs >= 0 && e.end && e.ts_us >= st.sUs) {
-                if (e.ts_us - st.sUs <= timeoutSec * 1000000L)
-                  out += ElapsedOut(k, st.sSec, Some(e.ts_sec),
-                    Some(e.ts_sec - st.sSec), "matched")
-                else out += ElapsedOut(k, st.sSec, None, None, "expired")
-                st = st.copy(done = true)
-              }
-            }
-            if (st.sUs >= 0) {
-              state.update(st)
-              if (!st.done) // clamp: a 0-second timeout would otherwise re-arm AT the watermark
-                state.setTimeoutTimestamp(
-                  math.max(st.sUs / 1000L + timeoutSec * 1000L, wmMs + 1L))
-            }
-            out.iterator
-          }
-        })
+    import parsed.sparkSession.implicits._
+    perKey(events(parsed, key, isStart, isEnd, everyRow = false),
+      ElapsedSt(-1L, -1L, done = false))(
+      step = (st, e) =>
+        if (st.done) (st, None)
+        else if (st.sUs < 0)
+          (if (e.start) ElapsedSt(e.ts_us, e.ts_sec, done = false) else st, None)
+        else if (e.end && e.ts_us >= st.sUs)
+          (st.copy(done = true), Some(
+            if (e.ts_us - st.sUs <= timeoutSec * 1000000L)
+              ElapsedOut(e.key, st.sSec, Some(e.ts_sec), Some(e.ts_sec - st.sSec), "matched")
+            else ElapsedOut(e.key, st.sSec, None, None, "expired")))
+        else (st, None),
+      deadlineMs = st =>
+        if (st.sUs >= 0 && !st.done) Some(st.sUs / 1000L + timeoutSec * 1000L) else None,
+      expire = (k, st) =>
+        (st.copy(done = true), ElapsedOut(k, st.sSec, None, None, "expired")),
+      keep = _.sUs >= 0)
   }
 
   final case class ElapsedMultiSt(sUs: Long, sSec: Long, extra: Long)
@@ -109,81 +128,41 @@ object StreamPipeline {
       status: String)
 
   /** P20b streaming twin: the MULTI-transaction elapsed state machine
-    * (graft.operators.Elapsed.multi) as FMGWS — a new transaction per key
-    * after each completed one, extra starts counted, ends-while-closed
-    * ignored. State is one open transaction per key, REMOVED on close (a
-    * closed machine needs no memory — the next start opens fresh), so state
-    * size is O(keys with an open transaction), not O(keys ever seen).
+    * (graft.operators.Elapsed.multi) — a new transaction per key after each
+    * completed one, extra starts counted, ends-while-closed ignored. State is
+    * one open transaction per key, REMOVED on close (a closed machine needs
+    * no memory — the next start opens fresh), so state size is O(keys with
+    * an open transaction), not O(keys ever seen).
     *
     * Divergence from batch, documented: batch `multi` classifies by timeout
     * only at emit, so a start arriving AFTER an open transaction's timeout
     * but BEFORE its (late) end counts as an extra start there; here the
-    * event-time timeout has already expired+closed the transaction, so that
-    * start opens a NEW transaction. A streaming machine cannot hold state
-    * open unboundedly waiting to find out — every other tape shape agrees
-    * exactly (spec-pinned), and trailing open transactions are `expired`
-    * rows batch emits that the stream only emits once the watermark passes
-    * their timeout (the ElapsedSpec prefix caveat). */
+    * transaction has already expired, so that start opens a NEW one. Every
+    * other tape shape agrees exactly (spec-pinned); `expired` is a subset
+    * of the batch answer. */
   def elapsedMultiStream(parsed: DataFrame, key: String, isStart: Column,
       isEnd: Column, timeoutSec: Long): Dataset[ElapsedMultiOut] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    elapsedEvents(parsed, key, isStart, isEnd).groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (k: String, it: Iterator[ElapsedEv], state: GroupState[ElapsedMultiSt]) => {
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(
-              ElapsedMultiOut(k, st.sSec, None, None, st.extra, "expired"))
-          } else {
-            val wmMs = state.getCurrentWatermarkMs()
-            val sorted = it.toArray.sortBy(e => (e.ts_us, !e.start))
-            var open = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[ElapsedMultiOut]
-            // Same watermark-vs-timeout race as [[elapsedStream]] (ADVICE r4):
-            // if the watermark already passed the open transaction's deadline,
-            // data arrives before the timeout callback and re-arming below the
-            // watermark would throw. Expire-and-close first — a start in this
-            // batch then opens a NEW transaction, which is exactly the
-            // documented timeout-fires-first divergence from batch.
-            open match {
-              case Some(st) if st.sUs / 1000L + timeoutSec * 1000L <= wmMs =>
-                out += ElapsedMultiOut(k, st.sSec, None, None, st.extra, "expired")
-                open = None
-              case _ =>
-            }
-            for (e <- sorted) {
-              open match {
-                case None if e.start =>
-                  open = Some(ElapsedMultiSt(e.ts_us, e.ts_sec, 0L))
-                case Some(st) if e.start =>
-                  open = Some(st.copy(extra = st.extra + 1))
-                case Some(st) if e.end && e.ts_us >= st.sUs =>
-                  if (e.ts_us - st.sUs <= timeoutSec * 1000000L)
-                    out += ElapsedMultiOut(k, st.sSec, Some(e.ts_sec),
-                      Some(e.ts_sec - st.sSec), st.extra, "matched")
-                  else
-                    out += ElapsedMultiOut(k, st.sSec, None, None, st.extra,
-                      "expired")
-                  open = None
-                case _ => // end while closed: ignored
-              }
-            }
-            open match {
-              case Some(st) =>
-                state.update(st)
-                state.setTimeoutTimestamp(
-                  math.max(st.sUs / 1000L + timeoutSec * 1000L, wmMs + 1L))
-              case None => if (state.exists) state.remove()
-            }
-            out.iterator
-          }
-        })
+    import parsed.sparkSession.implicits._
+    val closed = ElapsedMultiSt(-1L, -1L, 0L)
+    perKey(events(parsed, key, isStart, isEnd, everyRow = false), closed)(
+      step = (st, e) =>
+        if (st.sUs < 0)
+          (if (e.start) ElapsedMultiSt(e.ts_us, e.ts_sec, 0L) else st, None)
+        else if (e.start) (st.copy(extra = st.extra + 1), None)
+        else if (e.end && e.ts_us >= st.sUs)
+          (closed, Some(
+            if (e.ts_us - st.sUs <= timeoutSec * 1000000L)
+              ElapsedMultiOut(e.key, st.sSec, Some(e.ts_sec), Some(e.ts_sec - st.sSec),
+                st.extra, "matched")
+            else ElapsedMultiOut(e.key, st.sSec, None, None, st.extra, "expired")))
+        else (st, None), // end while closed: ignored
+      deadlineMs = st =>
+        if (st.sUs >= 0) Some(st.sUs / 1000L + timeoutSec * 1000L) else None,
+      expire = (k, st) =>
+        (closed, ElapsedMultiOut(k, st.sSec, None, None, st.extra, "expired")),
+      keep = _.sUs >= 0)
   }
 
-  final case class TaskEv(key: String, ts_us: Long, ts_sec: Long, end: Boolean,
-      status: Option[Int], action: Option[String], ts: java.sql.Timestamp)
   /** Per-task accumulators + done flag — one small record per task, the
     * streaming mirror of [[graft.operators.TaskAggregate]]'s aggregate row. */
   final case class TaskSt(n: Long, first: Long, last: Long, sum: Long,
@@ -197,9 +176,9 @@ object StreamPipeline {
     * event (inline, with everything accumulated up to and including it) or
     * when the task goes quiet past `timeoutSec` of EVENT time (the
     * deterministic form of `push_map_as_event_on_timeout`; the filter's wall
-    * clock would make runs unreproducible). flatMapGroupsWithState with
-    * event-time timeout: the timeout re-arms at last activity + timeoutSec
-    * and fires once the watermark passes it. One task per key, done tasks
+    * clock would make runs unreproducible). Quiet is the batch operator's
+    * rule, in seconds: last_sec + timeoutSec < watermark second, so the
+    * deadline is (last_sec + timeoutSec + 1) s. One task per key; done tasks
     * absorb nothing (same simplification as [[elapsedStream]]).
     *
     * vs the batch operator: batch aggregates the whole input per key and
@@ -209,50 +188,23 @@ object StreamPipeline {
     * both relations. */
   def taskAggStream(parsed: DataFrame, key: String, isEnd: Column,
       timeoutSec: Long): Dataset[TaskOut] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    // ts must survive untouched into the grouped Dataset (event-time timeout
-    // needs the watermark attribute; a cast/alias strips its metadata)
-    val evs = parsed.withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "0 seconds")
-      .select(col(key).cast("string").as("key"), col("ts_us"), col("ts_sec"),
-        coalesce(isEnd, lit(false)).as("end"), // null predicate (unparsed row) = not an end
-        col("status"), col("action"), col("ts"))
-      .as[TaskEv]
-    evs.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (k: String, it: Iterator[TaskEv], state: GroupState[TaskSt]) => {
-          if (state.hasTimedOut) {
-            val st = state.get
-            if (st.done) Iterator.empty
-            else {
-              state.update(st.copy(done = true)) // keep: late events must not re-open
-              Iterator.single(TaskOut(k, st.n, st.first, st.last, None, st.sum,
-                st.actions.size.toLong, "timeout"))
-            }
-          } else {
-            val sorted = it.toArray.sortBy(e => (e.ts_us, e.ts_sec))
-            var st = state.getOption.getOrElse(
-              TaskSt(0L, Long.MaxValue, Long.MinValue, 0L, Nil, done = false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[TaskOut]
-            for (e <- sorted if !st.done) {
-              st = TaskSt(st.n + 1L, math.min(st.first, e.ts_sec),
-                math.max(st.last, e.ts_sec), st.sum + e.status.getOrElse(0),
-                e.action.filterNot(st.actions.contains) ++: st.actions,
-                done = false)
-              if (e.end) {
-                out += TaskOut(k, st.n, st.first, st.last, Some(e.ts_sec),
-                  st.sum, st.actions.size.toLong, "completed")
-                st = st.copy(done = true)
-              }
-            }
-            state.update(st)
-            if (!st.done && st.n > 0L) // clamp, as the elapsed twins do
-              state.setTimeoutTimestamp(math.max(st.last * 1000L + timeoutSec * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
-          }
-        })
+    import parsed.sparkSession.implicits._
+    def out(k: String, st: TaskSt, end: Option[Long], status: String) =
+      TaskOut(k, st.n, st.first, st.last, end, st.sum, st.actions.size.toLong, status)
+    perKey(events(parsed, key, lit(false), isEnd, everyRow = true),
+      TaskSt(0L, Long.MaxValue, Long.MinValue, 0L, Nil, done = false))(
+      step = (st, e) =>
+        if (st.done) (st, None)
+        else {
+          val acc = TaskSt(st.n + 1L, math.min(st.first, e.ts_sec),
+            math.max(st.last, e.ts_sec), st.sum + e.status.getOrElse(0),
+            e.action.filterNot(st.actions.contains) ++: st.actions, done = e.end)
+          (acc, if (e.end) Some(out(e.key, acc, Some(e.ts_sec), "completed")) else None)
+        },
+      deadlineMs = st =>
+        if (st.n > 0L && !st.done) Some((st.last + timeoutSec + 1L) * 1000L) else None,
+      expire = (k, st) => (st.copy(done = true), out(k, st, None, "timeout")),
+      keep = _.n > 0L)
   }
 
   /** THE composed end-to-end streaming pipeline: ONE readStream →
@@ -262,7 +214,7 @@ object StreamPipeline {
     * trailing-window frequency, scoring, routed fan-out, manifests +
     * lineage), not watermark approximations. foreachBatch is Spark's own
     * seam for multi-sink fan-out + complex multi-keyed state; the
-    * alternative (chaining flatMapGroupsWithState per state kind and
+    * alternative (chaining one grouped-state operator per state kind and
     * stream-stream-joining the flags back) is an unsupported operator
     * combination for this shape in append mode.
     *

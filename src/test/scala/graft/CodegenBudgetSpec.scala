@@ -101,8 +101,9 @@ object CodegenResidencyApp {
         try Pipeline.route(spark, enriched, fx.conf, tmp("graft-residency")) finally cleanup()
       }
       val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
-      val files = StreamingSpec.timeOrderedFiles(spark,
-        Seq(sorted.take(sorted.size / 2), sorted.drop(sorted.size / 2)))
+      val files = SparkSuite.timeOrderedFiles(
+        Seq(sorted.take(sorted.size / 2), sorted.drop(sorted.size / 2))
+          .map(spark.createDataset(_).toDF()))
       val schema = spark.read.parquet(files).schema
       val runFulls = Seq.fill(2)(compiled {
         val stream = spark.readStream.schema(schema)

@@ -41,32 +41,17 @@ class CurationStreamSpec extends SparkSuite {
     val mx = dd.agg(max("doc_id")).first().getLong(0)
 
     // three doc_id-ascending files with pinned mtimes (FileStreamSource order)
-    val base = tmp("in")
-    val parts = Seq(
+    val base = SparkSuite.timeOrderedFiles(Seq(
       dd.filter(col("doc_id") <= mx / 3),
       dd.filter(col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3),
-      dd.filter(col("doc_id") > 2 * mx / 3))
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val t = tmp(s"part$i")
-      p.coalesce(1).write.mode("overwrite").parquet(t)
-      val src = new java.io.File(t).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      ()
-    }
+      dd.filter(col("doc_id") > 2 * mx / 3)))
 
     val single = tmp("single")
     CurationState.run(spark, dd, single, "1")
     val want = stateRows(single)
 
     val streamed = tmp("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(base)
+    val stream = SparkSuite.fileStream(spark, base)
     val ran = StreamPipeline.curationStream(spark, stream, streamed, tmp("ckpt"))
     assert(ran.size === 3, s"expected 3 micro-batches, ran $ran")
     assert(stateRows(streamed) == want)
@@ -76,10 +61,7 @@ class CurationStreamSpec extends SparkSuite {
       sortedRows(CurationState.screen(spark, dd, single)))
 
     // restart from a fresh checkpoint: every manifested batch is skipped
-    val stream2 = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(base)
+    val stream2 = SparkSuite.fileStream(spark, base)
     val ran2 = StreamPipeline.curationStream(spark, stream2, streamed, tmp("ckpt2"))
     assert(ran2.isEmpty, s"replayed batches must be skipped, ran $ran2")
     assert(stateRows(streamed) == want)

@@ -152,43 +152,20 @@ class ElapsedSpec extends SparkSuite {
   }
 
   test("streaming twin (FMGWS, event-time timeout): matched == batch exactly, expired is a prefix") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamPipeline
-    import spark.implicits._
 
     val fx = Gen.fixture(150)
     // three ascending-time files → ascending micro-batches (same contract as
-    // the composed pipeline stream); distinct mtimes pin source order
-    val base = Files.createTempDirectory("graft-elapsed-in").toString
-    val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
-    val n = sorted.size
-    Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
-      .zipWithIndex.foreach { case (p, i) =>
-        val tmp = Files.createTempDirectory("graft-elapsed-part").toString
-        spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
-        val src = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-        Files.move(src.toPath, dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        ()
-      }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+    // the composed pipeline stream)
+    val stream = tapeStream(thirds(fx.turns))
     // 10-min timeout: the fixture spans ~100 minutes, so both resolution
     // paths (late end inline, no-end via event-time timeout once a later
     // file advances the watermark) actually occur in-stream
     val streamTimeout = 600L
     val out = StreamPipeline.elapsedStream(Parse(stream, fx.conf), "conv_id",
       col("action") === "login", col("action") === "upload", streamTimeout)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("elap").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
 
-    val got = spark.table("elap").collect().map(r => (r.getString(0), r.getLong(1),
+    val got = drain(out, "elap").collect().map(r => (r.getString(0), r.getLong(1),
       if (r.isNullAt(2)) -1L else r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3), r.getString(4))).toSeq
     assert(got.map(_._1).distinct.size === got.size, "one resolution per key")
@@ -210,32 +187,34 @@ class ElapsedSpec extends SparkSuite {
   private def ev(k: String, sec: Long, a: String) =
     (k, sec * 1000000L, sec, a, new java.sql.Timestamp(sec * 1000L))
 
-  /** A file stream over `files`, one parquet file each (rows in the given
-    * order), replayed one file per micro-batch in list order. */
-  private def tapeStream(files: Seq[Seq[(String, Long, Long, String, java.sql.Timestamp)]]) = {
-    import java.nio.file.Files
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-elapsed-tape").toString
-    files.zipWithIndex.foreach { case (evs, i) =>
-      val tmp = Files.createTempDirectory("graft-elapsed-tape-part").toString
-      evs.toDF("conv_id", "ts_us", "ts_sec", "action", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      ()
-    }
-    spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+  /** Tape events as the frame a file of the tape holds. */
+  private def tapeDf(evs: Seq[(String, Long, Long, String, java.sql.Timestamp)]) =
+    evs.toDF("conv_id", "ts_us", "ts_sec", "action", "ts")
+
+  /** Fixture turns in event-time order, cut into three ascending files. */
+  private def thirds(turns: Seq[graft.model.Turn]) = {
+    val sorted = turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+    val n = sorted.size
+    Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
+      .map(spark.createDataset(_).toDF())
   }
+
+  /** Multi-transaction rows without the txn index (the stream's columns). */
+  private def multiOutRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getLong(1),
+      if (r.isNullAt(2)) -1L else r.getLong(2),
+      if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4), r.getString(5)))
+      .sortBy(t => (t._1, t._2)).toSeq
+
+  /** The ADVICE r4 race tape: the watermark (moved by `w`) passes k's
+    * deadline (1000 + 600) before the batch carrying k's next events. */
+  private val raceFiles = Seq(
+    Seq(ev("k", 1000L, "s"), ev("w", 1700L, "s")),
+    Seq(ev("k", 1750L, "s")),
+    Seq(ev("k", 1760L, "e"), ev("w", 3000L, "s")))
 
   test("streaming: watermark passes deadline in the batch where new key data arrives " +
       "(ADVICE r4 race) — query survives, timeout-fires-first divergence pinned") {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamPipeline
     import spark.implicits._
 
@@ -251,10 +230,7 @@ class ElapsedSpec extends SparkSuite {
     val timeoutSec = 600L
     // w's events must survive the operator's isStart||isEnd filter (the
     // watermark is applied AFTER it), so they are starts; asserts filter to k
-    val stream = tapeStream(Seq(
-      Seq(ev("k", 1000L, "s"), ev("w", 1700L, "s")),
-      Seq(ev("k", 1750L, "s")),
-      Seq(ev("k", 1760L, "e"), ev("w", 3000L, "s"))))
+    val stream = tapeStream(raceFiles.map(tapeDf))
 
     // multi: old txn expires (extra=0 — the 1750 start is NOT an extra start,
     // it opens a NEW transaction: the documented timeout-fires-first
@@ -262,10 +238,8 @@ class ElapsedSpec extends SparkSuite {
     // then the reopened txn matches 1750→1760.
     val outM = StreamPipeline.elapsedMultiStream(stream, "conv_id",
       col("action") === "s", col("action") === "e", timeoutSec)
-    val qm = outM.writeStream.outputMode("append").format("memory")
-      .queryName("elapm_race").trigger(Trigger.AvailableNow()).start()
-    qm.processAllAvailable(); qm.stop() // pre-fix: StreamingQueryException here
-    val gotM = spark.table("elapm_race").collect().map(r => (r.getString(0),
+    // pre-fix: StreamingQueryException here
+    val gotM = drain(outM, "elapm_race").collect().map(r => (r.getString(0),
       r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4), r.getString(5)))
       .filter(_._1 == "k").sortBy(_._2).toSeq
@@ -277,10 +251,7 @@ class ElapsedSpec extends SparkSuite {
     // 1000s txn expired; later events must not re-pair (done-keys stay done)
     val outS = StreamPipeline.elapsedStream(stream, "conv_id",
       col("action") === "s", col("action") === "e", timeoutSec)
-    val qs = outS.writeStream.outputMode("append").format("memory")
-      .queryName("elap_race").trigger(Trigger.AvailableNow()).start()
-    qs.processAllAvailable(); qs.stop()
-    val gotS = spark.table("elap_race").collect().map(r => (r.getString(0),
+    val gotS = drain(outS, "elap_race").collect().map(r => (r.getString(0),
       r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3), r.getString(4)))
       .filter(_._1 == "k").toSeq
@@ -289,7 +260,6 @@ class ElapsedSpec extends SparkSuite {
 
   test("streaming: an end and a start at the same microsecond pair as start-first, " +
       "elapsed 0, as batch does") {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamPipeline
 
     // file 0 holds k's end row BEFORE its start row, both at 1000s; file 1
@@ -300,52 +270,75 @@ class ElapsedSpec extends SparkSuite {
       Seq(ev("w", 3000L, "s")))
     val (isStart, isEnd) = (col("action") === "s", col("action") === "e")
     val expect = Seq(("k", 1000L, 1000L, 0L, "matched"))
-    val batch = rows(Elapsed(files.flatten.toDF("conv_id", "ts_us", "ts_sec", "action", "ts"),
+    val batch = rows(Elapsed(tapeDf(files.flatten),
       "conv_id", isStart, isEnd, 600L)).filter(_._1 == "k")
     assert(batch === expect)
-    val q = StreamPipeline.elapsedStream(tapeStream(files), "conv_id", isStart, isEnd, 600L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("elap_tie").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    assert(rows(spark.table("elap_tie")).filter(_._1 == "k") === expect)
+    val out = StreamPipeline.elapsedStream(tapeStream(files.map(tapeDf)), "conv_id",
+      isStart, isEnd, 600L)
+    assert(rows(drain(out, "elap_tie")).filter(_._1 == "k") === expect)
+  }
+
+  test("streaming: the race tape answers the same whether or not a batch of another key " +
+      "comes between k's files") {
+    import graft.streaming.StreamPipeline
+
+    // with x's file between, Spark calls k for its timeout before k's next
+    // events; without it, k's next events come first — same rows either way
+    val (isStart, isEnd) = (col("action") === "s", col("action") === "e")
+    val splits = Seq(raceFiles, raceFiles.head +: Seq(ev("x", 1701L, "s")) +: raceFiles.tail)
+    val single = splits.zipWithIndex.map { case (files, i) =>
+      rows(drain(StreamPipeline.elapsedStream(tapeStream(files.map(tapeDf)), "conv_id",
+        isStart, isEnd, 600L), s"elap_split$i")).filter(_._1 == "k")
+    }
+    assert(single.distinct === Seq(Seq(("k", 1000L, -1L, -1L, "expired"))))
+    val multi = splits.zipWithIndex.map { case (files, i) =>
+      multiOutRows(drain(StreamPipeline.elapsedMultiStream(tapeStream(files.map(tapeDf)),
+        "conv_id", isStart, isEnd, 600L), s"elapm_split$i")).filter(_._1 == "k")
+    }
+    assert(multi.distinct === Seq(Seq(
+      ("k", 1000L, -1L, -1L, 0L, "expired"),
+      ("k", 1750L, 1760L, 10L, 0L, "matched"))))
+  }
+
+  test("streaming: a row whose start predicate is null and end predicate true is an end, " +
+      "as batch reads it") {
+    import graft.streaming.StreamPipeline
+
+    // k's row at 1010 has a null action, so `action === "s"` is null there;
+    // w's file moves the watermark on
+    val files = Seq(
+      Seq(ev("k", 1000L, "s"), ev("k", 1010L, null)),
+      Seq(ev("w", 3000L, "s")))
+    val (isStart, isEnd) = (col("action") === "s", col("ts_sec") === 1010L)
+    val all = tapeDf(files.flatten)
+
+    val batch = rows(Elapsed(all, "conv_id", isStart, isEnd, 600L)).filter(_._5 == "matched")
+    assert(batch === Seq(("k", 1000L, 1010L, 10L, "matched")))
+    val single = rows(drain(StreamPipeline.elapsedStream(tapeStream(files.map(tapeDf)),
+      "conv_id", isStart, isEnd, 600L), "elap_null"))
+    assert(single.filter(_._5 == "matched") === batch)
+
+    val batchM = multiOutRows(Elapsed.multi(all, "conv_id", isStart, isEnd, 600L).drop("txn"))
+      .filter(_._6 == "matched")
+    assert(batchM === Seq(("k", 1000L, 1010L, 10L, 0L, "matched")))
+    val multi = multiOutRows(drain(StreamPipeline.elapsedMultiStream(
+      tapeStream(files.map(tapeDf)), "conv_id", isStart, isEnd, 600L), "elapm_null"))
+    assert(multi.filter(_._6 == "matched") === batchM)
   }
 
   test("multi streaming twin (FMGWS): matched == batch multi exactly, expired a subset") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamPipeline
-    import spark.implicits._
 
     val fx = Gen.fixture(150)
-    val base = Files.createTempDirectory("graft-elapsedm-in").toString
-    val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
-    val n = sorted.size
-    Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
-      .zipWithIndex.foreach { case (p, i) =>
-        val tmp = Files.createTempDirectory("graft-elapsedm-part").toString
-        spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
-        val src = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-        Files.move(src.toPath, dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        ()
-      }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+    val stream = tapeStream(thirds(fx.turns))
     val streamTimeout = 600L
     val out = StreamPipeline.elapsedMultiStream(Parse(stream, fx.conf), "conv_id",
       col("action") === "login", col("action") === "upload", streamTimeout)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("elapm").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
 
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getLong(1),
       if (r.isNullAt(2)) -1L else r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4), r.getString(5))
-    val got = spark.table("elapm").collect().map(key).toSeq
+    val got = drain(out, "elapm").collect().map(key).toSeq
     // batch twin, txn index dropped (stream emits per close, not numbered)
     val batch = Elapsed.multi(Parse(spark.createDataset(fx.turns).toDF(), fx.conf),
       "conv_id", col("action") === "login", col("action") === "upload", streamTimeout)

@@ -2,33 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.fixtures.Gen
 import graft.streaming.StreamPipeline
-
-object StreamingSpec {
-  /** One parquet file per part in a new dir, with ascending mtimes: a file
-    * stream with `maxFilesPerTrigger` 1 reads them as one micro-batch each,
-    * in this order (FileStreamSource orders new files by mtime). */
-  def timeOrderedFiles(spark: SparkSession, parts: Seq[Seq[graft.model.Turn]]): String = {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-parts").toString
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val tmp = Files.createTempDirectory("graft-stream-part").toString
-      spark.createDataset(p).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
-    base
-  }
-}
 
 /** Streaming vs batch: the composed stream (runFull) equals the batch
   * pipeline across micro-batch boundaries, and the sessionize twin closes
@@ -48,13 +26,6 @@ class StreamingSpec extends SparkSuite {
       .schema(spark.read.parquet(inDir).schema)
       .parquet(inDir)
 
-  private def runToMemory(df: DataFrame, name: String): DataFrame = {
-    val q = df.writeStream.outputMode(OutputMode.Append).format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    spark.table(name)
-  }
-
   test("composed end-to-end stream (ONE readStream → C1→C9 per micro-batch with state) == batch pipeline EXACTLY") {
     // three time-ordered files → three ascending micro-batches (the
     // Incremental contract)
@@ -62,11 +33,8 @@ class StreamingSpec extends SparkSuite {
     val n = sorted.size
     val parts = Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3),
       sorted.slice(2 * n / 3, n))
-    val base = StreamingSpec.timeOrderedFiles(spark, parts)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(base)
+    val base = SparkSuite.timeOrderedFiles(parts.map(spark.createDataset(_).toDF()))
+    val stream = SparkSuite.fileStream(spark, base)
     val stateDir = Files.createTempDirectory("graft-e2e-state").toString
     val outDir = Files.createTempDirectory("graft-e2e-out").toString
     val ckpt = Files.createTempDirectory("graft-e2e-ckpt").toString
@@ -113,9 +81,7 @@ class StreamingSpec extends SparkSuite {
 
     // restart idempotency: replaying the stream from a fresh checkpoint must
     // skip every manifested batch (manifest = commit marker), changing nothing
-    val stream2 = spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
+    val stream2 = SparkSuite.fileStream(spark, base)
     val ran2 = StreamPipeline.runFull(spark, stream2, tb, fx.conf,
       stateDir, outDir, Files.createTempDirectory("graft-e2e-ckpt2").toString)
     assert(ran2.isEmpty, s"replayed batches must be skipped, ran $ran2")
@@ -132,7 +98,7 @@ class StreamingSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2)).toSeq
 
-    val got = key(runToMemory(
+    val got = key(drain(
       StreamPipeline.sessionizeStream(streamTurns, "1 hour",
         lateness = "0 seconds"), "sess"))
 

@@ -20,38 +20,15 @@ class TaskAggregateSpec extends SparkSuite {
         s"hash=${Gen.md5("f")} uri=/api/v1/r0", "",
       new java.sql.Timestamp(sec * 1000L))
 
-  /** A file stream over `parts`, one parquet file each, replayed one file
-    * per micro-batch in list order. */
-  private def fileStream(parts: Seq[org.apache.spark.sql.DataFrame]) = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft-taskagg-in").toString
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val tmp = Files.createTempDirectory("graft-taskagg-part").toString
-      p.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(base, f"part-$i%03d.parquet")
-      Files.move(src.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      ()
-    }
-    spark.readStream
-      .schema(spark.read.parquet(base).schema)
-      .option("maxFilesPerTrigger", "1").parquet(base)
-  }
-
   /** Drain a taskAggStream output (AvailableNow) into rows, end_sec -1 if null. */
-  private def streamRows(out: org.apache.spark.sql.Dataset[_], name: String) = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = out.toDF().writeStream.outputMode("append").format("memory")
-      .queryName(name).trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    spark.table(name).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5), r.getLong(6),
-        r.getString(7))).toSeq
-  }
+  private def streamRows(out: org.apache.spark.sql.Dataset[_], name: String) =
+    taskRows(drain(out, name))
+
+  /** Emitted task rows as tuples, end_sec -1 if null. */
+  private def taskRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5), r.getLong(6),
+      r.getString(7))).toSeq
 
   test("per-task accumulation matches the naive oracle; pending tasks emit nothing") {
     val fx = Gen.fixture(160)
@@ -129,7 +106,7 @@ class TaskAggregateSpec extends SparkSuite {
     // advance the watermark so mid-stream inactivity timeouts actually fire
     val sorted = fx.turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
     val n = sorted.size
-    val stream = fileStream(
+    val stream = tapeStream(
       Seq(sorted.slice(0, n / 3), sorted.slice(n / 3, 2 * n / 3), sorted.slice(2 * n / 3, n))
         .map(spark.createDataset(_).toDF()))
     val streamTimeout = 600L // fixture spans ~100 min → quiet gaps exist
@@ -170,19 +147,42 @@ class TaskAggregateSpec extends SparkSuite {
     }
   }
 
-  test("streaming twin with a zero timeout: a re-arm below the watermark is clamped") {
-    // key a at 1700000100.300 s, then at .500 s in the next micro-batch: the
-    // first batch moves the watermark to …100300 ms, past a's unclamped
-    // re-arm point in the second (last second × 1000 + 0 = …100000 ms)
-    val stream = fileStream(Seq(300L, 500L).map { ms =>
+  test("streaming twin with a zero timeout: one second's events stay pending") {
+    // key a at 1700000100.300 s, then at .500 s in the next micro-batch: both
+    // in the same second, so by the batch rule (last + 0 < hwm second) the
+    // task never goes quiet; its deadline (…101000 ms) stays above the
+    // watermark (…100500 ms after the second batch)
+    val parts = Seq(300L, 500L).map { ms =>
       val tsMs = 1700000100000L + ms
       Seq(("a", new java.sql.Timestamp(tsMs), tsMs * 1000L, tsMs / 1000L, 200, "read"))
         .toDF("conv_id", "ts", "ts_us", "ts_sec", "status", "action")
-    })
+    }
+    val isEnd = col("action") === "upload"
     val got = streamRows(graft.streaming.StreamPipeline.taskAggStream(
-      stream, "conv_id", col("action") === "upload", 0L), "taskagg_zero")
-    // the query survives; both events accumulate and the task times out in
-    // the no-data batch after the second
-    assert(got === Seq(("a", 2L, 1700000100L, 1700000100L, -1L, 400L, 1L, "timeout")))
+      tapeStream(parts), "conv_id", isEnd, 0L), "taskagg_zero")
+    // the query survives, and the task stays pending as finish(state(…)) keeps it
+    assert(got === taskRows(TaskAggregate.finish(
+      TaskAggregate.state(parts.reduce(_ union _), "conv_id", isEnd), "conv_id", 0L)))
+    assert(got.isEmpty)
+  }
+
+  test("streaming twin: a timed-out task absorbs nothing later, however the micro-batches split") {
+    // a's task (timeout 10 s) is past its deadline once w moves the watermark
+    // to …200; its next event at …205 comes either in the batch right after
+    // (two files) or after a batch holding only an unrelated key x (three
+    // files, so Spark calls a for its timeout first). Both splits must time
+    // the task out with its one event, as the batch rule judges it at …200.
+    def file(evs: (String, Long)*) = evs.map { case (k, sec) =>
+      (k, new java.sql.Timestamp(sec * 1000L), sec * 1000000L, sec, 200, "read")
+    }.toDF("conv_id", "ts", "ts_us", "ts_sec", "status", "action")
+    val first = file(("a", 1700000100L), ("w", 1700000200L))
+    val late = file(("a", 1700000205L))
+    def run(parts: Seq[org.apache.spark.sql.DataFrame], name: String) =
+      streamRows(graft.streaming.StreamPipeline.taskAggStream(tapeStream(parts),
+        "conv_id", col("action") === "upload", 10L), name).sortBy(_._1)
+    val two = run(Seq(first, late), "taskagg_split2")
+    val three = run(Seq(first, file(("x", 1700000201L)), late), "taskagg_split3")
+    assert(two === three)
+    assert(two === Seq(("a", 1L, 1700000100L, 1700000100L, -1L, 200L, 1L, "timeout")))
   }
 }
